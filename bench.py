@@ -48,6 +48,7 @@ def full_eval(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from linkmerce_spark import memo
     from linkmerce_spark.queries import QUERIES
     from linkmerce_spark.session import get_spark
 
@@ -63,8 +64,6 @@ def main() -> None:
     # r7 window rotation showed front-of-dict queries paying ~1-2 s of
     # global JVM warm-up that mid-catalog positions used to absorb.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    from linkmerce_spark.queries import clear_query_cache as _cqc
-
     for warm in (
         "pricing_summary",
         "star_join_revenue",
@@ -76,28 +75,27 @@ def main() -> None:
     ):
         full_eval(QUERIES[warm](spark, sf_dir))
     spark.catalog.clearCache()
-    _cqc(spark)
+    memo.clear(spark)
 
     # Best-of-2 per query: one measurement is hostage to GC pauses and
     # codegen-compile timing; the min of two runs is the standard
     # steady-state estimator. Before EACH timed run both the Spark
-    # storage cache AND the catalog's plan memo are cleared — builders
+    # storage cache AND the session's derived memos (memo.clear: catalog
+    # plans, training results, published marts) are cleared — builders
     # that materialize at build time (localCheckpoint label rounds, IVF
-    # training collects, bloom bitsets) must redo that work per run,
-    # otherwise the min-of-2 would time cached intermediates while the
-    # DuckDB yardstick re-executes from scratch each pass. Each timed
-    # run therefore does ALL its own work (plan build + every job);
-    # only the JVM's compiled code stays warm (the warm-cluster
-    # regime). The plan memo itself remains a real library feature for
-    # repeated API use — the benchmark just refuses to exploit it.
-    from linkmerce_spark.queries import clear_query_cache
-
+    # training collects, bloom bitsets, upstream masters) must redo that
+    # work per run, otherwise the min-of-2 would time cached
+    # intermediates while the DuckDB yardstick re-executes from scratch
+    # each pass. Each timed run therefore does ALL its own work (plan
+    # build + every job); only the JVM's compiled code stays warm (the
+    # warm-cluster regime). The memos themselves remain a real library
+    # feature for repeated API use — the benchmark refuses to exploit it.
     timings: dict[str, float] = {}
     for name, fn in QUERIES.items():
         best = float("inf")
         for _ in range(2):
             spark.catalog.clearCache()
-            clear_query_cache(spark)
+            memo.clear(spark)
             t0 = time.perf_counter()
             full_eval(fn(spark, sf_dir))
             best = min(best, time.perf_counter() - t0)

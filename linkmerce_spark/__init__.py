@@ -10,6 +10,7 @@ Layout
 ------
 - ``session``    : SparkSession factory with scale-tuned defaults
 - ``frames``     : row-batch <-> DataFrame bridge + table registry
+- ``memo``       : per-session memo registry (one lifetime rule)
 - ``sqlmodels``  : ``-- Name: key`` SQL registry (models.sql semantics)
 - ``operators/`` : relational + pipeline operators (merge, dedup,
                    allocation, range join, top-k, minhash, similarity...)

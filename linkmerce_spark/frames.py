@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from linkmerce_spark import memo
+
 __all__ = [
     "from_rows",
     "rows_to_df",
@@ -140,21 +142,6 @@ class TableRegistry:
         return self._frames.keys()
 
 
-# Per-session memo of base-table DataFrames: a fresh
-# ``spark.read.parquet`` costs ~100ms of driver work (footer read +
-# schema resolution) EVERY call, and the catalog touches the same ten
-# tables thousands of times per bench/gate run. A DataFrame is an
-# immutable logical plan — reusing it is exactly what a registered
-# warehouse table does; scans, pushdown, and pruning are unchanged.
-# WeakKeyDictionary: entries die with their session (tests stop/start
-# sessions freely and must never see a stale one).
-import weakref
-
-_STAR_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def load_star(
     spark: SparkSession,
     sf_dir: str,
@@ -165,95 +152,55 @@ def load_star(
 
     Plain ``spark.read.parquet`` — scans stay columnar/vectorized and
     Catalyst pushes filters and prunes columns into the parquet reader.
-    Reads are memoized per (session, sf_dir, table); the test parquet
-    is immutable, and a cached DataFrame is just a reusable plan.
+    Reads are source-tier memos (``memo.source``): a fresh read costs
+    ~100 ms of driver footer and schema work, the catalog touches the
+    same ten tables thousands of times a run, and a DataFrame over
+    immutable parquet is a reusable plan, as a warehouse table is.
     """
-    try:
-        cache = _STAR_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable (mocks)
-        cache = {}
     out: dict[str, DataFrame] = {}
     base = sf_dir.rstrip("/")
+
+    def read(name: str) -> DataFrame:
+        try:
+            # Runtime-settable SQL conf; required to read pandas-
+            # written TIMESTAMP(NANOS) parquet (events.ts) on any
+            # caller's session.
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        except Exception:
+            pass
+        df = spark.read.parquet(f"{base}/{name}.parquet")
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            # TIMESTAMP(NANOS) parquet read as long via nanosAsLong:
+            # truncate to micros (identical to DuckDB's nanos
+            # handling).
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return df
+
     for name in tables:
-        key = (base, name)
-        df = cache.get(key)
-        if df is None:
-            try:
-                # Runtime-settable SQL conf; required to read pandas-
-                # written TIMESTAMP(NANOS) parquet (events.ts) on any
-                # caller's session.
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            except Exception:
-                pass
-            df = spark.read.parquet(f"{base}/{name}.parquet")
-            if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-                # TIMESTAMP(NANOS) parquet read as long via nanosAsLong:
-                # truncate to micros (identical to DuckDB's nanos
-                # handling).
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-            cache[key] = df
+        df = memo.source(spark, ("parquet", base, name), lambda: read(name))
         if register_views:
             df.createOrReplaceTempView(name)
         out[name] = df
     return out
 
 
-# Per-session memo of MATERIALIZED derived frames — the Spark
-# equivalent of a dbt ``ref()``: in the reference's dag every mart is
-# materialized once per run and downstream models read the built
-# table (e.g. sabangnet__option_master selects FROM the materialized
-# sabangnet__product_master, dbt_postgres/models/marts/product/), they
-# never re-run the upstream SQL. ``shared_frame`` memoizes the built
-# DataFrame per (session, key) behind an eager localCheckpoint, so a
-# consumer pays a block read instead of the upstream chain. Policy:
-# only CONSUMERS of a mart go through this — the catalog query that
-# verifies mart X still builds X fresh, so its bench time measures
-# real compute. On a cluster this is a cache of executor-local blocks
-# (or a warehouse table), identical semantics.
-_SHARED_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def shared_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Memoize + materialize ``build()`` per (session, ``key``).
+    """The materialized build of mart ``key``: the Spark equivalent of a
+    dbt ``ref()``. In the reference's DAG every mart is materialized
+    once per run and downstream models read the built table (e.g.
+    sabangnet__option_master selects FROM the materialized
+    sabangnet__product_master, dbt_postgres/models/marts/product/);
+    they never re-run the upstream SQL. The first call runs ``build()``
+    and publishes it (``memo.publish``: an eager localCheckpoint, so
+    lineage is cut once and concurrent broadcast jobs in consumers
+    cannot race a lazy materialization); later calls read the build.
 
     ``key`` must carry every input the build depends on (at minimum
-    the mart name and sf_dir). The frame is localCheckpoint-ed eagerly:
-    lineage is cut once, and concurrent broadcast jobs in consumers
-    cannot race a lazy materialization.
+    the mart name and sf_dir). Only CONSUMERS of a mart go through
+    this: the catalog query that verifies mart X still builds X fresh
+    and publishes it, so its bench time measures real compute.
     """
-    try:
-        cache = _SHARED_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable (mocks)
-        return build()
-    df = cache.get(key)
-    if df is None:
-        df = build()
-        if cache.get(key) is not None:
-            # build() self-published (a verifier query ran and called
-            # publish_frame) — use its materialization.
-            df = cache[key]
-        else:
-            df = df.localCheckpoint(eager=True)
-            cache[key] = df
-    return df
-
-
-def publish_frame(spark: SparkSession, key: tuple, df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and publish it as the current build of mart
-    ``key`` — the dbt "run model X" step. The publishing query itself
-    always re-runs its own SQL (its bench time measures real compute);
-    consumers via ``shared_frame`` read this build instead of
-    re-running the upstream chain."""
-    df = df.localCheckpoint(eager=True)
-    try:
-        _SHARED_CACHE.setdefault(spark, {})[key] = df
-    except TypeError:  # session not weak-referenceable (mocks)
-        pass
-    return df
+    return memo.derived(spark, key, lambda: memo.publish(spark, key, build()))
 
 
 def select_paths(df: DataFrame, schema: Mapping[str, str], extends: Mapping[str, Any] | None = None) -> DataFrame:
@@ -274,11 +221,6 @@ def select_paths(df: DataFrame, schema: Mapping[str, str], extends: Mapping[str,
     return df.select(*cols)
 
 
-_VALUES_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def values_df(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFrame:
     """Small literal batch as a JVM-side LocalRelation (SQL ``VALUES``).
 
@@ -295,28 +237,27 @@ def values_df(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFr
     column is CAST to its declared type, so NULLs and mixed literals
     type correctly.
     """
-    from pyspark.sql.types import StructType
-
     rows = [tuple(r) for r in rows]
     # Literal dims are constant plans: the same VALUES frame is rebuilt
     # for every query that joins it (the catalog pays StructType.fromDDL
     # + a spark.sql parse per call, ~15-40 ms each, hundreds of times a
-    # run). Memoize the immutable DataFrame per (session, schema, rows)
-    # — same rationale and lifetime rules as _STAR_CACHE above.
+    # run), so each is a source-tier memo, as ``load_star`` reads are.
     # The key carries each value's Python type: 1 == 1.0 == True are
     # hash-equal but render as distinct SQL literals ('1' / '1.0' /
     # 'TRUE'), so a value-only key would return the wrong cached frame.
+    key = (
+        "values",
+        schema,
+        tuple(tuple((type(v).__name__, v) for v in r) for r in rows),
+    )
     try:
-        cache_key = (
-            schema,
-            tuple(tuple((type(v).__name__, v) for v in r) for r in rows),
-        )
-        hash(cache_key)
-        cache = _VALUES_CACHE.setdefault(spark, {})
-    except TypeError:  # unhashable literal or mock session
-        cache_key = cache = None
-    if cache is not None and cache_key in cache:
-        return cache[cache_key]
+        hash(key)
+    except TypeError:  # an unhashable literal: build uncached
+        return _values_frame(spark, rows, schema)
+    return memo.source(spark, key, lambda: _values_frame(spark, rows, schema))
+
+
+def _values_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     st = StructType.fromDDL(schema)
     if not rows:
         # Empty LocalRelation, not a 0-row parallelized RDD (the latter
@@ -325,10 +266,7 @@ def values_df(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFr
             f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
             for f in st.fields
         )
-        df = spark.sql(f"SELECT {nulls} WHERE FALSE")
-        if cache is not None:
-            cache[cache_key] = df
-        return df
+        return spark.sql(f"SELECT {nulls} WHERE FALSE")
 
     def lit(v: Any) -> str:
         if v is None:
@@ -357,7 +295,4 @@ def values_df(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFr
         for f in st.fields
     )
     tuples = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
-    df = spark.sql(f"SELECT {casts} FROM VALUES {tuples} AS t({names})")
-    if cache is not None:
-        cache[cache_key] = df
-    return df
+    return spark.sql(f"SELECT {casts} FROM VALUES {tuples} AS t({names})")

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from linkmerce_spark import memo
+
 __all__ = [
     "bpe_pair_counts",
     "bpe_train_full",
@@ -140,14 +142,6 @@ def _apply_merge_cols(
             F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(lab)),
         ).otherwise(F.concat(acc, F.array(s))),
     )
-
-
-# One training per (session, input frame, params): `doc_bpe_train` and
-# `doc_bpe_tokens` both consume the same loop; the memo (same lifetime
-# discipline as similarity._TRAIN_MEMO — identity-checked, bounded,
-# cleared by queries.clear_query_cache) makes the second a lookup.
-_TRAIN_MEMO: dict[tuple, tuple] = {}
-_TRAIN_MEMO_MAX = 32
 
 
 _VOCAB_SCHEMA = StructType(
@@ -256,12 +250,22 @@ def bpe_train_full(
     """
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    spark = df.sparkSession
-    memo_key = (id(spark), id(df), text_col, n_merges, local_loop_threshold)
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
+    # One training per (session, input frame, params): `doc_bpe_train`
+    # and `doc_bpe_tokens` both consume the same loop, so a derived-tier
+    # memo makes the second a lookup.
+    return memo.derived(
+        df.sparkSession,
+        ("bpe_train", df, text_col, n_merges, local_loop_threshold),
+        lambda: _bpe_train(df, text_col, n_merges, local_loop_threshold),
+    )
+
+
+def _bpe_train(
+    df: DataFrame, text_col: str, n_merges: int, local_loop_threshold: int
+) -> tuple[DataFrame, DataFrame]:
     from linkmerce_spark.frames import widen_scan
+
+    spark = df.sparkSession
 
     toks = widen_scan(df).select(
         F.explode(F.split(F.col(text_col), " ")).alias("tok")
@@ -283,11 +287,7 @@ def bpe_train_full(
         # (measured ~0.18 s/round locally for a 31-word vocabulary).
         # Above the threshold (a 100 TB corpus vocabulary is ~1e8
         # distinct words) the distributed loop below takes over.
-        out = _train_local(spark, vocab, n_merges)
-        if len(_TRAIN_MEMO) >= _TRAIN_MEMO_MAX:
-            _TRAIN_MEMO.pop(next(iter(_TRAIN_MEMO)))
-        _TRAIN_MEMO[memo_key] = (df, out)
-        return out
+        return _train_local(spark, vocab, n_merges)
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # AQE-managed runtimes report 'auto' here; fall back to a sane
@@ -355,11 +355,7 @@ def bpe_train_full(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    out = (merges, vocab)
-    if len(_TRAIN_MEMO) >= _TRAIN_MEMO_MAX:
-        _TRAIN_MEMO.pop(next(iter(_TRAIN_MEMO)))
-    _TRAIN_MEMO[memo_key] = (df, out)
-    return out
+    return merges, vocab
 
 
 def bpe_train(df: DataFrame, text_col: str, n_merges: int) -> DataFrame:

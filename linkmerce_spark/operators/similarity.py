@@ -27,6 +27,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from linkmerce_spark import memo
+
 __all__ = [
     "quantized_cosine",
     "cell_pair_cosines",
@@ -63,12 +65,6 @@ def ivf_k_for(n_rows: int, target_cell_size: int = IVF_CELL_TARGET, k_min: int =
     if n_rows < 0 or target_cell_size <= 0 or k_min <= 0:
         raise ValueError("n_rows >= 0, target_cell_size > 0, k_min > 0 required")
     return max(k_min, -(-n_rows // target_cell_size))
-
-# (df-ref, centroids) per (id(df), params) — see ivf_train. Bounded
-# FIFO (strong df refs pin sessions; queries.clear_query_cache also
-# clears this).
-_TRAIN_MEMO: dict[tuple, tuple] = {}
-_TRAIN_MEMO_MAX = 32
 
 
 def _make_kernel(quant: int):
@@ -385,15 +381,17 @@ def ivf_train(
     also re-derive them from scratch, which is what oracles.py does).
     """
     # Training is deterministic in (data, params), and base-table
-    # DataFrames are memoized per (session, path) — so one training per
-    # input frame serves every index consumer in the session (three
-    # catalog queries share one quantizer). The strong df ref in the
-    # value pins id(df) against reuse.
-    memo_key = (id(df), id_col, vec_col, dim, k, quant, oversample)
-    hit = _TRAIN_MEMO.get(memo_key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
+    # DataFrames are session memos — so one training per input frame
+    # serves every index consumer in the session (three catalog queries
+    # share one quantizer): a derived-tier memo keyed on the frame.
+    return memo.derived(
+        df.sparkSession,
+        ("ivf_train", df, id_col, vec_col, dim, k, quant, oversample),
+        lambda: _ivf_train(df, id_col, vec_col, dim, k, quant, oversample),
+    )
 
+
+def _ivf_train(df, id_col, vec_col, dim, k, quant, oversample) -> list[list[int]]:
     m = k * oversample
     q = F.transform(
         F.col(vec_col),
@@ -446,11 +444,7 @@ def ivf_train(
         # Python // is floor division — identical to the SQL
         # (s - ((s % c) + c) % c) / c form for negative sums.
         by_cell.setdefault(r["cell"], {})[r["pos"]] = r["s"] // r["c"]
-    out = [
+    return [
         [by_cell[j + 1][i] for i in range(dim)] if (j + 1) in by_cell else seeds[j]
         for j in range(k)
     ]
-    if len(_TRAIN_MEMO) >= _TRAIN_MEMO_MAX:
-        _TRAIN_MEMO.pop(next(iter(_TRAIN_MEMO)))
-    _TRAIN_MEMO[memo_key] = (df, out)
-    return out

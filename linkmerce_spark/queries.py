@@ -25,10 +25,13 @@ driver and ``bench.py`` both consume this table.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from linkmerce_spark import memo
 from linkmerce_spark.frames import load_star, select_paths, values_df
 from linkmerce_spark.operators.dedup import dedupe_keep_first, exact_dedup, insert_ignore
 from linkmerce_spark.operators.merge import merge_frames
@@ -5259,10 +5262,9 @@ def q_core_product_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     (product_id) by item_seq ASC NULLS LAST over the raw item catalog
     (dbt core__product_master.sql:10-31). Re-runs the mart SQL and
     PUBLISHES the build for downstream ``ref()`` consumers."""
-    from linkmerce_spark.frames import publish_frame
     from linkmerce_spark.marts.core_masters import product_master
 
-    return publish_frame(
+    return memo.publish(
         spark,
         ("core_product_master", sf_dir.rstrip("/")),
         product_master(_core_item_feed(spark, sf_dir)),
@@ -5274,10 +5276,9 @@ def q_core_brand_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, global brand_seq (team DESC NULLS LAST), one row per product
     AND per brand (dbt core__brand_master.sql:10-34). Re-runs the mart
     SQL and PUBLISHES the build for downstream ``ref()`` consumers."""
-    from linkmerce_spark.frames import publish_frame
     from linkmerce_spark.marts.core_masters import brand_master
 
-    return publish_frame(
+    return memo.publish(
         spark,
         ("core_brand_master", sf_dir.rstrip("/")),
         brand_master(_core_item_feed(spark, sf_dir)),
@@ -6004,11 +6005,10 @@ def q_sabangnet_product_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-108). Re-runs the mart SQL and PUBLISHES the build: the
     reference dag materializes this model once and
     sabangnet__option_master selects FROM the built table."""
-    from linkmerce_spark.frames import publish_frame
     from linkmerce_spark.marts.product import sabangnet_product_master
 
     item = _core_item_feed(spark, sf_dir)
-    return publish_frame(
+    return memo.publish(
         spark,
         ("sabangnet_product_master", sf_dir.rstrip("/")),
         sabangnet_product_master(
@@ -6025,10 +6025,10 @@ def _sbn_product_master_built(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATERIALIZED sabangnet product master: in the reference dag
     sabangnet__option_master selects FROM the built
     sabangnet__product_master (a dbt ``ref()``), it never re-runs the
-    explode/window chain (dbt sabangnet__option_master.sql:10-100)."""
-    from linkmerce_spark.frames import shared_frame
-
-    return shared_frame(
+    explode/window chain (dbt sabangnet__option_master.sql:10-100).
+    ``q_sabangnet_product_master`` publishes its own build, so this only
+    memoizes the call (``shared_frame`` would checkpoint it twice)."""
+    return memo.derived(
         spark,
         ("sabangnet_product_master", sf_dir.rstrip("/")),
         lambda: q_sabangnet_product_master(spark, sf_dir),
@@ -7632,62 +7632,18 @@ QUERIES = {
 
 
 # -- catalog-level plan memoization ----------------------------------------
-# A catalog entry is a pure function of (session, sf_dir): the builders
-# read immutable parquet through the memoized star reads and compose a
-# logical plan (a few run deterministic index-build jobs — IVF training,
-# bloom bitsets, dup-cluster rounds). A DataFrame is a reusable plan, so
-# the catalog behaves like a view registry: one build per session, every
-# re-invocation (repeated API use) reuses the analyzed plan and pays
-# only execution. This is the "cache analyzed plans across catalog
-# runs" fix for the measured ~0.2-1 s per-query py4j plan-construction
-# overhead that dominated dim-sized entries; execution itself re-runs
-# in full on every action. NOTE: bench.py deliberately calls
-# clear_query_cache() between its timed passes — builders that
-# materialize (localCheckpoint, training collects) do real work at
-# build time, and a timed pass reusing that would not be comparable to
-# the DuckDB yardstick re-executing from scratch.
-#
-# Lifetime: cached frames strongly reference their session (a weak-key
-# map would never evict — the value->key reference defeats it), so the
-# cache is an explicit small LRU over sessions: at most
-# _QUERY_CACHE_MAX_SESSIONS sessions retained, oldest evicted whole.
-
-import functools as _functools
-
-_QUERY_CACHE_MAX_SESSIONS = 4
-_QUERY_CACHE: "dict[int, tuple[SparkSession, dict]]" = {}
-
-
-def clear_query_cache(spark: SparkSession | None = None) -> None:
-    """Drop cached catalog plans — for one session, or all. Also clears
-    the IVF-training memo (same build-time-compute lifetime)."""
-    from linkmerce_spark.operators.bpe import _TRAIN_MEMO as _BPE_MEMO
-    from linkmerce_spark.operators.similarity import _TRAIN_MEMO
-
-    if spark is None:
-        _QUERY_CACHE.clear()
-        _TRAIN_MEMO.clear()
-        _BPE_MEMO.clear()
-    else:
-        _QUERY_CACHE.pop(id(spark), None)
-        _TRAIN_MEMO.clear()
-        _BPE_MEMO.clear()
+# A catalog entry is a pure function of (session, sf_dir), so each is a
+# derived-tier memo: one build per session, and every re-invocation
+# reuses the analyzed plan and pays only execution (a measured ~0.2-1 s
+# of py4j plan construction per dim-sized entry). Derived, not source:
+# a few builders run jobs at build time (IVF training, bloom bitsets,
+# dup-cluster rounds), so a timed pass clears them (memo.clear).
 
 
 def _memoize_query(name: str, fn):
-    @_functools.wraps(fn)
+    @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        entry = _QUERY_CACHE.get(id(spark))
-        if entry is None or entry[0] is not spark:
-            if len(_QUERY_CACHE) >= _QUERY_CACHE_MAX_SESSIONS:
-                _QUERY_CACHE.pop(next(iter(_QUERY_CACHE)))
-            entry = (spark, {})
-            _QUERY_CACHE[id(spark)] = entry
-        per_session = entry[1]
-        key = (name, sf_dir)
-        if key not in per_session:
-            per_session[key] = fn(spark, sf_dir)
-        return per_session[key]
+        return memo.derived(spark, ("query", name, sf_dir), lambda: fn(spark, sf_dir))
 
     return wrapper
 

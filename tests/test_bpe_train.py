@@ -51,9 +51,10 @@ def _py_bpe_train(words: dict[str, int], n_merges: int):
 
 
 def _spark_train(spark, corpus: list[str], n_merges: int, threshold: int = 65536):
-    from linkmerce_spark.operators.bpe import _TRAIN_MEMO, bpe_train_full
+    from linkmerce_spark import memo
+    from linkmerce_spark.operators.bpe import bpe_train_full
 
-    _TRAIN_MEMO.clear()
+    memo.clear(spark)
     df = spark.createDataFrame([(t,) for t in corpus], "text string")
     merges, vocab = bpe_train_full(
         df, "text", n_merges, local_loop_threshold=threshold
@@ -109,20 +110,37 @@ def test_bpe_merged_symbol_cascades(spark):
 
 
 def test_bpe_training_memo_reuses_frames(spark):
-    from linkmerce_spark.operators.bpe import _TRAIN_MEMO, bpe_train_full
+    from linkmerce_spark import memo
+    from linkmerce_spark.operators.bpe import bpe_train_full
+    from linkmerce_spark.operators.similarity import ivf_train
 
-    _TRAIN_MEMO.clear()
+    memo.clear(spark)
     df = spark.createDataFrame([("x y xy",)], "text string")
     first = bpe_train_full(df, "text", 2)
     second = bpe_train_full(df, "text", 2)
     assert first[0] is second[0] and first[1] is second[1]
     assert bpe_train_full(df, "text", 3)[0] is not first[0]
+    memo.clear(spark)
+    assert bpe_train_full(df, "text", 2)[0] is not first[0]
+
+    # Second trainer, same derived-tier rule: reused within the session,
+    # retrained after memo.clear.
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i // 3)]) for i in range(8)],
+        "vec_id int, embedding array<double>",
+    )
+    cents = ivf_train(vecs, dim=2, k=2)
+    assert ivf_train(vecs, dim=2, k=2) is cents
+    memo.clear(spark)
+    again = ivf_train(vecs, dim=2, k=2)
+    assert again is not cents and again == cents
 
 
 def test_bpe_conf_restored_after_training(spark):
-    from linkmerce_spark.operators.bpe import _TRAIN_MEMO, bpe_train_full
+    from linkmerce_spark import memo
+    from linkmerce_spark.operators.bpe import bpe_train_full
 
-    _TRAIN_MEMO.clear()
+    memo.clear(spark)
     before = (
         spark.conf.get("spark.sql.shuffle.partitions"),
         spark.conf.get("spark.sql.adaptive.enabled"),
@@ -137,9 +155,10 @@ def test_bpe_conf_restored_after_training(spark):
 
 
 def test_bpe_token_counts_weighted_by_word_frequency(spark):
-    from linkmerce_spark.operators.bpe import _TRAIN_MEMO, bpe_token_counts
+    from linkmerce_spark import memo
+    from linkmerce_spark.operators.bpe import bpe_token_counts
 
-    _TRAIN_MEMO.clear()
+    memo.clear(spark)
     df = spark.createDataFrame([("ab ab ba",)], "text string")
     rows = [tuple(r) for r in bpe_token_counts(df, "text", 1, top_n=10).collect()]
     # merge (a,b) wins 2-1 over (b,a): 'ab'->[ab] twice, 'ba'->[b,a].

@@ -40,7 +40,8 @@ CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
 from bench import full_eval
-from linkmerce_spark.queries import QUERIES, clear_query_cache
+from linkmerce_spark import memo
+from linkmerce_spark.queries import QUERIES
 from linkmerce_spark.session import get_spark
 
 sf_dir = %(sf_dir)r
@@ -51,7 +52,7 @@ for name in names:
     ts = []
     for _ in range(2):
         spark.catalog.clearCache()
-        clear_query_cache(spark)
+        memo.clear(spark)
         t0 = time.perf_counter()
         full_eval(QUERIES[name](spark, sf_dir))
         ts.append(round(time.perf_counter() - t0, 3))

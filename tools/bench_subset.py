@@ -30,21 +30,22 @@ def main() -> None:
             names.append(a)
     if not names:
         sys.exit("usage: bench_subset.py [SF_DIR] NAME [NAME...]")
-    from linkmerce_spark.queries import QUERIES, clear_query_cache
+    from linkmerce_spark import memo
+    from linkmerce_spark.queries import QUERIES
     from linkmerce_spark.session import get_spark
 
     spark = get_spark("bench-subset")
     # warm with the first target itself (JIT + codegen framework)
     full_eval(QUERIES[names[0]](spark, sf_dir))
     spark.catalog.clearCache()
-    clear_query_cache(spark)
+    memo.clear(spark)
 
     spark_t: dict[str, float] = {}
     for name in names:
         best = float("inf")
         for _ in range(2):
             spark.catalog.clearCache()
-            clear_query_cache(spark)
+            memo.clear(spark)
             t0 = time.perf_counter()
             full_eval(QUERIES[name](spark, sf_dir))
             best = min(best, time.perf_counter() - t0)

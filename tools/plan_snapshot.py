@@ -63,13 +63,14 @@ def snapshot_one(df) -> dict:
 
 
 def build_snapshot(spark, names=None) -> dict:
-    from linkmerce_spark.queries import QUERIES, clear_query_cache
+    from linkmerce_spark import memo
+    from linkmerce_spark.queries import QUERIES
 
     out: dict[str, dict] = {}
     for name, fn in QUERIES.items():
         if names and name not in names:
             continue
-        clear_query_cache(spark)
+        memo.clear(spark)
         spark.catalog.clearCache()
         out[name] = snapshot_one(fn(spark, SF_DIR))
     return out

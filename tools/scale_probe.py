@@ -90,6 +90,7 @@ SF10_DIR = os.path.join(_REPO, "testdata_sf10")
 
 
 def main() -> None:
+    from linkmerce_spark import memo
     from linkmerce_spark.session import get_spark
     import linkmerce_spark.queries as q
     from bench import full_eval
@@ -112,7 +113,7 @@ def main() -> None:
         sf_dir = dirs[sf]
         for name in names:
             t0 = time.perf_counter()
-            df = q.QUERIES[name](spark, sf_dir)  # first build per (session, sf)
+            df = q.QUERIES[name](spark, sf_dir)  # fresh build: memos cleared below
             full_eval(df)
             cold.setdefault(name, {})[sf] = time.perf_counter() - t0
             reruns = []
@@ -122,6 +123,10 @@ def main() -> None:
                 reruns.append(time.perf_counter() - t0)
             best = sorted(reruns)[1]  # median-of-3
             warm.setdefault(name, {})[sf] = best
+            # Release the query's plan, training results and published
+            # checkpoints: one session probes every (sf, query) pair,
+            # and memo-owned checkpoints would otherwise pile up in it.
+            memo.clear(spark)
             print(
                 f"{sf:8s} {name:32s} cold={cold[name][sf]:7.3f}s warm={best:7.3f}s",
                 flush=True,
