@@ -1,13 +1,2 @@
-from linkmerce_spark.plans.explain import (  # noqa: F401
-    physical_plan,
-    count_shuffles,
-    has_broadcast_join,
-    pushed_filters,
-)
-
-__all__ = [
-    "physical_plan",
-    "count_shuffles",
-    "has_broadcast_join",
-    "pushed_filters",
-]
+from linkmerce_spark.plans.explain import *  # noqa: F401,F403
+from linkmerce_spark.plans.explain import __all__  # noqa: F401

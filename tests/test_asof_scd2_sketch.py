@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from linkmerce_spark.operators.asofjoin import asof_join
 from linkmerce_spark.operators.scd2 import scd2_from_changelog
+from linkmerce_spark.plans import plan_shape
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -98,9 +99,10 @@ class TestAsofJoin:
         out = asof_join(
             _left(spark), _right(spark), keys=["k"], left_ts="ts", right_ts="rts"
         )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Join" not in plan
-        assert plan.count("Exchange") <= 1  # one shuffle on the keys
+        shape = plan_shape(out)
+        assert sum(shape.joins.values()) == 0, shape.joins
+        assert shape.shuffles == {"hash": 1}, shape.exchanges  # one shuffle on the keys
+        assert shape.broadcasts == shape.reused == 0
 
 
 class TestScd2:
@@ -137,8 +139,9 @@ class TestScd2:
             "k int, ts int, attr string, seq int",
         )
         dim = scd2_from_changelog(log, keys=["k"], ts="ts", attrs=["attr"], tiebreak="seq")
-        plan = dim._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") <= 1
+        shape = plan_shape(dim)
+        assert shape.shuffles == {"hash": 1}, shape.exchanges
+        assert shape.broadcasts == shape.reused == 0
 
     def test_same_ts_tiebreak_highest_wins(self, spark):
         log = spark.createDataFrame(
@@ -214,9 +217,10 @@ class TestAsofCatalogPlan:
         from linkmerce_spark.queries import QUERIES
 
         out = QUERIES["asof_click_attribution"](spark, SF_DIR)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Join" not in plan
-        assert plan.count("Exchange") <= 1
+        shape = plan_shape(out)
+        assert sum(shape.joins.values()) == 0, shape.joins
+        assert shape.shuffles == {"hash": 1}, shape.exchanges
+        assert shape.broadcasts == shape.reused == 0
 
 
 class TestAsofBucketed:

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from linkmerce_spark.operators.bloom import bloom_bitset, bloom_semi_filter
+from linkmerce_spark.plans import plan_shape
 
 
 class TestBloomSemiFilter:
@@ -44,10 +45,10 @@ class TestBloomSemiFilter:
         big = spark.range(0, 1000).select(F.col("id").alias("k"))
         keys = spark.range(0, 100).select(F.col("id").alias("k"))
         out = bloom_semi_filter(big, keys, "k", num_bits=1 << 12)
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        shape = plan_shape(out)
         # the only exchanges belong to the bitset build (tiny, key-side)
         # + its broadcast; the big side must go scan -> filter.
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning" in line:
-                assert "__word" in line or "__pos" in line, line
+        assert shape.joins["bnlj"] + shape.joins["bhj"] >= 1
+        for ex in shape.exchanges:
+            if ex.kind == "hash":
+                assert "__word" in ex.partitioning or "__pos" in ex.partitioning, ex

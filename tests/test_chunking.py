@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from linkmerce_spark.operators.chunking import boilerplate_score, chunk_by_words
+from linkmerce_spark.plans import plan_shape
 
 
 @pytest.fixture(scope="module")
@@ -48,8 +49,8 @@ def test_chunk_rejects_bad_params(docs):
 
 
 def test_chunk_plan_has_no_shuffle(docs):
-    plan = chunk_by_words(docs, "text", "doc_id")._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    shape = plan_shape(chunk_by_words(docs, "text", "doc_id"))
+    assert shape.exchanges == [] and shape.reused == 0, shape.exchanges
 
 
 def test_boilerplate_scores(docs):

@@ -15,6 +15,7 @@ from linkmerce_spark.models.coupang import (
     parse_campaigns,
     settlement_shipping,
 )
+from linkmerce_spark.plans import plan_shape
 
 
 def test_campaign_parse_enums_and_iso_timestamp(spark):
@@ -161,5 +162,5 @@ def test_rocket_sales_shipping_projection_matches_aggregate(spark):
     )
     assert got_rows == exp_rows
     # and no aggregate survives in the physical plan
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Aggregate" not in plan
+    ops = plan_shape(got).nodes
+    assert not any("Aggregate" in op for op in ops), ops

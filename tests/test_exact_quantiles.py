@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import values_df
 from linkmerce_spark.operators.sketches import exact_group_quantiles
-from linkmerce_spark.plans.explain import count_keyed_shuffles
+from linkmerce_spark.plans import plan_shape
 
 
 def _expected(values, q):
@@ -58,4 +58,5 @@ def test_single_shuffle_plan(spark):
     out = exact_group_quantiles(base, "g", "v", [50, 90])
     # the row_number and count windows share one (g) exchange; the
     # quantile list is a broadcast literal — no second data shuffle.
-    assert count_keyed_shuffles(out) == 1, count_keyed_shuffles(out)
+    shape = plan_shape(out)
+    assert shape.keyed_shuffles == 1, shape.exchanges

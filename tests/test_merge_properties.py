@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from linkmerce_spark.operators.merge import merge_frames
+from linkmerce_spark.plans import plan_shape
 
 _VERBS = ["replace", "ignore", "greatest", "least", "source_first", "target_first"]
 
@@ -129,5 +130,5 @@ def test_merge_deduped_matches_join_merge(spark, target, source, verb_a, verb_b)
     want = sorted((tuple(r) for r in plain.select(*fused.columns).collect()), key=lambda x: (x[0] is None, x[0] or 0))
     assert got == want
     # and the fused plan really has no join node
-    p = fused._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in p
+    joins = plan_shape(fused).joins
+    assert sum(joins.values()) == 0, joins

@@ -13,6 +13,7 @@ from linkmerce_spark.operators.merge import merge_frames
 from linkmerce_spark.operators.rangejoin import effective_dated_join
 from linkmerce_spark.operators.topk import top_k_per_group
 from linkmerce_spark.operators.unpivot import unpivot
+from linkmerce_spark.plans import plan_shape
 
 
 def rows(df, *cols):
@@ -281,9 +282,9 @@ def test_priority_sample_determinism_estimator_and_plan(spark):
     whole = priority_sample(small, "w", "id", 50).collect()
     assert len(whole) == 5 and all(r["w_hat"] == float(r["w"]) for r in whole)
     # scale shape: distributed top-k, never a global sort or single-reducer window
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "WindowExec" not in plan
+    ops = plan_shape(out).nodes
+    assert ops["TakeOrderedAndProject"] >= 1, ops
+    assert ops["Window"] == 0, ops
 
 
 def test_repetition_and_pii_helpers(spark):

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from linkmerce_spark.operators.rangejoin import interval_overlap_join
 from linkmerce_spark.operators.sketches import cms_counters, cms_point_estimates
+from linkmerce_spark.plans import plan_shape
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -50,9 +51,8 @@ class TestIntervalOverlapJoin:
         out = interval_overlap_join(
             l, r, keys=["k"], l_start="ls", l_end="le", r_start="rs", r_end="re"
         )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastNestedLoop" not in plan
-        assert "CartesianProduct" not in plan
+        joins = plan_shape(out).joins
+        assert joins["bnlj"] == joins["cartesian"] == 0, joins
 
 
 class TestCountMinSketch:

@@ -9,12 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import load_star
-from linkmerce_spark.plans.explain import (
-    count_keyed_shuffles,
-    has_broadcast_join,
-    physical_plan,
-    pushed_filters,
-)
+from linkmerce_spark.plans import plan_shape
 from linkmerce_spark.queries import q_star_join_revenue
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -23,18 +18,15 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_filter_and_projection_pushed_to_parquet_scan(spark):
     li = load_star(spark, SF_DIR, ["lineitem"])["lineitem"]
     df = li.filter(F.col("l_orderkey") == 7).select("l_orderkey", "l_quantity")
-    plan = physical_plan(df, "formatted")
-    pushed = pushed_filters(df)
-    assert any("l_orderkey" in p for p in pushed), pushed
+    (scan,) = plan_shape(df).scans
+    assert "l_orderkey" in scan.pushed_filters, scan
     # Column pruning: the scan must read only the 2 projected columns.
-    assert "ReadSchema" in plan
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
-    assert "l_quantity" in read_schema and "l_extendedprice" not in read_schema
+    assert "l_quantity" in scan.read_schema and "l_extendedprice" not in scan.read_schema
 
 
 def test_star_join_broadcasts_dims(spark):
     df = q_star_join_revenue(spark, SF_DIR)
-    assert has_broadcast_join(df)
+    assert plan_shape(df).joins["bhj"] >= 1
 
 
 def test_window_dedup_is_single_shuffle(spark):
@@ -42,15 +34,15 @@ def test_window_dedup_is_single_shuffle(spark):
 
     orders = load_star(spark, SF_DIR, ["orders"])["orders"]
     out = dedupe_keep_first(orders, ["o_custkey"], [F.col("o_orderdate").desc()])
-    assert count_keyed_shuffles(out) == 1
+    assert plan_shape(out).keyed_shuffles == 1
 
 
 def test_mart_date_filter_reaches_scan(spark):
     from linkmerce_spark.marts import sales_daily
 
     df = sales_daily(spark, SF_DIR, "1996-01-01", "1996-03-31")
-    pushed = pushed_filters(df)
-    assert any("o_orderdate" in p for p in pushed), pushed
+    scans = plan_shape(df).scans
+    assert any("o_orderdate" in s.pushed_filters for s in scans), scans
 
 
 def test_date_range_predicate_is_pushed(spark):
@@ -61,20 +53,20 @@ def test_date_range_predicate_is_pushed(spark):
         F.col("o_orderdate").cast("date"),
         [f"1996-03-{d:02d}" for d in range(1, 11)] + ["1996-06-01"],
     )
-    plan = physical_plan(orders.filter(pred), "formatted")
+    (scan,) = plan_shape(orders.filter(pred)).scans
     # the collapsed BETWEEN/IN predicate must appear in the scan's data
     # filters (cast prevents parquet-level pushdown, but the filter is
     # evaluated at the scan, before any exchange)
-    assert "1996-03-01" in plan or "9556" in plan  # date literal or days-epoch
+    assert "1996-03-01" in scan.data_filters or "9556" in scan.data_filters, scan
 
 
 def test_effective_dated_join_broadcasts_relation(spark):
     from linkmerce_spark.queries import q_effective_dated_campaign
 
-    df = q_effective_dated_campaign(spark, SF_DIR)
-    assert has_broadcast_join(df)
+    shape = plan_shape(q_effective_dated_campaign(spark, SF_DIR))
+    assert shape.joins["bhj"] >= 1
     # final aggregate adds exactly one exchange on the group key
-    assert count_keyed_shuffles(df) <= 2
+    assert shape.keyed_shuffles <= 2
 
 
 def test_allocation_two_windows_one_shuffle(spark):
@@ -83,17 +75,17 @@ def test_allocation_two_windows_one_shuffle(spark):
     df = q_allocation_proportional(spark, SF_DIR)
     # two window passes over the same partitioning must NOT re-shuffle:
     # shuffles = lineitem/orders join sides + (maybe) the window key
-    assert count_keyed_shuffles(df) <= 3
+    assert plan_shape(df).keyed_shuffles <= 3
 
 
 def test_minhash_signature_aggregates_map_side(spark):
     from linkmerce_spark.operators.minhash import minhash_signature
 
     docs = load_star(spark, SF_DIR, ["documents"])["documents"]
-    plan = physical_plan(minhash_signature(docs, "text", "doc_id", 8, 3), "simple")
+    shape = plan_shape(minhash_signature(docs, "text", "doc_id", 8, 3))
     # partial aggregation before the exchange: HashAggregate appears on
     # both sides (map-side combine keeps the shuffle at one row/doc)
-    assert plan.count("HashAggregate") >= 2
+    assert shape.nodes["HashAggregate"] >= 2, shape.nodes
 
 
 def test_round4_marts_never_sort_merge_join(spark):
@@ -111,8 +103,7 @@ def test_round4_marts_never_sort_merge_join(spark):
         "google_ad_master",
         "dable_report_daily",
     ):
-        plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in plan, name
+        assert plan_shape(QUERIES[name](spark, SF_DIR)).joins["smj"] == 0, name
 
 
 def test_stock_cost_mom_shuffle_budget(spark):
@@ -124,8 +115,8 @@ def test_stock_cost_mom_shuffle_budget(spark):
     distincts) fails loudly."""
     from linkmerce_spark.queries import q_stock_cost_mom
 
-    df = q_stock_cost_mom(spark, SF_DIR)
-    assert count_keyed_shuffles(df) <= 6, count_keyed_shuffles(df)
+    shape = plan_shape(q_stock_cost_mom(spark, SF_DIR))
+    assert shape.keyed_shuffles <= 6, shape.shuffles
 
 
 def test_sabangnet_option_master_single_master_chain(spark):
@@ -134,12 +125,11 @@ def test_sabangnet_option_master_single_master_chain(spark):
     materialized RDD, not two copies of the chain)."""
     from linkmerce_spark.queries import q_sabangnet_option_master
 
-    df = q_sabangnet_option_master(spark, SF_DIR)
-    plan = physical_plan(df, "simple")
+    shape = plan_shape(q_sabangnet_option_master(spark, SF_DIR))
     # the chain's distinctive POWER(10)-scale crossJoin appears in the
     # checkpointed subtree only, so the final plan has no window over
     # opt_product_id left at all.
-    assert "Scan ExistingRDD" in plan, plan[:2000]
+    assert shape.nodes["Scan ExistingRDD"] >= 1, shape.nodes
 
 
 def test_decontam_benchmark_broadcasts(spark):
@@ -147,8 +137,7 @@ def test_decontam_benchmark_broadcasts(spark):
     shuffles on content at any corpus size."""
     from linkmerce_spark.queries import q_doc_decontam
 
-    df = q_doc_decontam(spark, SF_DIR)
-    assert has_broadcast_join(df)
+    assert plan_shape(q_doc_decontam(spark, SF_DIR)).joins["bhj"] >= 1
 
 
 def test_stratified_sample_single_shuffle(spark):
@@ -156,14 +145,14 @@ def test_stratified_sample_single_shuffle(spark):
 
     docs = load_star(spark, SF_DIR, ["documents"])["documents"]
     out = stratified_topn(docs.withColumn("s", F.col("doc_id") % 3), "s", "doc_id", 5)
-    assert count_keyed_shuffles(out) == 1
+    assert plan_shape(out).keyed_shuffles == 1
 
 
 def test_pack_plan_single_window_per_shard(spark):
     from linkmerce_spark.queries import q_doc_pack_plan
 
-    df = q_doc_pack_plan(spark, SF_DIR)
-    assert count_keyed_shuffles(df) == 1  # the shard window exchange only
+    # the shard window exchange only
+    assert plan_shape(q_doc_pack_plan(spark, SF_DIR)).keyed_shuffles == 1
 
 
 def test_sales_daily_timestamp_filter_pushed(spark):
@@ -171,9 +160,10 @@ def test_sales_daily_timestamp_filter_pushed(spark):
     filter, not a post-scan Filter only."""
     from linkmerce_spark.queries import q_smartstore_sales_daily
 
-    df = q_smartstore_sales_daily(spark, SF_DIR)
-    plan = physical_plan(df, "formatted")
-    assert "PushedFilters" in plan
+    scans = plan_shape(q_smartstore_sales_daily(spark, SF_DIR)).scans
+    # payment_dt derives from o_orderdate; the window's bounds on it
+    # reach parquet as pushed filters
+    assert any("o_orderdate" in s.pushed_filters for s in scans), scans
 
 
 def test_option_upsert_single_shuffle_no_join(spark):
@@ -182,10 +172,9 @@ def test_option_upsert_single_shuffle_no_join(spark):
     the rewrite (was 6 exchanges + a null-safe full-outer join)."""
     from linkmerce_spark.queries import q_sabangnet_option_upsert
 
-    df = q_sabangnet_option_upsert(spark, SF_DIR)
-    assert count_keyed_shuffles(df) == 1
-    plan = physical_plan(df)
-    assert "Join" not in plan
+    shape = plan_shape(q_sabangnet_option_upsert(spark, SF_DIR))
+    assert shape.keyed_shuffles == 1
+    assert sum(shape.joins.values()) == 0, shape.joins
 
 
 def test_bloom_prefilter_fact_side_scan_stage(spark):
@@ -198,9 +187,9 @@ def test_bloom_prefilter_fact_side_scan_stage(spark):
     t = load_star(spark, SF_DIR, ["orders", "customer"])
     hot = t["customer"].filter(F.col("c_acctbal") > 5000).select("c_custkey")
     pre = bloom_semi_filter(t["orders"], hot, "o_custkey", keys_key="c_custkey")
-    plan = physical_plan(pre)
-    assert "Exchange hashpartitioning" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row bitset attach
+    shape = plan_shape(pre)
+    assert shape.shuffles["hash"] == 0, shape.exchanges
+    assert shape.joins["bnlj"] >= 1  # the 1-row bitset attach
 
 
 def test_r6_curation_ops_shuffle_budgets(spark):
@@ -226,8 +215,7 @@ def test_r6_curation_ops_shuffle_budgets(spark):
         q_doc_dup_spans: 3,      # gram occ agg + covered agg + base join
     }
     for fn, budget in budgets.items():
-        df = fn(spark, SF_DIR)
-        got = count_keyed_shuffles(df)
+        got = plan_shape(fn(spark, SF_DIR)).keyed_shuffles
         assert got <= budget, (fn.__name__, got, budget)
 
 
@@ -242,9 +230,8 @@ def test_r6_curation_ops_no_pathological_joins(spark):
     )
 
     for fn in (q_doc_incremental_dedup, q_doc_line_dedup, q_doc_dup_spans):
-        plan = physical_plan(fn(spark, SF_DIR))
-        assert "BroadcastNestedLoopJoin" not in plan, fn.__name__
-        assert "CartesianProduct" not in plan, fn.__name__
+        joins = plan_shape(fn(spark, SF_DIR)).joins
+        assert joins["bnlj"] == joins["cartesian"] == 0, fn.__name__
 
 
 def test_incremental_dedup_index_side_is_narrow(spark):
@@ -260,7 +247,7 @@ def test_incremental_dedup_index_side_is_narrow(spark):
     idx = band_keys(minhash_sigs(docs, "text", "doc_id"))
     assert set(idx.columns) == {"doc_id", "band_id", "band_key"}
     # sigs-only path plans exactly ONE shuffle (the per-doc hash-min agg)
-    assert count_keyed_shuffles(minhash_sigs(docs, "text", "doc_id")) <= 2
+    assert plan_shape(minhash_sigs(docs, "text", "doc_id")).keyed_shuffles <= 2
 
 
 def test_core_sales_daily_never_sort_merge_join(spark):
@@ -269,11 +256,7 @@ def test_core_sales_daily_never_sort_merge_join(spark):
     reappearing in either ad channel is a plan regression."""
     from linkmerce_spark.queries import QUERIES
 
-    plan = (
-        QUERIES["core_sales_daily"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SortMergeJoin" not in plan
+    assert plan_shape(QUERIES["core_sales_daily"](spark, SF_DIR)).joins["smj"] == 0
 
 
 def test_cell_pair_cosines_single_shuffle_no_join(spark):
@@ -282,13 +265,11 @@ def test_cell_pair_cosines_single_shuffle_no_join(spark):
     materializes as rows before the kernel."""
     from linkmerce_spark.queries import QUERIES
 
-    plan = (
-        QUERIES["embedding_near_dups"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "FlatMapGroupsInPandas" in plan
-    assert "Join" not in plan
-    assert plan.count("Exchange") <= 2  # cell shuffle (+AQE read)
+    shape = plan_shape(QUERIES["embedding_near_dups"](spark, SF_DIR))
+    assert shape.nodes["FlatMapGroupsInPandas"] >= 1
+    assert sum(shape.joins.values()) == 0, shape.joins
+    assert shape.shuffles == {"range": 1}, shape.exchanges  # the cell shuffle
+    assert shape.broadcasts == shape.reused == 0
 
 
 def test_doc_curation_e2e_composes_without_plan_blowup(spark):
@@ -296,18 +277,21 @@ def test_doc_curation_e2e_composes_without_plan_blowup(spark):
     stay plan-bounded. The three lineage checkpoints (clean / corpus /
     surv) truncate re-references, so the FINAL plan is a handful of
     exchanges over leaf scans — not a re-expansion of the whole
-    pipeline per diamond edge. Budget: <=8 exchanges, no SortMergeJoin,
-    no CartesianProduct; the one BroadcastNestedLoopJoin allowed is the
-    1-row mixture-totals crossJoin (same as embedding_cluster_stats)."""
+    pipeline per diamond edge. Budget: <=200 plan nodes; exactly two hash
+    shuffles, one single-partition shuffle and two broadcasts; no
+    SortMergeJoin, no CartesianProduct; the one BroadcastNestedLoopJoin
+    allowed is the 1-row mixture-totals crossJoin (same as
+    embedding_cluster_stats)."""
     from linkmerce_spark.queries import QUERIES
 
     df = QUERIES["doc_curation_e2e"](spark, SF_DIR)
-    plan = physical_plan(df, "simple")
-    assert len(plan) < 100_000, f"plan blowup: {len(plan)} chars"
-    assert plan.count("Exchange") <= 8, plan.count("Exchange")
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
+    shape = plan_shape(df)
+    assert sum(shape.nodes.values()) <= 200, f"plan blowup: {shape.nodes}"
+    assert shape.shuffles == {"hash": 2, "single": 1}, shape.exchanges
+    assert shape.broadcasts == 2 and shape.reused == 0, shape.exchanges
+    joins = shape.joins
+    assert joins["smj"] == joins["cartesian"] == 0
+    assert joins["bnlj"] <= 1
     # and it returns the packed-plan schema
     assert set(df.columns) == {
         "doc_id", "source", "split", "n_tokens",
@@ -324,10 +308,6 @@ def test_sq8_roundtrip_all_joins_broadcast(spark):
     exactly q_embedding_topk's adjudicated shape."""
     from linkmerce_spark.queries import QUERIES
 
-    plan = (
-        QUERIES["embedding_sq8_roundtrip"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
+    joins = plan_shape(QUERIES["embedding_sq8_roundtrip"](spark, SF_DIR)).joins
+    assert joins["smj"] == joins["cartesian"] == 0
+    assert joins["bnlj"] <= 2

@@ -6,6 +6,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from linkmerce_spark.plans import plan_shape
+
 
 def _py_sq8_audit(vectors):
     """Pure-Python reference of operators/quantize.sq8_audit."""
@@ -261,8 +263,8 @@ def test_bq_signatures_zero_shuffle(spark):
         [(i, [float(i), -1.0, 2.0]) for i in range(10)],
         "vec_id long, embedding array<float>",
     )
-    plan = bq_signatures(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    shape = plan_shape(bq_signatures(df))
+    assert shape.exchanges == [] and shape.reused == 0, shape.exchanges
 
 
 def test_sq8_plan_broadcasts_stats_no_smj(spark):
@@ -275,6 +277,5 @@ def test_sq8_plan_broadcasts_stats_no_smj(spark):
         [(i, [float(i % 7), float(i % 3)]) for i in range(50)],
         "vec_id long, embedding array<float>",
     )
-    plan = sq8_audit(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    joins = plan_shape(sq8_audit(df)).joins
+    assert joins["bhj"] >= 1 and joins["smj"] == 0, joins

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from linkmerce_spark.sources.readers import read_table
+from linkmerce_spark.plans import plan_shape
 
 ROWS = [{"id": 1, "name": "a"}, {"id": 2, "name": "b"}, {"id": 3, "name": None}]
 SCHEMA = "id long, name string"
@@ -47,6 +48,6 @@ def test_orc_filter_pushdown(spark, tmp_path):
     path = str(tmp_path / "p.orc")
     spark.range(1000).withColumn("v", F.col("id") * 2).write.mode("overwrite").orc(path)
     df = read_table(spark, path).filter(F.col("id") == 7).select("v")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "id" in plan
+    (scan,) = plan_shape(df).scans
+    assert "id" in scan.pushed_filters, scan
     assert df.collect()[0]["v"] == 14

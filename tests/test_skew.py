@@ -38,7 +38,7 @@ def test_salted_group_count(spark):
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from linkmerce_spark.plans.explain import count_keyed_shuffles, physical_plan
+    from linkmerce_spark.plans import plan_shape
     from linkmerce_spark.sources.writers import write_bucketed
 
     a = spark.range(1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
@@ -48,7 +48,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     try:
         joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
         # co-located layout: no Exchange on either join side
-        assert count_keyed_shuffles(joined) == 0, physical_plan(joined, "simple")
+        shape = plan_shape(joined)
+        assert shape.keyed_shuffles == 0, shape.exchanges
         assert joined.count() == 1000
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_a")

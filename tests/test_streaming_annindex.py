@@ -10,6 +10,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from linkmerce_spark.plans import plan_shape
+
 
 @pytest.fixture()
 def workdir(tmp_path):
@@ -105,5 +107,5 @@ def test_streaming_encode_plans_stateless(spark, workdir):
     stream = spark.readStream.schema(schema).parquet(src)
     sig = bq_signatures(stream)
     assert sig.isStreaming
-    plan = sig._jdf.queryExecution().analyzed().toString()
-    assert "Aggregate" not in plan and "Join" not in plan
+    ops = plan_shape(sig, "analyzed").nodes
+    assert not any("Aggregate" in op or "Join" in op for op in ops), ops

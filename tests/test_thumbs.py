@@ -152,13 +152,12 @@ def test_media_near_dups_plan_shape(spark):
     """One bucket-keyed self-join carrying one row per media (the dot
     product is an in-plan zip_with/aggregate, no per-component
     explosion or pair re-aggregation), distributed top-k."""
-    from linkmerce_spark.plans.explain import physical_plan
+    from conftest import SF_DIR
+    from linkmerce_spark.plans import plan_shape
     from linkmerce_spark.queries import q_media_near_dups
 
-    plan = physical_plan(
-        q_media_near_dups(spark, "/root/testdata/sf0.001"), "simple"
-    )
-    assert "TakeOrderedAndProject" in plan
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
+    shape = plan_shape(q_media_near_dups(spark, SF_DIR))
+    assert shape.nodes["TakeOrderedAndProject"] >= 1
     # exactly one join in the whole plan (the bucket-blocked self-join)
-    assert plan.count("Join") == 1, plan
+    joins = shape.joins
+    assert sum(joins.values()) == 1 and joins["bnlj"] == joins["cartesian"] == 0, joins

@@ -14,6 +14,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import values_df
+from linkmerce_spark.plans import plan_shape
 
 
 def test_values_roundtrip_types(spark):
@@ -47,8 +48,7 @@ def test_values_empty_is_local_relation(spark):
     df = values_df(spark, [], "id int, v string")
     assert df.count() == 0
     assert df.schema.simpleString() == "struct<id:int,v:string>"
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" in plan
+    assert plan_shape(df, "optimizedPlan").nodes["LocalRelation"] >= 1
 
 
 def test_values_quoting_and_escapes(spark):

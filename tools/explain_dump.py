@@ -18,18 +18,13 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     args = sys.argv[1:]
-    if len(args) < 3:
+    names = [a for a in args[2:] if "/" not in a]
+    if not names:
         sys.exit(__doc__)
     tag, suffix = args[0], args[1]
     sf_dir = "/root/testdata/sf0.1"
-    names = []
-    for a in args[2:]:
-        if "/" in a:
-            sf_dir = a
-        else:
-            names.append(a)
-    if not names:
-        sys.exit(__doc__)
+    sf_dir = ([a for a in args[2:] if "/" in a] or [sf_dir])[-1]
+    from linkmerce_spark.plans import physical_plan, plan_shape
     from linkmerce_spark.queries import QUERIES
     from linkmerce_spark.session import get_spark
 
@@ -38,15 +33,11 @@ def main() -> None:
     spark = get_spark("explain-dump")
     for name in names:
         df = QUERIES[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+            f.write(physical_plan(df, "formatted"))
+        shape = plan_shape(df)
+        print(f"wrote {path} ({dict(shape.shuffles)} shuffles, {shape.broadcasts} broadcasts)")
 
 
 if __name__ == "__main__":

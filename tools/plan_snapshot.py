@@ -4,8 +4,7 @@ tests/test_plans.py pins ~two dozen hand-chosen plan shapes; this
 tool records the load-bearing plan properties of EVERY catalog query
 at sf0.001 into ``tools/digests/PLANS.json``:
 
-- ``exchanges``: shuffle count in the (pre-AQE) physical plan — the
-  scale currency;
+- ``exchanges``: distinct shuffles in the (pre-AQE) physical plan;
 - ``smj`` / ``bhj`` / ``bnlj`` / ``cartesian``: join strategy counts
   (CartesianProduct anywhere is a bug; BroadcastNestedLoopJoin is
   legal only for 1-row totals crossJoins);
@@ -18,17 +17,14 @@ SortMergeJoin reappearing on a pinned-broadcast mart. Regenerate
 deliberately with ``python tools/plan_snapshot.py`` after a reviewed
 plan change; the diff then documents exactly what moved.
 
-Counting notes: plan STRINGS re-expand shared subtrees per reference,
-so absolute counts overstate runtime work on diamond-shaped plans —
-fine for drift detection (the counts are stable for a fixed plan),
-wrong for cross-query comparisons.
+Counting notes: ``plans.plan_shape`` walks the plan tree, so a shared
+subtree's shuffle counts once and a cached relation's plan not at all.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -40,25 +36,14 @@ OUT = os.path.join(
 
 
 def snapshot_one(df) -> dict:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    formatted = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    pushed = [
-        p
-        for p in re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
-        if p.strip()
-    ]
+    from linkmerce_spark.plans import plan_shape
+
+    shape = plan_shape(df)
     return {
-        "exchanges": len(re.findall(r"\bExchange\b", plan)),
-        "smj": plan.count("SortMergeJoin"),
-        "bhj": plan.count("BroadcastHashJoin"),
-        "bnlj": plan.count("BroadcastNestedLoopJoin"),
-        "cartesian": plan.count("CartesianProduct"),
-        "pushed": len(pushed),
-        "inmem": plan.count("InMemoryTableScan") + plan.count("Scan ExistingRDD"),
+        "exchanges": sum(shape.shuffles.values()),
+        **{j: shape.joins[j] for j in ("smj", "bhj", "bnlj", "cartesian")},
+        "pushed": sum(s.pushed_filters != "[]" for s in shape.scans),
+        "inmem": shape.cached,
     }
 
 
@@ -82,9 +67,7 @@ def main() -> None:
     snap = build_snapshot(get_spark(), set(sys.argv[1:]) or None)
     if sys.argv[1:]:  # partial run: merge over the committed ledger
         with open(OUT, encoding="utf-8") as f:
-            full = json.load(f)
-        full.update(snap)
-        snap = full
+            snap = {**json.load(f), **snap}
     with open(OUT, "w", encoding="utf-8") as f:
         json.dump(dict(sorted(snap.items())), f, indent=1, sort_keys=True)
     print(f"wrote {OUT} ({len(snap)} queries)")
