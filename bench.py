@@ -1,9 +1,11 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Runs every catalog query on local[$SPARK_GRAFT_CPUS], times each, and
-prints ONE JSON line:
+Runs every catalog query (or only the NAMEs given) on
+local[$SPARK_GRAFT_CPUS], times each, and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+Usage: python bench.py [NAME...]
 
 Action = SUM(xxhash64(*all output columns)) collected as one row — the
 FULL result is computed and reduced engine-side, no driver collect of
@@ -29,6 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from linkmerce_spark import memo  # noqa: E402
+from linkmerce_spark.queries import QUERIES  # noqa: E402
+
 
 def full_eval(df) -> None:
     """Force FULL evaluation of every output column: one xxhash64 over
@@ -46,12 +51,45 @@ def full_eval(df) -> None:
     df.select(F.xxhash64(*cols).alias("__h")).agg(F.sum("__h")).collect()
 
 
+def time_queries(spark, sf_dir: str, names=()) -> dict[str, float]:
+    """Best-of-2 seconds per catalog query, in catalog order; a
+    non-empty ``names`` times only those queries."""
+    # Best-of-2 per query: one measurement is hostage to GC pauses and
+    # codegen-compile timing; the min of two runs is the standard
+    # steady-state estimator. Before EACH timed run both the Spark
+    # storage cache AND the session's derived memos (memo.clear: catalog
+    # plans, training results, published marts) are cleared — builders
+    # that materialize at build time (localCheckpoint label rounds, IVF
+    # training collects, bloom bitsets, upstream masters) must redo that
+    # work per run, otherwise the min-of-2 would time cached
+    # intermediates while the DuckDB yardstick re-executes from scratch
+    # each pass. Each timed run therefore does ALL its own work (plan
+    # build + every job); only the JVM's compiled code stays warm (the
+    # warm-cluster regime). The memos themselves remain a real library
+    # feature for repeated API use — the benchmark refuses to exploit it.
+    timings: dict[str, float] = {}
+    for name, fn in QUERIES.items():
+        if names and name not in names:
+            continue
+        best = float("inf")
+        for _ in range(2):
+            spark.catalog.clearCache()
+            memo.clear(spark)
+            t0 = time.perf_counter()
+            full_eval(fn(spark, sf_dir))
+            best = min(best, time.perf_counter() - t0)
+        timings[name] = round(best, 3)
+    return timings
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from linkmerce_spark import memo
-    from linkmerce_spark.queries import QUERIES
     from linkmerce_spark.session import get_spark
 
+    names = sys.argv[1:]
+    unknown = sorted(set(names) - set(QUERIES))
+    if unknown:
+        sys.exit(f"unknown catalog queries: {unknown}")
     spark = get_spark("linkmerce_spark-bench")
     # Warm the JVM (JIT + codegen compiler + parquet footers) with a
     # few representative pipelines, untimed: per-query numbers should
@@ -77,29 +115,7 @@ def main() -> None:
     spark.catalog.clearCache()
     memo.clear(spark)
 
-    # Best-of-2 per query: one measurement is hostage to GC pauses and
-    # codegen-compile timing; the min of two runs is the standard
-    # steady-state estimator. Before EACH timed run both the Spark
-    # storage cache AND the session's derived memos (memo.clear: catalog
-    # plans, training results, published marts) are cleared — builders
-    # that materialize at build time (localCheckpoint label rounds, IVF
-    # training collects, bloom bitsets, upstream masters) must redo that
-    # work per run, otherwise the min-of-2 would time cached
-    # intermediates while the DuckDB yardstick re-executes from scratch
-    # each pass. Each timed run therefore does ALL its own work (plan
-    # build + every job); only the JVM's compiled code stays warm (the
-    # warm-cluster regime). The memos themselves remain a real library
-    # feature for repeated API use — the benchmark refuses to exploit it.
-    timings: dict[str, float] = {}
-    for name, fn in QUERIES.items():
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            memo.clear(spark)
-            t0 = time.perf_counter()
-            full_eval(fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    timings = time_queries(spark, sf_dir, names)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -141,11 +141,11 @@ def get_spark(
         # object-hash aggregate would coalesce onto one core and run
         # 3-5x slower (measured: allocation_proportional 2.7 -> 1.0 s,
         # smartstore_sales_daily 3.7 -> 2.2 s at sf0.1 with 2MB).
-        # Cluster runs (SPARK_MASTER / explicit master) keep Spark's
-        # 64MB default.
-        conf["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = (
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "2MB")
-        )
+        # Twelve cold-JVM sessions confirmed it: warm session totals
+        # 18.7 s at 2MB, 18.2 s at 8MB (noise), 24.1 s at 64MB
+        # (tools/digests/ADVISORY_AB_r12.md). Cluster runs (SPARK_MASTER
+        # / explicit master) keep Spark's 64MB default.
+        conf["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = "2MB"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

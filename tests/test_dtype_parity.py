@@ -11,10 +11,9 @@ output fails here, not in the next driver round.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from linkmerce_spark.frames import STAR_TABLES
+from tools.check_oracle import duck_views
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,12 +37,7 @@ EXEMPT = {("object", "datetime64[us]"), ("object", "datetime64[ns]")}
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
+    return duck_views(SF_DIR)
 
 
 @pytest.mark.parametrize("name", FORMER_REDS)

@@ -6,61 +6,31 @@ values) so regressions surface in pytest before the driver sees them.
 
 from __future__ import annotations
 
-import math
-from datetime import date, datetime
-from decimal import Decimal
-
-import duckdb
 import pytest
 
-from linkmerce_spark.frames import STAR_TABLES
 from linkmerce_spark.oracles import ORACLES
 from linkmerce_spark.queries import QUERIES
+from tools.check_oracle import canon_rows, duck_views
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
-
-
-def _canon(v):
-    if isinstance(v, Decimal):
-        return float(v)
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    return v
-
-
-def _canon_result(cols, rows_):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    data = [tuple(_canon(r[i]) for i in order) for r in rows_]
-    data.sort(key=lambda t: tuple((x is None, str(type(x)), x) for x in t))
-    return [cols[i] for i in order], data
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
     sdf = QUERIES[name](spark, SF_DIR)
-    scols, srows = _canon_result(sdf.columns, [tuple(r) for r in sdf.collect()])
+    scols, srows = canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
     if name not in ORACLES:
         assert len(srows) >= 0  # rows-only check (non-SQL-expressible op)
         return
     res = duck.execute(ORACLES[name])
-    dcols, drows = _canon_result([d[0] for d in res.description], res.fetchall())
+    dcols, drows = canon_rows([d[0] for d in res.description], res.fetchall())
     assert scols == dcols
     assert len(srows) == len(drows)
     assert srows == drows

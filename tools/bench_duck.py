@@ -1,8 +1,9 @@
 """DuckDB yardstick timing for the catalog's oracle twins.
 
-Times every ``oracle_sql()`` twin on DuckDB (32 threads) over the same
-parquet tables bench.py reads, best-of-2 per query, and prints ONE JSON
-line shaped like bench.py's so the two are directly comparable:
+Times every ``oracle_sql()`` twin (or only the NAMEs given) on DuckDB
+(32 threads) over the same parquet tables bench.py reads, best-of-2 per
+query, and prints ONE JSON line shaped like bench.py's so the two are
+directly comparable:
 
     {"metric": "duckdb_twin_wall_seconds", "value": N, "unit": "sec",
      "queries": {...}, "sf": ...}
@@ -11,7 +12,7 @@ This is the self-established baseline BASELINE.md calls for (the
 reference publishes no numbers): same logical queries, same data, the
 columnar single-node yardstick the 2x criterion is measured against.
 
-Usage: python tools/bench_duck.py [sf_dir]
+Usage: python tools/bench_duck.py [SF_DIR] [NAME...]
 """
 
 from __future__ import annotations
@@ -21,19 +22,18 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from linkmerce_spark.frames import STAR_TABLES  # noqa: E402
 from linkmerce_spark.oracles import ORACLES  # noqa: E402
+from tools.check_oracle import duck_views  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
+    args = sys.argv[1:]
+    sf_dir = args.pop(0) if args and "/" in args[0] else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    con = duckdb.connect()
+    con = duck_views(sf_dir)
     con.execute(f"SET threads TO {os.cpu_count() or 32}")
     # Same resilience the sf10 checksum gate runs with: a spill dir and
     # relaxed insertion order keep the yardstick from dying allocator-
@@ -59,13 +59,9 @@ def main() -> None:
     skip = set(
         s for s in os.environ.get("BENCH_DUCK_SKIP", "").split(",") if s
     )
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
     timings: dict[str, float] = {}
     for name, sql in ORACLES.items():
-        if name in skip:
+        if name in skip or (args and name not in args):
             continue
         best = float("inf")
         for _ in range(2):

@@ -13,7 +13,8 @@ PER-QUERY MEDIAN across the three runs as THE number for the round.
 Interleaving means any slow machine phase (kernel page-cache churn,
 thermal state) hits both engines, not one.
 
-Outputs, under tools/digests/:
+Outputs, under tools/digests/, only for a full-catalog run given
+``--tag TAG`` (an untagged run prints the digest and writes nothing):
 
 - BENCH_SPARK_<tag>_med3.json / BENCH_DUCK_<tag>_med3.json — the
   bench.py-shaped JSON whose per-query values are medians-of-3 and
@@ -24,12 +25,17 @@ Outputs, under tools/digests/:
   run-to-run spread exceeds +-10% of its median (the outliers the
   protocol exists to smooth), with the three raw values shown.
 
-Usage: python tools/bench_median.py [sf_dir] [tag]
-(defaults: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1, tag sf0.1_r8)
+Query NAMEs make it a subset A/B: both sides time only those names
+under their usual protocol, and it prints a spark/duck/ratio table of
+the per-query medians and writes nothing.
+
+Usage: python tools/bench_median.py [SF_DIR] [NAME...] [--tag TAG]
+(SF_DIR defaults to $SPARK_GRAFT_SF_DIR, else bench.py's default)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -38,54 +44,116 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DIGEST_DIR = os.path.join(REPO, "tools", "digests")
 
 
-def run_once(cmd: list[str], env: dict) -> dict:
+def run_json(args: list[str], env: dict) -> dict:
+    """Run ``python ARGS`` from the repo root in a fresh process and
+    return the last stdout line that parses as a JSON object: the bench
+    scripts print ONE such line last, amid whatever else gets logged."""
     out = subprocess.run(
-        cmd, cwd=REPO, env=env, capture_output=True, text=True
+        [sys.executable, *args], cwd=REPO, env=env, capture_output=True, text=True
     )
     if out.returncode != 0:
         raise RuntimeError(
-            f"{cmd} exited {out.returncode}; stderr tail:\n{out.stderr[-3000:]}"
+            f"{args} exited {out.returncode}; stderr tail:\n{out.stderr[-3000:]}"
         )
-    # the bench scripts print ONE JSON line last; tolerate log noise
-    for line in reversed(out.stdout.strip().splitlines()):
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"no JSON line from {cmd}:\n{out.stdout[-2000:]}")
+    for line in reversed(out.stdout.splitlines()):
+        try:
+            doc = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(doc, dict):
+            return doc
+    raise RuntimeError(f"no JSON line from {args}:\n{out.stdout[-2000:]}")
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
+    ap = argparse.ArgumentParser(
+        description="Median-of-3 interleaved Spark/DuckDB bench pairs."
+    )
+    ap.add_argument("args", nargs="*", metavar="[SF_DIR] NAME")
+    ap.add_argument("--tag", help="write the full-catalog ledgers as *_TAG_*")
+    opts = ap.parse_args()
+    names = opts.args
+    sf_dir = names.pop(0) if names and "/" in names[0] else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    tag = sys.argv[2] if len(sys.argv) > 2 else "sf0.1_r8"
+    if names and opts.tag:
+        ap.error("--tag writes full-catalog ledgers; a subset run writes nothing")
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     pairs: list[tuple[dict, dict]] = []
     for i in range(3):
         t0 = time.time()
-        s = run_once([sys.executable, "bench.py"], env)
-        d = run_once([sys.executable, "tools/bench_duck.py", sf_dir], env)
+        s = run_json(["bench.py", *names], env)
+        d = run_json(["tools/bench_duck.py", *names], env)
         pairs.append((s, d))
         print(
             f"pair {i + 1}/3: spark={s['value']}s duck={d['value']}s "
-            f"ratio={s['value'] / d['value']:.3f} wall={time.time() - t0:.0f}s",
+            f"ratio={common_ratio(s['queries'], d['queries']):.3f} "
+            f"wall={time.time() - t0:.0f}s",
             flush=True,
         )
-    digest_dir = os.path.join(REPO, "tools", "digests")
-    lines = summarize(pairs, tag, sf_dir, digest_dir)
-    md = os.path.join(digest_dir, f"MED3_{tag}.md")
-    with open(md, "w") as f:
-        f.write("\n".join(lines))
-    print("\n".join(lines))
-    print(f"wrote {md}")
+    print("\n".join(report(pairs, sf_dir, names, opts.tag, DIGEST_DIR)))
+
+
+def report(
+    pairs: list[tuple[dict, dict]],
+    sf_dir: str,
+    names: list[str],
+    tag: str | None,
+    digest_dir: str,
+) -> list[str]:
+    """The lines to print after the pairs. Only a tagged full-catalog
+    run writes its ledgers under ``digest_dir``."""
+    if names:
+        return subset_table(pairs)
+    lines = summarize(pairs, tag or "untagged", sf_dir, digest_dir if tag else None)
+    if tag:
+        md = os.path.join(digest_dir, f"MED3_{tag}.md")
+        with open(md, "w") as f:
+            f.write("\n".join(lines))
+        lines.append(f"wrote {md}")
+    return lines
+
+
+def medians(runs: list[dict]) -> dict[str, float]:
+    """Per-query median across runs, in the first run's query order."""
+    return {
+        n: round(statistics.median(r["queries"][n] for r in runs), 3)
+        for n in runs[0]["queries"]
+    }
+
+
+def common_ratio(spark_q: dict[str, float], duck_q: dict[str, float]) -> float:
+    """Spark/DuckDB time ratio over the queries both sides timed."""
+    common = set(spark_q) & set(duck_q)
+    duck = sum(duck_q[n] for n in common)
+    return sum(spark_q[n] for n in common) / duck if duck else float("nan")
+
+
+def subset_table(pairs: list[tuple[dict, dict]]) -> list[str]:
+    """Per-query medians of a subset run: spark, duck, ratio. A query
+    with no DuckDB twin shows nan and stays out of the total ratio."""
+    spark_m = medians([p[0] for p in pairs])
+    duck_m = medians([p[1] for p in pairs])
+    lines = [f"{'query':35s} {'spark':>8s} {'duck':>8s} {'ratio':>7s}"]
+    for n, s in spark_m.items():
+        d = duck_m.get(n, float("nan"))
+        lines.append(f"{n:35s} {s:8.3f} {d:8.3f} {common_ratio({n: s}, duck_m):7.2f}")
+    both = [n for n in spark_m if n in duck_m]
+    lines.append(
+        f"{f'both timed ({len(both)})':35s} {sum(spark_m[n] for n in both):8.3f}"
+        f" {sum(duck_m[n] for n in both):8.3f} {common_ratio(spark_m, duck_m):7.2f}"
+    )
+    return lines
 
 
 def summarize(
-    pairs: list[tuple[dict, dict]], tag: str, sf_dir: str, digest_dir: str
+    pairs: list[tuple[dict, dict]], tag: str, sf_dir: str, digest_dir: str | None
 ) -> list[str]:
-    """Write the two med3 JSON docs and return the MD digest lines.
+    """Write the two med3 JSON docs (unless ``digest_dir`` is None) and
+    return the MD digest lines.
 
     Pure given (pairs, env): unit-testable without running either
     engine — the skip-naming contract (any entry present on one side
@@ -100,10 +168,7 @@ def summarize(
     ):
         runs = [p[idx] for p in pairs]
         names = list(runs[0]["queries"])
-        med_q = {
-            n: round(statistics.median(r["queries"][n] for r in runs), 3)
-            for n in names
-        }
+        med_q = medians(runs)
         total = round(sum(med_q.values()), 3)
         doc = {
             "metric": runs[0]["metric"] + "_median_of_3",
@@ -114,9 +179,10 @@ def summarize(
             "queries": med_q,
         }
         med[side] = doc
-        with open(os.path.join(digest_dir, fname), "w") as f:
-            json.dump(doc, f, separators=(",", ":"))
-            f.write("\n")
+        if digest_dir is not None:
+            with open(os.path.join(digest_dir, fname), "w") as f:
+                json.dump(doc, f, separators=(",", ":"))
+                f.write("\n")
         spread = [
             f"{(r['value'] - total) / total * 100:+.1f}%" for r in runs
         ]
@@ -161,12 +227,7 @@ def summarize(
     d_common = round(sum(med["DUCK"]["queries"][n] for n in common), 3)
     ratio = s_common / d_common
     pair_ratios = [
-        round(
-            sum(p[0]["queries"][n] for n in common)
-            / sum(p[1]["queries"][n] for n in common),
-            3,
-        )
-        for p in pairs
+        round(common_ratio(p[0]["queries"], p[1]["queries"]), 3) for p in pairs
     ]
     lines = [
         f"# MED3_{tag} — median-of-3 interleaved A/B pairs",

@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -17,10 +18,21 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from linkmerce_spark.frames import STAR_TABLES  # noqa: E402
 from linkmerce_spark.session import get_spark  # noqa: E402
+
+
+def duck_views(sf_dir):
+    """A fresh DuckDB connection with one view per star table over the
+    parquet files under ``sf_dir`` — the tables every oracle twin reads."""
+    con = duckdb.connect()
+    for t in STAR_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
 
 def canon_value(v):
@@ -61,11 +73,7 @@ def main():
         qs = {k: v for k, v in qs.items() if k in only}
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     failures = []
     for name, fn in qs.items():

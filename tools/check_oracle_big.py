@@ -30,15 +30,14 @@ Usage: python tools/check_oracle_big.py <sf_dir> [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-sys.path.insert(0, "/root/repo")
-
-from linkmerce_spark.frames import STAR_TABLES  # noqa: E402
 from linkmerce_spark.session import get_spark  # noqa: E402
+from tools.check_oracle import duck_views  # noqa: E402
 
 
 def spark_checksums(df):
@@ -131,7 +130,7 @@ def main() -> None:
 
     names = sys.argv[2:] or list(q.QUERIES)
     spark = get_spark()
-    con = duckdb.connect()
+    con = duck_views(sf_dir)
     # The checksum gate is order-independent by design, so the twin can
     # drop insertion-order preservation (the main reason large DuckDB
     # CTE chains hold whole intermediates in memory) and spill to disk:
@@ -139,10 +138,6 @@ def main() -> None:
     # allocator (r8 rotation: doc_clean_select_e2e OOM'd without this).
     con.execute("SET preserve_insertion_order=false")
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
     npass = nfail = 0
     for name in names:
         t0 = time.perf_counter()

@@ -22,14 +22,13 @@ Exit code 1 if any non-exempt dtype mismatch remains.
 
 from __future__ import annotations
 
+import os
 import sys
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-sys.path.insert(0, "/root/repo")
-
-from linkmerce_spark.frames import STAR_TABLES  # noqa: E402
 from linkmerce_spark.session import get_spark  # noqa: E402
+from tools.check_oracle import duck_views  # noqa: E402
 
 # Pairs (spark_dtype, duck_dtype) proven harmless by green driver rows.
 _EXEMPT = {
@@ -59,11 +58,7 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     spark = get_spark()
-    con = duckdb.connect()
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     names = only or [n for n in qs if n in oracles]
     n_bad = 0

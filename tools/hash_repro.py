@@ -34,8 +34,8 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from linkmerce_spark.frames import STAR_TABLES  # noqa: E402
 from linkmerce_spark.session import get_spark  # noqa: E402
+from tools.check_oracle import duck_views  # noqa: E402
 
 RED_SET = [
     "searchad_report_merge",
@@ -75,6 +75,11 @@ def render(v) -> str:
 
 
 def canon(cols, rows) -> str:
+    """Exact text of a result for a sha256 digest: floats as
+    ``float.hex``, Decimals with their scale. Kept apart from
+    ``check_oracle.canon_rows``, which folds Decimal to float so the two
+    engines compare equal — one canonicalizer would either round the
+    committed DIGESTS.txt evidence or change that cross-engine equality."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     lines = sorted(
         "\x1f".join(render(r[i]) for i in order) for r in rows
@@ -94,12 +99,7 @@ def main() -> None:
     oracles = entrymod.oracle_sql()
 
     spark = get_spark("hash-repro")
-    con = duckdb.connect()
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     os.makedirs(DIGEST_DIR, exist_ok=True)
     out_lines = []

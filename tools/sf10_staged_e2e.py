@@ -59,13 +59,14 @@ Usage: python tools/sf10_staged_e2e.py [sf_dir]   (default testdata_sf10)
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracle_big import duck_checksums, spark_checksums  # noqa: E402
 
