@@ -519,16 +519,7 @@ def adreport_daily(
             F.col("report.ad_cost").alias("ad_cost"),
             nl.alias("conv_amount"),
             F.col("report.product_id").alias("product_id"),
-            F.coalesce("product.team_name", F.lit("담당팀 없음")).alias("team_name"),
-            F.coalesce("product.brand_name", F.lit("브랜드 없음")).alias(
-                "brand_name"
-            ),
-            F.coalesce("product.category_name1", dash).alias("category_name1"),
-            F.coalesce("product.category_name2", dash).alias("category_name2"),
-            F.coalesce("product.category_name3", dash).alias("category_name3"),
-            F.coalesce("product.category_name4", dash).alias("category_name4"),
-            F.coalesce("product.color", dash).alias("color"),
-            F.coalesce("product.product_name", dash).alias("product_name"),
+            *_product_attrs()[2:],
             F.col("report.ymd").alias("ymd"),
         )
     )
@@ -557,16 +548,7 @@ def adreport_daily(
             F.col("ads.ad_cost").alias("ad_cost"),
             nl.alias("conv_amount"),
             F.col("ads.brand_id").alias("product_id"),
-            F.coalesce("product.team_name", F.lit("담당팀 없음")).alias("team_name"),
-            F.coalesce("product.brand_name", F.lit("브랜드 없음")).alias(
-                "brand_name"
-            ),
-            F.coalesce("product.category_name1", dash).alias("category_name1"),
-            F.coalesce("product.category_name2", dash).alias("category_name2"),
-            F.coalesce("product.category_name3", dash).alias("category_name3"),
-            F.coalesce("product.category_name4", dash).alias("category_name4"),
-            F.coalesce("product.color", dash).alias("color"),
-            F.coalesce("product.product_name", dash).alias("product_name"),
+            *_product_attrs()[2:],
             F.col("ads.ymd").alias("ymd"),
         )
     )

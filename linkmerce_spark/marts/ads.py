@@ -220,27 +220,33 @@ def insight_daily(
         _MEASURES,
     )
 
-    exploded = grain.select(
-        "*",
-        F.posexplode(F.split("bundle_product_ids", ",")).alias(
-            "bundle_product_offset", "bundle_product_id"
-        ),
-    ).withColumn("bundle_product_count", F.size(F.split("bundle_product_ids", ",")))
-    remapped = exploded.join(
-        broadcast(renewal),
-        (F.col("bundle_product_id") == F.col("product_id_new"))
-        & (F.col("ymd") < F.col("renewal_date")),
-        "left",
-    ).withColumn(
-        "final_product_id", F.coalesce("product_id_old", "bundle_product_id")
-    )
-    return remapped.select(
+    return _explode_renewed(grain, renewal).select(
         "campaign_id",
         "ad_id",
         "device_type",
         F.col("final_product_id").alias("product_id"),
         *[_alloc(m) for m in _MEASURES],
         "ymd",
+    )
+
+
+def _explode_renewed(grain: DataFrame, renewal: DataFrame) -> DataFrame:
+    """One row per bundle element (with its offset and the bundle
+    size), the product id renewal-remapped: a renewed product's new id
+    maps back to its old id on days before the renewal."""
+    exploded = grain.select(
+        "*",
+        F.posexplode(F.split("bundle_product_ids", ",")).alias(
+            "bundle_product_offset", "bundle_product_id"
+        ),
+    ).withColumn("bundle_product_count", F.size(F.split("bundle_product_ids", ",")))
+    return exploded.join(
+        broadcast(renewal),
+        (F.col("bundle_product_id") == F.col("product_id_new"))
+        & (F.col("ymd") < F.col("renewal_date")),
+        "left",
+    ).withColumn(
+        "final_product_id", F.coalesce("product_id_old", "bundle_product_id")
     )
 
 
@@ -327,23 +333,7 @@ def dable_report_daily(
         "__b",
         _DABLE_MEASURES,
     )
-    exploded = grain.select(
-        "*",
-        F.posexplode(F.split("bundle_product_ids", ",")).alias(
-            "bundle_product_offset", "bundle_product_id"
-        ),
-    ).withColumn(
-        "bundle_product_count", F.size(F.split("bundle_product_ids", ","))
-    )
-    remapped = exploded.join(
-        broadcast(renewal),
-        (F.col("bundle_product_id") == F.col("product_id_new"))
-        & (F.col("ymd") < F.col("renewal_date")),
-        "left",
-    ).withColumn(
-        "final_product_id", F.coalesce("product_id_old", "bundle_product_id")
-    )
-    return remapped.select(
+    return _explode_renewed(grain, renewal).select(
         "campaign_id",
         F.col("final_product_id").alias("product_id"),
         *[_alloc(m) for m in _DABLE_MEASURES],

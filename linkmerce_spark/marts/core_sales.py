@@ -133,46 +133,14 @@ def assign_ad_shop(
     """Re-home ad cost to COALESCE(product-day shop, brand-day shop,
     the ad frame's own default shop) (:204-222).
 
-    ads: product_id, shop_id, ad_cost, order_date.
+    ads: product_id, shop_id, ad_cost, order_date. One channel: the
+    tagged join with every row under the same constant tag.
     """
-    itm = broadcast(product_master.select(
-        F.col("product_id").alias("__itm_pid"), F.col("brand_name").alias("__itm_brand")
-    ))
-    prd = product_daily.select(
-        F.col("order_date").alias("__prd_date"),
-        F.col("product_id").alias("__prd_pid"),
-        F.col("shop_id").alias("__prd_shop"),
-    )
-    # brand-day cardinality is business-bounded (brands x days), a
-    # strict subset of the already-broadcast product master's grain —
-    # without the hint this falls to a sort-merge join at every scale.
-    brd = broadcast(
-        brand_daily.select(
-            F.col("order_date").alias("__brd_date"),
-            F.col("brand_name").alias("__brd_brand"),
-            F.col("shop_id").alias("__brd_shop"),
-        )
-    )
-    out = (
-        ads.join(itm, ads["product_id"] == F.col("__itm_pid"), "left")
-        .join(
-            prd,
-            (ads["order_date"] == F.col("__prd_date"))
-            & (ads["product_id"] == F.col("__prd_pid")),
-            "left",
-        )
-        .join(
-            brd,
-            (ads["order_date"] == F.col("__brd_date"))
-            & (F.col("__itm_brand") == F.col("__brd_brand")),
-            "left",
-        )
-    )
-    return out.select(
-        ads["product_id"],
-        F.coalesce("__prd_shop", "__brd_shop", ads["shop_id"]).alias("shop_id"),
-        "ad_cost",
-        ads["order_date"],
+    def tag(df: DataFrame) -> DataFrame:
+        return df.withColumn("__src", F.lit(0))
+
+    return assign_ad_shop_tagged(
+        tag(ads), product_master, tag(product_daily), tag(brand_daily)
     )
 
 
@@ -205,7 +173,9 @@ def assign_ad_shop_tagged(
         F.col("__src").alias("__prd_src"),
     )
     # brand-day cardinality is business-bounded (brands x days x
-    # channels) — same broadcast rationale as assign_ad_shop.
+    # channels), a strict subset of the already-broadcast product
+    # master's grain — without the hint this falls to a sort-merge join
+    # at every scale.
     brd = broadcast(
         brand_daily.select(
             F.col("order_date").alias("__brd_date"),

@@ -318,6 +318,19 @@ def _mapping(df_or_rows, spark, schema: str) -> DataFrame:
     return values_df(spark, rows, schema)
 
 
+def _level_rel(relation: DataFrame, level: int, alias: str) -> DataFrame:
+    """The bundle relation rows of one ad level (0/1/2 = campaign /
+    group / ad) as ``{alias}_key`` / ``{alias}_bundle``."""
+    return (
+        relation.filter(F.col("ad_level") == level)
+        .select(
+            F.col("ad_id").alias(f"{alias}_key"),
+            F.col("bundle_product_ids").alias(f"{alias}_bundle"),
+        )
+        .alias(alias)
+    )
+
+
 def _seq99(col: str) -> Column:
     return F.coalesce(F.col(col), F.lit(99))
 
@@ -472,16 +485,6 @@ def google_ad_master(
     gtype = _mapping(GOOGLE_ADGROUP_TYPES, spark, _MAP_SCHEMA_STR)
     atype = _mapping(GOOGLE_AD_TYPES, spark, _MAP_SCHEMA_STR)
 
-    def _rel(level: int, alias: str) -> DataFrame:
-        return (
-            relation.filter(F.col("ad_level") == level)
-            .select(
-                F.col("ad_id").alias(f"{alias}_key"),
-                F.col("bundle_product_ids").alias(f"{alias}_bundle"),
-            )
-            .alias(alias)
-        )
-
     out = (
         ad.alias("ad")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
@@ -527,17 +530,17 @@ def google_ad_master(
     out = (
         out.join(broadcast(st_map.alias("sf")), worst == F.col("sf.seq"), "left")
         .join(
-            broadcast(_rel(0, "rc")),
+            broadcast(_level_rel(relation, 0, "rc")),
             F.col("campaign_id") == F.col("rc.rc_key"),
             "left",
         )
         .join(
-            broadcast(_rel(1, "rg")),
+            broadcast(_level_rel(relation, 1, "rg")),
             F.col("adgroup_id") == F.col("rg.rg_key"),
             "left",
         )
         .join(
-            broadcast(_rel(2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
+            broadcast(_level_rel(relation, 2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
         )
     )
     sort_key = (
@@ -644,16 +647,6 @@ def searchad_ad_master(
     gtype = _mapping(SEARCHAD_ADGROUP_TYPES, spark, _MAP_SCHEMA_INT)
     atype = _mapping(SEARCHAD_AD_TYPES, spark, _MAP_SCHEMA_INT)
 
-    def _rel(level: int, alias: str) -> DataFrame:
-        return (
-            relation.filter(F.col("ad_level") == level)
-            .select(
-                F.col("ad_id").alias(f"{alias}_key"),
-                F.col("bundle_product_ids").alias(f"{alias}_bundle"),
-            )
-            .alias(alias)
-        )
-
     out = (
         ad.alias("ad")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
@@ -679,15 +672,15 @@ def searchad_ad_master(
             "left",
         )
         .join(
-            broadcast(_rel(0, "rc")),
+            broadcast(_level_rel(relation, 0, "rc")),
             F.col("grp.campaign_id") == F.col("rc.rc_key"),
             "left",
         )
         .join(
-            broadcast(_rel(1, "rg")), F.col("adgroup_id") == F.col("rg.rg_key"), "left"
+            broadcast(_level_rel(relation, 1, "rg")), F.col("adgroup_id") == F.col("rg.rg_key"), "left"
         )
         .join(
-            broadcast(_rel(2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
+            broadcast(_level_rel(relation, 2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
         )
         .join(
             broadcast(
@@ -811,16 +804,6 @@ def meta_ad_master(
     obj = _mapping(META_OBJECTIVES, spark, _MAP_SCHEMA_STR)
     st = _mapping(META_EFFECTIVE_STATUSES, spark, _MAP_SCHEMA_STR)
 
-    def _rel(level: int, alias: str) -> DataFrame:
-        return (
-            relation.filter(F.col("ad_level") == level)
-            .select(
-                F.col("ad_id").alias(f"{alias}_key"),
-                F.col("bundle_product_ids").alias(f"{alias}_bundle"),
-            )
-            .alias(alias)
-        )
-
     out = (
         ad.alias("ad")
         .join(broadcast(account.alias("acc")), "account_id", "left")
@@ -854,15 +837,15 @@ def meta_ad_master(
             "left",
         )
         .join(
-            broadcast(_rel(0, "rc")),
+            broadcast(_level_rel(relation, 0, "rc")),
             F.col("campaign_id") == F.col("rc.rc_key"),
             "left",
         )
         .join(
-            broadcast(_rel(1, "rs")), F.col("adset_id") == F.col("rs.rs_key"), "left"
+            broadcast(_level_rel(relation, 1, "rs")), F.col("adset_id") == F.col("rs.rs_key"), "left"
         )
         .join(
-            broadcast(_rel(2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
+            broadcast(_level_rel(relation, 2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
         )
     )
     sort_key = (

@@ -58,7 +58,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from linkmerce_spark.marts.profit import DOW_NAMES, ORDER_STATUS_LABELS
+from linkmerce_spark.marts.profit import (
+    ORDER_STATUS_LABELS,
+    _join_date_range,
+    _profit_dim_cols,
+)
+from linkmerce_spark.marts.smartstore import _first_token, _gift_status
 
 __all__ = [
     "smartstore_order_count",
@@ -70,11 +75,6 @@ __all__ = [
 ]
 
 UNMATCHED_PRODUCT = "200000"  # smartstore__order_count.sql:44
-
-
-def _first_token(col: Column | str, sep: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_element_at(F.split(c, sep), F.lit(1))
 
 
 def smartstore_order_count(
@@ -131,13 +131,7 @@ def smartstore_order_count(
         "order_id",
         "product_order_id",
         _first_token("bundle_product", ":").alias("product_id"),
-        F.when(
-            (F.col("order_status") == 0)
-            & (F.substring("bundle_product", 1, 1) == "9"),
-            F.lit(3),
-        )
-        .otherwise(F.col("order_status"))
-        .alias("order_status"),
+        _gift_status("bundle_product", 3).alias("order_status"),
         "delivery_type",
         "order_quantity",
         "order_date",
@@ -185,13 +179,9 @@ def coupang_rfm_order_count(
     ).select(
         "order_id",
         _first_token("bundle_product", ":").alias("product_id"),
-        F.when(
-            (F.col("order_status") == 0)
-            & (F.substring("bundle_product", 1, 1) == "9"),
-            F.lit(6),
-        )
-        .otherwise(F.least("order_status", F.lit(3)))
-        .alias("order_status"),
+        _gift_status("bundle_product", 6, F.least("order_status", F.lit(3))).alias(
+            "order_status"
+        ),
         "order_quantity",
         "order_date",
     )
@@ -313,28 +303,7 @@ def order_count_enrich(
         F.col("f.order_id").alias("order_id"),
         F.col("f.product_order_id").alias("product_order_id"),
         F.col("f.product_id").alias("product_id"),
-        F.coalesce("item.item_id", F.lit("NA-AAAAAA-00")).alias("item_id"),
-        F.coalesce("item.item_seq", F.lit(99999999)).alias("item_seq"),
-        F.coalesce("item.team_name", F.lit("담당팀 없음")).alias("team_name"),
-        F.coalesce("item.brand_name", F.lit("브랜드 없음")).alias("brand_name"),
-        F.coalesce("item.category_name1", dash).alias("category_name1"),
-        F.coalesce("item.category_name2", dash).alias("category_name2"),
-        F.coalesce("item.category_name3", dash).alias("category_name3"),
-        F.coalesce("item.category_name4", dash).alias("category_name4"),
-        F.coalesce("item.color", dash).alias("color"),
-        F.coalesce("item.product_name", F.lit("매칭 불가 상품")).alias("product_name"),
-        F.coalesce(
-            F.when(F.col("item.unit_name").isNull(), F.col("item.category_name3"))
-            .otherwise(
-                F.concat(
-                    F.col("item.category_name3"),
-                    F.lit(" ("),
-                    F.col("item.unit_name"),
-                    F.lit(")"),
-                )
-            ),
-            dash,
-        ).alias("category_unit_name"),
+        *_profit_dim_cols(),
         F.col("f.shop_id").alias("shop_id"),
         F.coalesce("shop.shop_group", dash).alias("shop_group"),
         F.coalesce("shop.shop_alias", dash).alias("shop_name"),
@@ -391,45 +360,7 @@ def order_count_mom(
         _month_floor_col(F.col("order_date")).alias("order_ym"),
     )
     fact = ds_frame.unionByName(lb_frame).drop("order_date")
-
-    from linkmerce_spark.frames import values_df
-
-    spark = fact.sparkSession
-    dow_map = values_df(spark, DOW_NAMES, "dayofweek int, name_ko string")
-    j = (
-        fact.alias("f")
-        .join(
-            broadcast(dow_map.alias("sd")),
-            F.dayofweek("f.order_start_date") == F.col("sd.dayofweek"),
-            "left",
-        )
-        .join(
-            broadcast(dow_map.alias("ed")),
-            F.dayofweek("f.order_end_date") == F.col("ed.dayofweek"),
-            "left",
-        )
-    )
-
-    def _fmt(col: str, pat: str) -> Column:
-        return F.date_format(F.col(col), pat)
-
-    date_range = F.concat(
-        F.lit("[ "),
-        _fmt("f.order_end_date", "yy"),
-        F.lit("년 "),
-        _fmt("f.order_end_date", "MM"),
-        F.lit("월 ]\n"),
-        F.when(
-            F.col("f.order_start_date") != F.col("f.order_end_date"),
-            F.concat(
-                _fmt("f.order_start_date", "yy/MM/dd"),
-                F.col("sd.name_ko"),
-                F.lit("\n~ "),
-            ),
-        ).otherwise(F.lit("\n")),
-        _fmt("f.order_end_date", "yy/MM/dd"),
-        F.col("ed.name_ko"),
-    )
+    j, date_range = _join_date_range(fact.alias("f"))
     keep = [c for c in fact.columns if c not in ("order_start_date", "order_end_date", "order_ym")]
     return j.select(
         *[F.col(f"f.{c}").alias(c) for c in keep],

@@ -40,11 +40,12 @@ Scale notes
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from linkmerce_spark.frames import values_df
+from linkmerce_spark.marts.smartstore import _first_token, _sku_mult
 
 __all__ = [
     "smartstore_product_master",
@@ -123,11 +124,6 @@ _STR_MAP = "seq int, code string, label string"
 
 def _map(spark, rows, schema):
     return broadcast(values_df(spark, rows, schema))
-
-
-def _first_token(col: Column | str, sep: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_element_at(F.split(c, sep), F.lit(1))
 
 
 def smartstore_product_master(
@@ -278,10 +274,18 @@ def coupang_option_master(
     )
 
 
-def _sku_mult(bundle: Column | str) -> Column:
-    b = F.col(bundle) if isinstance(bundle, str) else bundle
-    suffix = F.try_element_at(F.split(b, ":"), F.lit(2))
-    return F.when(suffix.rlike("^[0-9]+$"), suffix.cast("int")).otherwise(F.lit(1))
+def _item_categories(core_item: DataFrame) -> DataFrame:
+    """The core item's four category names keyed by ``__t_item``
+    (broadcast): the category attach of both sabangnet masters."""
+    return broadcast(
+        core_item.select(
+            F.col("item_id").alias("__t_item"),
+            F.col("category_name1").alias("__t_c1"),
+            F.col("category_name2").alias("__t_c2"),
+            F.col("category_name3").alias("__t_c3"),
+            F.col("category_name4").alias("__t_c4"),
+        )
+    )
 
 
 def sabangnet_product_master(
@@ -355,15 +359,7 @@ def sabangnet_product_master(
     spark = product.sparkSession
     st = _map(spark, SABANGNET_PRODUCT_STATUSES, _INT_MAP).alias("st")
     ot = _map(spark, SABANGNET_OPTION_TYPES, _INT_MAP).alias("ot")
-    cat = broadcast(
-        core_item.select(
-            F.col("item_id").alias("__t_item"),
-            F.col("category_name1").alias("__t_c1"),
-            F.col("category_name2").alias("__t_c2"),
-            F.col("category_name3").alias("__t_c3"),
-            F.col("category_name4").alias("__t_c4"),
-        )
-    )
+    cat = _item_categories(core_item)
     main = broadcast(
         core_product_master.select(F.col("product_id").alias("__m_pid"))
     )
@@ -531,15 +527,7 @@ def sabangnet_option_master(
             F.col("sort_key").alias("__pm_sort"),
         )
     )
-    itm = broadcast(
-        core_item.select(
-            F.col("item_id").alias("__t_item"),
-            F.col("category_name1").alias("__t_c1"),
-            F.col("category_name2").alias("__t_c2"),
-            F.col("category_name3").alias("__t_c3"),
-            F.col("category_name4").alias("__t_c4"),
-        )
-    )
+    itm = _item_categories(core_item)
     out = (
         option.alias("opt")
         .join(

@@ -293,10 +293,9 @@ def profit_mom_dims(
     metric_map = values_df(
         spark, METRIC_MAPPING, "name_en string, sort_seq int, sub_seq int, name_ko string"
     )
-    dow_map = values_df(spark, DOW_NAMES, "dayofweek int, name_ko string")
 
     f = unpivoted.alias("f")
-    enriched = (
+    enriched, date_range = _join_date_range(
         f.join(broadcast(item), "product_id", "left")
         .join(broadcast(shop_dim.alias("shop")), "shop_id", "left")
         .join(
@@ -309,20 +308,7 @@ def profit_mom_dims(
             F.col("f.metric_name") == F.col("m.name_en"),
             "left",
         )
-        .join(
-            broadcast(dow_map.alias("sd")),
-            F.dayofweek("f.order_start_date") == F.col("sd.dayofweek"),
-            "left",
-        )
-        .join(
-            broadcast(dow_map.alias("ed")),
-            F.dayofweek("f.order_end_date") == F.col("ed.dayofweek"),
-            "left",
-        )
     )
-
-    def _fmt(col: str, pat: str) -> Column:
-        return F.date_format(F.col(col), pat)
 
     metric_ko = F.concat(
         F.lpad(F.col("m.sort_seq").cast("string"), 2, "0"),
@@ -333,6 +319,46 @@ def profit_mom_dims(
         F.lit(". "),
         F.col("m.name_ko"),
     )
+    dash = F.lit("-")
+    return enriched.select(
+        F.col("f.product_id").alias("product_id"),
+        *_profit_dim_cols(),
+        F.col("f.shop_id").alias("shop_id"),
+        F.coalesce("shop.shop_group", dash).alias("shop_group"),
+        F.coalesce("shop.shop_alias", dash).alias("shop_name"),
+        F.coalesce("st.label", F.lit("알 수 없음")).alias("order_status"),
+        F.col("f.metric_name").alias("metric_name_en"),
+        metric_ko.alias("metric_name_ko"),
+        F.col("f.metric_value").alias("metric_value"),
+        F.col("f.order_start_date").alias("order_start_date"),
+        F.col("f.order_end_date").alias("order_end_date"),
+        F.col("f.order_ym").alias("order_ym"),
+        date_range.alias("order_date_range"),
+    )
+
+
+def _join_date_range(j: DataFrame) -> tuple[DataFrame, Column]:
+    """Append the start-day (``sd``) and end-day (``ed``) day-of-week
+    label joins to ``j`` — whose fact side is aliased ``f`` and carries
+    order_start_date / order_end_date — and build the multi-line Korean
+    order_date_range label over them (analytics__profit_mom.sql:
+    203-217 == analytics__order_count_mom.sql:108-128)."""
+    from linkmerce_spark.frames import values_df
+
+    dow_map = values_df(j.sparkSession, DOW_NAMES, "dayofweek int, name_ko string")
+    j = j.join(
+        broadcast(dow_map.alias("sd")),
+        F.dayofweek("f.order_start_date") == F.col("sd.dayofweek"),
+        "left",
+    ).join(
+        broadcast(dow_map.alias("ed")),
+        F.dayofweek("f.order_end_date") == F.col("ed.dayofweek"),
+        "left",
+    )
+
+    def _fmt(col: str, pat: str) -> Column:
+        return F.date_format(F.col(col), pat)
+
     date_range = F.concat(
         F.lit("[ "),
         _fmt("f.order_end_date", "yy"),
@@ -350,43 +376,7 @@ def profit_mom_dims(
         _fmt("f.order_end_date", "yy/MM/dd"),
         F.col("ed.name_ko"),
     )
-    dash = F.lit("-")
-    return enriched.select(
-        F.col("f.product_id").alias("product_id"),
-        F.coalesce("item.item_id", F.lit("NA-AAAAAA-00")).alias("item_id"),
-        F.coalesce("item.item_seq", F.lit(99999999)).alias("item_seq"),
-        F.coalesce("item.team_name", F.lit("담당팀 없음")).alias("team_name"),
-        F.coalesce("item.brand_name", F.lit("브랜드 없음")).alias("brand_name"),
-        F.coalesce("item.category_name1", dash).alias("category_name1"),
-        F.coalesce("item.category_name2", dash).alias("category_name2"),
-        F.coalesce("item.category_name3", dash).alias("category_name3"),
-        F.coalesce("item.category_name4", dash).alias("category_name4"),
-        F.coalesce("item.color", dash).alias("color"),
-        F.coalesce("item.product_name", F.lit("매칭 불가 상품")).alias("product_name"),
-        F.coalesce(
-            F.when(F.col("item.unit_name").isNull(), F.col("item.category_name3"))
-            .otherwise(
-                F.concat(
-                    F.col("item.category_name3"),
-                    F.lit(" ("),
-                    F.col("item.unit_name"),
-                    F.lit(")"),
-                )
-            ),
-            dash,
-        ).alias("category_unit_name"),
-        F.col("f.shop_id").alias("shop_id"),
-        F.coalesce("shop.shop_group", dash).alias("shop_group"),
-        F.coalesce("shop.shop_alias", dash).alias("shop_name"),
-        F.coalesce("st.label", F.lit("알 수 없음")).alias("order_status"),
-        F.col("f.metric_name").alias("metric_name_en"),
-        metric_ko.alias("metric_name_ko"),
-        F.col("f.metric_value").alias("metric_value"),
-        F.col("f.order_start_date").alias("order_start_date"),
-        F.col("f.order_end_date").alias("order_end_date"),
-        F.col("f.order_ym").alias("order_ym"),
-        date_range.alias("order_date_range"),
-    )
+    return j, date_range
 
 
 def _profit_dim_cols(item_alias: str = "item", shop_alias: str = "shop"):

@@ -52,9 +52,37 @@ __all__ = [
 OPEN_TIER_MAX = 9999  # smartstore__sales_daily.sql:23
 
 
+# The bundle-id format shared by every sales mart: a CSV of elements
+# 'pid[:N]' (N = SKU multiplier) or '-'-structured sabangnet option
+# ids ('pid-opt'); a '9'-prefixed pid is a gift product.
+
+
 def _first_token(col: Column | str, sep: str) -> Column:
+    """The part of ``col`` before the first ``sep`` (the whole value
+    when ``sep`` is absent)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.try_element_at(F.split(c, sep), F.lit(1))
+
+
+def _sku_mult(bundle: Column | str) -> Column:
+    """The ':N' SKU multiplier of a bundle element (:148-153): the
+    suffix must be all digits, anything else (or absent) counts as 1."""
+    b = F.col(bundle) if isinstance(bundle, str) else bundle
+    # try_element_at: NULL (not an error) past the end even in ANSI mode
+    suffix = F.try_element_at(F.split(b, ":"), F.lit(2))
+    return F.when(suffix.rlike("^[0-9]+$"), suffix.cast("int")).otherwise(F.lit(1))
+
+
+def _gift_status(
+    bundle: str, promoted: int, otherwise: Column | None = None
+) -> Column:
+    """A paid (status 0) row whose bundle element is a '9'-prefixed
+    gift product takes status ``promoted``; every other row keeps
+    ``otherwise`` (default: its ``order_status``)."""
+    st = F.col("order_status")
+    return F.when(
+        (st == 0) & (F.substring(bundle, 1, 1) == "9"), F.lit(promoted)
+    ).otherwise(st if otherwise is None else otherwise)
 
 
 def delivery_tiers(dlv: DataFrame) -> DataFrame:
@@ -88,14 +116,9 @@ def delivery_tiers(dlv: DataFrame) -> DataFrame:
 
 
 def sku_quantity(bundle_product: Column | str, order_quantity: Column | str) -> Column:
-    """':N'-suffixed SKU multiplier x order quantity (:148-153): the
-    suffix must be all digits, anything else (or absent) counts as 1."""
-    b = F.col(bundle_product) if isinstance(bundle_product, str) else bundle_product
+    """':N'-suffixed SKU multiplier x order quantity."""
     q = F.col(order_quantity) if isinstance(order_quantity, str) else order_quantity
-    # try_element_at: NULL (not an error) past the end even in ANSI mode
-    suffix = F.try_element_at(F.split(b, ":"), F.lit(2))
-    mult = F.when(suffix.rlike("^[0-9]+$"), suffix.cast("int")).otherwise(F.lit(1))
-    return (mult * q).alias("sku_quantity")
+    return (_sku_mult(bundle_product) * q).alias("sku_quantity")
 
 
 def split_by_cost_weight(
@@ -621,13 +644,7 @@ def smartstore_sales_daily(
             "invoice_no",
             pid.alias("product_id"),
             "delivery_type",
-            F.when(
-                (F.col("order_status") == 0)
-                & (F.substring("bundle_product", 1, 1) == "9"),
-                F.lit(6),
-            )
-            .otherwise(F.col("order_status"))
-            .alias("order_status"),
+            _gift_status("bundle_product", 6).alias("order_status"),
             (sku_quantity("bundle_product", "order_quantity")),
             "payment_amount",
             "supply_amount",

@@ -59,11 +59,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from linkmerce_spark.marts.smartstore import (
+    _first_token,
+    _gift_status,
+    _sku_mult,
     attach_max_delivery_fee,
     max_delivery_fee,
     split_by_cost_weight,
@@ -80,19 +83,7 @@ __all__ = [
     "rocket_sales_shipping",
     "coupang_product_order",
     "total_product_order",
-    "rfm_order_count",
 ]
-
-
-def _first_token(col: Column | str, sep: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_element_at(F.split(c, sep), F.lit(1))
-
-
-def _sku_mult(bundle: Column | str) -> Column:
-    b = F.col(bundle) if isinstance(bundle, str) else bundle
-    suffix = F.try_element_at(F.split(b, ":"), F.lit(2))
-    return F.when(suffix.rlike("^[0-9]+$"), suffix.cast("int")).otherwise(F.lit(1))
 
 
 def ecount_product_dim(raw: DataFrame) -> DataFrame:
@@ -455,13 +446,7 @@ def coupang_product_order(
             "order_id",
             "option_id",
             "product_id",
-            F.when(
-                (F.col("order_status") == 0)
-                & (F.substring("bundle_product", 1, 1) == "9"),
-                F.lit(6),
-            )
-            .otherwise(F.col("order_status"))
-            .alias("order_status"),
+            _gift_status("bundle_product", 6).alias("order_status"),
             (_sku_mult("bundle_product") * F.col("order_quantity")).alias(
                 "sku_quantity"
             ),
@@ -575,67 +560,3 @@ def total_product_order(frames: Sequence[DataFrame]) -> DataFrame:
         "order_date",
     )
 
-
-def rfm_order_count(
-    sales: DataFrame,
-    rel: DataFrame,
-    vendor: DataFrame,
-    start_date: str,
-    end_date: str,
-) -> DataFrame:
-    """coupang_rfm__order_count (dbt_postgres/models/intermediate/
-    sales/coupang_rfm/coupang_rfm__order_count.sql:17-79): rocket sales
-    pre-aggregated per (order, option, vendor), the bundle COALESCE
-    chain with the 200000 catch-all, explode with the 9-prefix ->
-    status-6 promotion and LEAST(status, 3), order-count rollup.
-
-    ``sales`` carries (order_id, option_id, vendor_id, settlement_type,
-    order_quantity, sales_date).
-
-    Scale: relation/vendor broadcast; the two groupBys key on
-    order-grain ids (uniform); the explode fan-out is bundle-sized.
-    """
-    lo, hi = F.lit(start_date).cast("date"), F.lit(end_date).cast("date")
-    rocket = (
-        sales.filter(F.col("sales_date").between(lo, hi))
-        .groupBy("order_id", "option_id", "vendor_id")
-        .agg(
-            F.max("settlement_type").alias("order_status"),
-            F.sum("order_quantity").alias("order_quantity"),
-            F.max("sales_date").alias("sales_date"),
-        )
-    )
-    bundled = (
-        rocket.join(broadcast(rel), "option_id", "left")
-        .join(broadcast(vendor), "vendor_id", "left")
-        .filter(
-            F.col("sales_date").between(lo, hi) & (F.col("order_quantity") != 0)
-        )
-        .select(
-            "order_id",
-            F.coalesce(
-                "bundle_product_ids", "bundle_brand_ids", F.lit("200000")
-            ).alias("bundle_product_ids"),
-            "order_status",
-            "order_quantity",
-            F.col("sales_date").alias("order_date"),
-        )
-    )
-    ex = bundled.select(
-        "*", F.explode(F.split("bundle_product_ids", ",")).alias("bundle_product")
-    ).select(
-        "order_id",
-        _first_token("bundle_product", ":").alias("product_id"),
-        F.when(
-            (F.col("order_status") == 0)
-            & (F.substring("bundle_product", 1, 1) == "9"),
-            F.lit(6),
-        )
-        .otherwise(F.least(F.col("order_status"), F.lit(3)))
-        .alias("order_status"),
-        "order_quantity",
-        "order_date",
-    )
-    return ex.groupBy("order_id", "order_date", "product_id", "order_status").agg(
-        F.sum("order_quantity").alias("order_quantity")
-    )

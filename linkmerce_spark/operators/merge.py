@@ -24,7 +24,7 @@ Spark broadcasts the source side automatically (or hint via
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,6 +36,7 @@ from linkmerce_spark.operators.dedup import dedupe_keep_first
 __all__ = ["merge_frames", "merge_deduped", "merge_deduped_tagged", "MATCHED_VERBS"]
 
 MATCHED_VERBS = ("replace", "ignore", "greatest", "least", "source_first", "target_first")
+NOT_MATCHED_VERBS = ("insert_all", "do_nothing")
 
 
 def _resolve(verb: str, tgt: Column, src: Column) -> Column:
@@ -55,6 +56,48 @@ def _resolve(verb: str, tgt: Column, src: Column) -> Column:
     raise ValueError(f"unknown merge verb {verb!r}; expected one of {MATCHED_VERBS}")
 
 
+def _merged_cols(
+    data_cols: Sequence[str],
+    sides: Callable[[str], tuple[Column, Column | None]],
+    has_t: Column,
+    has_s: Column,
+    matched: Mapping[str, str] | str,
+    not_matched: str,
+) -> list[Column]:
+    """The merged value of each data column. ``sides(c)`` gives the
+    column's (target, source) values; a source value of ``None`` means
+    the source batch doesn't carry the column, which behaves as
+    'ignore' (SQL MERGE cannot even reference it): matched rows KEEP
+    their target value. Substituting a source NULL would make
+    'replace'/'replace_all' silently wipe existing data on every
+    routine partial-column upsert."""
+    if not_matched not in NOT_MATCHED_VERBS:
+        raise ValueError(
+            f"unknown not_matched {not_matched!r}; expected one of {NOT_MATCHED_VERBS}"
+        )
+    insert_new = not_matched == "insert_all"
+    out: list[Column] = []
+    for c in data_cols:
+        if matched == "replace_all":
+            verb = "replace"
+        elif matched == "do_nothing":
+            verb = "ignore"
+        elif isinstance(matched, str):
+            verb = matched
+        else:
+            verb = matched.get(c, "ignore")
+        tgt, src = sides(c)
+        if src is None:
+            verb, src = "ignore", F.lit(None)
+        out.append(
+            F.when(has_t & has_s, _resolve(verb, tgt, src))
+            .when(has_t & ~has_s, tgt)
+            .when(~has_t & has_s, src if insert_new else F.lit(None))
+            .alias(c)
+        )
+    return out
+
+
 def merge_frames(
     target: DataFrame,
     source: DataFrame,
@@ -72,7 +115,8 @@ def merge_frames(
         a single verb applied to every non-key column, or the row-level
         strategies ``"replace_all"`` / ``"do_nothing"``.
     not_matched:
-        ``"insert_all"`` (insert new keys) or ``"do_nothing"``.
+        ``"insert_all"`` (insert new keys) or ``"do_nothing"``; any
+        other value raises ``ValueError``.
     source_order:
         Deterministic keep-first order for deduping the source batch on
         the merge key before joining (PK semantics).
@@ -88,42 +132,16 @@ def merge_frames(
     has_t = F.col("t.__t").isNotNull()
     has_s = F.col("s.__s").isNotNull()
 
-    out_cols: list[Column] = []
-    for k in keys:
-        out_cols.append(F.coalesce(t[k], s[k]).alias(k))
-
-    if matched == "replace_all":
-        verb_of = {c: "replace" for c in data_cols}
-    elif matched == "do_nothing":
-        verb_of = {c: "ignore" for c in data_cols}
-    elif isinstance(matched, str):
-        verb_of = {c: matched for c in data_cols}
-    else:
-        verb_of = {c: matched.get(c, "ignore") for c in data_cols}
-
-    insert_new = not_matched == "insert_all"
-
-    for c in data_cols:
-        if c not in src.columns:
-            # A target column the source batch doesn't carry behaves as
-            # 'ignore' (SQL MERGE cannot even reference it): matched
-            # rows KEEP their target value. Substituting NULL here
-            # would make 'replace'/'replace_all' silently wipe existing
-            # data on every routine partial-column upsert.
-            tgt_c, src_c = t[c], F.lit(None)
-            both = _resolve("ignore", tgt_c, src_c)
-        else:
-            tgt_c, src_c = t[c], s[c]
-            both = _resolve(verb_of[c], tgt_c, src_c)
-        expr = (
-            F.when(has_t & has_s, both)
-            .when(has_t & ~has_s, tgt_c)
-            .when(~has_t & has_s, src_c if insert_new else F.lit(None))
-        )
-        out_cols.append(expr.alias(c))
-
-    if not insert_new:
-        # Drop the source-only rows entirely (not_matched = do_nothing).
+    out_cols = [F.coalesce(t[k], s[k]).alias(k) for k in keys] + _merged_cols(
+        data_cols,
+        lambda c: (t[c], s[c] if c in src.columns else None),
+        has_t,
+        has_s,
+        matched,
+        not_matched,
+    )
+    if not_matched == "do_nothing":
+        # Drop the source-only rows entirely.
         joined = joined.filter(has_t)
     return joined.select(*out_cols).drop("__t", "__s")
 
@@ -181,15 +199,6 @@ def merge_deduped_tagged(
     if not order_by:
         raise ValueError("merge_deduped requires a deterministic order_by")
     data_cols = [c for c in tagged.columns if c not in keys and c != "__side"]
-    if matched == "replace_all":
-        verb_of = {c: "replace" for c in data_cols}
-    elif matched == "do_nothing":
-        verb_of = {c: "ignore" for c in data_cols}
-    elif isinstance(matched, str):
-        verb_of = {c: matched for c in data_cols}
-    else:
-        verb_of = {c: matched.get(c, "ignore") for c in data_cols}
-    insert_new = not_matched == "insert_all"
 
     u = tagged.repartition(*[F.col(k) for k in keys])
     w = Window.partitionBy(*list(keys), "__side").orderBy(*order_by)
@@ -211,16 +220,14 @@ def merge_deduped_tagged(
 
     has_t = F.col("__t").isNotNull()
     has_s = F.col("__s").isNotNull()
-    out_cols: list[Column] = [F.col(k) for k in keys]
-    for c in data_cols:
-        tgt_c, src_c = F.col(f"__t_{c}"), F.col(f"__s_{c}")
-        both = _resolve(verb_of[c], tgt_c, src_c)
-        out_cols.append(
-            F.when(has_t & has_s, both)
-            .when(has_t & ~has_s, tgt_c)
-            .when(~has_t & has_s, src_c if insert_new else F.lit(None))
-            .alias(c)
-        )
-    if not insert_new:
+    out_cols = [F.col(k) for k in keys] + _merged_cols(
+        data_cols,
+        lambda c: (F.col(f"__t_{c}"), F.col(f"__s_{c}")),
+        has_t,
+        has_s,
+        matched,
+        not_matched,
+    )
+    if not_matched == "do_nothing":
         grouped = grouped.filter(has_t)
     return grouped.select(*out_cols)

@@ -3,37 +3,26 @@
 Link-graph authority is a standard corpus-curation signal: Common
 Crawl pipelines weight domains by a centrality score before sampling
 (harmonic/PageRank centrality — Brin & Page 1998). This module
-implements the power-iteration form with a FIXED iteration count in
-two execution modes:
+implements the power-iteration form with a FIXED iteration count.
 
-- DEFAULT (``broadcast_ranks=False``): the loop is unrolled into the
-  plan, not driven from Python — each iteration is [join ranks onto
-  the edge list -> sum contributions per destination -> blend with the
-  teleport term], so the whole ``n_iter``-round computation is ONE
-  lazy job with a linear chain of ``n_iter`` joins. Build time runs
-  only the bounded setup (edge-list localCheckpoint + the |V| count
-  that folds 1/n into literals); the iteration itself executes at
-  first action. Per-iteration cost at scale is one shuffle over the
-  EDGE list (nodes-sized agg piggybacks) — the Pregel cost model
-  without the Pregel machinery, appropriate because the iteration
-  count is a constant, not convergence-driven. Safe for page-scale
-  graphs: nothing nodes-sized ever reaches the driver.
-- OPT-IN EAGER (``broadcast_ranks=True``): the rank vector is held
-  driver-side and each round is one distributed job over the
-  checkpointed edge list whose nodes-sized contribution sums are
-  collected back (a broadcast IS collect + redistribute — same
-  bytes, minus per-round exchange machinery). This mode EXECUTES
-  ``n_iter`` cluster jobs at call time and requires the node universe
-  to fit in driver memory — only for a node universe orders of
-  magnitude smaller than the edge list (domains vs a 100 TB corpus)
-  where the per-round rank-chain plan is the measured bottleneck.
-- determinism across engines AND modes: double SUM order is
-  shuffle-dependent, so each edge's contribution ``(w/out) * r`` is
-  quantized to int64 at scale 1e15 (``floor(x*1e15 + 0.5)``) and
-  summed EXACTLY; the per-round blend is then a fixed sequence of
-  scalar IEEE ops on identical operands — ranks are bit-identical on
-  any engine, mode, or partitioning, which is what lets a SQL twin
-  unroll the same rounds.
+- The loop is unrolled into the plan, not driven from Python — each
+  iteration is [join ranks onto the edge list -> sum contributions per
+  destination -> blend with the teleport term], so the whole
+  ``n_iter``-round computation is ONE lazy job with a linear chain of
+  ``n_iter`` joins. Build time runs only the bounded setup (edge-list
+  localCheckpoint + the |V| count that folds 1/n into literals); the
+  iteration itself executes at first action. Per-iteration cost at
+  scale is one shuffle over the EDGE list (nodes-sized agg
+  piggybacks) — the Pregel cost model without the Pregel machinery,
+  appropriate because the iteration count is a constant, not
+  convergence-driven. Safe for page-scale graphs: nothing nodes-sized
+  ever reaches the driver.
+- determinism across engines: double SUM order is shuffle-dependent,
+  so each edge's contribution ``(w/out) * r`` is quantized to int64 at
+  scale 1e15 (``floor(x*1e15 + 0.5)``) and summed EXACTLY; the
+  per-round blend is then a fixed sequence of scalar IEEE ops on
+  identical operands — ranks are bit-identical on any engine or
+  partitioning, which is what lets a SQL twin unroll the same rounds.
 
 Reference behavioral parity: the reference has no graph layer; this
 extends the curation suite (domain mixture weights, group splits)
@@ -43,7 +32,6 @@ with the authority signal those ops consume.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import broadcast
 
 __all__ = [
     "pagerank",
@@ -62,32 +50,22 @@ def pagerank(
     node: str = "node",
     n_iter: int = 5,
     damping: float = 0.85,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Weighted PageRank after exactly ``n_iter`` power iterations.
 
     ``edges``: directed (src, dst, weight>0); ``nodes``: the full node
     universe (isolated nodes keep the teleport-only rank), and a
     PRECONDITION: every edge endpoint must appear in ``nodes`` — an
-    endpoint outside the universe is undefined behavior (the two modes
-    treat it differently; neither validates, because the check would
-    cost an edges-sized join per call). Dangling nodes (in ``nodes``
-    but with no out-edges) simply contribute nothing — the standard
-    "teleport absorbs dangling mass" simplification; on a symmetric
-    edge list there are none.
+    endpoint outside the universe is undefined behavior (not
+    validated, because the check would cost an edges-sized join per
+    call). Dangling nodes (in ``nodes`` but with no out-edges) simply
+    contribute nothing — the standard "teleport absorbs dangling mass"
+    simplification; on a symmetric edge list there are none.
 
-    ``broadcast_ranks=False`` (the default) returns a LAZY frame: the
-    ``n_iter`` rounds are unrolled into one plan of chained joins over
-    the checkpointed edge list, and nothing nodes-sized reaches the
-    driver — right for any graph, required for page-scale ones.
-    ``broadcast_ranks=True`` is the opt-in EAGER mode: it collects the
-    node universe, holds the rank vector driver-side, and runs one
-    cluster job per round at CALL time — only for a node universe
-    orders of magnitude smaller than the edge list, and only when the
-    unrolled plan is the measured bottleneck (see module docstring).
-
-    Returns (node, out_w, pagerank): total out-weight (0 for isolated
-    nodes) and the final rank.
+    Returns a LAZY frame of (node, out_w, pagerank): total out-weight
+    (0 for isolated nodes) and the final rank. The ``n_iter`` rounds
+    are unrolled into one plan of chained joins over the checkpointed
+    edge list; nothing nodes-sized reaches the driver.
     """
     if n_iter <= 0:
         raise ValueError("n_iter must be positive")
@@ -120,101 +98,19 @@ def pagerank(
     out_w = e.groupBy(F.col("__esrc").alias("__src")).agg(
         F.max("__out_w").alias("__out_w")
     )
-    if broadcast_ranks:
-        # The node universe already has to fit in memory for the rank
-        # broadcasts below — collecting it once here is the SAME
-        # assumption, and turns the checkpoint+count pair (two jobs)
-        # into one job whose output seeds the ranks as a LOCAL
-        # relation: every later broadcast of the rank chain re-executes
-        # a driver-local subtree instead of a cluster scan.
-        vrows = (
-            nodes.select(F.col(node).alias("__node")).distinct().collect()
-        )
-        n = len(vrows)
-        if n == 0:
-            raise ValueError("nodes must be non-empty")
-        verts = nodes.sparkSession.createDataFrame(
-            vrows, schema=nodes.select(F.col(node).alias("__node")).schema
-        )
-    else:
-        verts = (
-            nodes.select(F.col(node).alias("__node"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # |V| reaches the driver as ONE scalar (the sanctioned k-sized
-        # collect) — folding 1/n into literals keeps every iteration
-        # free of the 1-row crossJoin a column-borne n would need, and
-        # the Python IEEE divisions below are bit-identical to the SQL
-        # twin's (same operands, correctly rounded).
-        n = verts.count()
-        if n == 0:
-            raise ValueError("nodes must be non-empty")
-    if broadcast_ranks:
-        # Per-round sync with the rank vector held driver-side: a
-        # broadcast join IS collect-to-driver + redistribute, so
-        # collecting the nodes-sized per-round contribution sums moves
-        # the SAME bytes the broadcast-chain formulation moved — minus
-        # five rounds of broadcast-exchange/blend-join plan machinery
-        # (measured ~2x the whole query's wall time on a 20-node
-        # graph). Each round stays ONE distributed job over the edge
-        # list; only the nodes-sized blend arithmetic runs in Python,
-        # and on identical IEEE operands (exact int64 quanta, binary64
-        # ops in the same order) it is bit-identical to the column
-        # expressions it replaces.
-        spark = nodes.sparkSession
-        node_type = verts.schema["__node"].dataType
-        rank_rows = [(r["__node"],) for r in vrows]
-        rank_map: dict = {k: 1.0 / float(n) for (k,) in rank_rows}
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        r_schema = StructType(
-            [
-                StructField("__node", node_type),
-                StructField("__r", DoubleType()),
-            ]
-        )
-        for _ in range(n_iter):
-            rdf = spark.createDataFrame(
-                [(k, v) for k, v in rank_map.items()], schema=r_schema
-            )
-            s_rows = (
-                e.join(broadcast(rdf), e.__esrc == rdf.__node)
-                .select(
-                    "__edst",
-                    F.floor(
-                        (
-                            F.col("__w").cast("double")
-                            / F.col("__out_w").cast("double")
-                        )
-                        * F.col("__r")
-                        * F.lit(_QUANT)
-                        + F.lit(0.5)
-                    ).alias("__c"),
-                )
-                .groupBy("__edst")
-                .agg(F.sum("__c").alias("__s"))
-                .collect()
-            )
-            smap = {r["__edst"]: r["__s"] for r in s_rows}
-            teleport = omd / float(n)
-            rank_map = {
-                k: teleport + damping * (float(smap.get(k, 0)) / _QUANT)
-                for k in rank_map
-            }
-        ranks = spark.createDataFrame(
-            [(k, v) for k, v in rank_map.items()], schema=r_schema
-        )
-        # right-outer preserves every node (isolated ones keep the
-        # teleport rank); only the LEFT side of a right join may build
-        # the broadcast table — out_w is nodes-sized too.
-        return broadcast(out_w).join(
-            ranks, ranks.__node == out_w.__src, "right"
-        ).select(
-            F.col("__node").alias(node),
-            F.coalesce("__out_w", F.lit(0)).cast("bigint").alias("out_w"),
-            F.col("__r").alias("pagerank"),
-        )
+    verts = (
+        nodes.select(F.col(node).alias("__node"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # |V| reaches the driver as ONE scalar (the sanctioned k-sized
+    # collect) — folding 1/n into literals keeps every iteration free
+    # of the 1-row crossJoin a column-borne n would need, and the
+    # Python IEEE divisions below are bit-identical to the SQL twin's
+    # (same operands, correctly rounded).
+    n = verts.count()
+    if n == 0:
+        raise ValueError("nodes must be non-empty")
     # One exchange per round: [join ranks onto edges (edge side
     # pre-partitioned — no edge exchange) -> union the zero-contribution
     # row for EVERY node (keeps isolated/dangling nodes without a blend
@@ -287,11 +183,9 @@ def shared_gram_edges(
     the pair rollup. The per-gram pair fan-out comes from a double
     ``explode`` of the group set, NOT a gram-keyed self-join — no join
     in the plan at all. The aggregation buffer per gram is bounded by
-    the GROUP universe (sources/domains), never the corpus: the same
-    nodes-fit-in-memory assumption ``pagerank(broadcast_ranks=True)``
-    already makes, and stop-grams shared by every domain collect one
-    domain-count-sized set before the ``min_groups..max_groups`` filter
-    drops them (at 1M domains that is an 8 MB aggregation row — fine;
+    the GROUP universe (sources/domains), never the corpus, and
+    stop-grams shared by every domain collect one domain-count-sized
+    set before the ``min_groups..max_groups`` filter drops them (at 1M domains that is an 8 MB aggregation row — fine;
     a PAGE-level group column would need the join-based formulation
     this replaced, see git history).
     """

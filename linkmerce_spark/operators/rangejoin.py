@@ -40,7 +40,6 @@ def effective_dated_join(
     start_col: str = "start_date",
     end_col: str = "end_date",
     how: str = "left",
-    broadcast_relation: bool = True,
     suffix: str | None = None,
 ) -> DataFrame:
     """Join ``fact`` to an effective-dated ``relation``.
@@ -56,8 +55,7 @@ def effective_dated_join(
     raises instead of silently emitting a duplicate column name.
     """
     point = F.col(point) if isinstance(point, str) else point
-    rel = broadcast(relation) if broadcast_relation else relation
-    f, r = fact.alias("f"), rel.alias("r")
+    f, r = fact.alias("f"), broadcast(relation).alias("r")
     cond = [f[k] == r[k] for k in keys]
     cond.append(point.between(r[start_col], r[end_col]))
     joined = f.join(r, cond, how)
@@ -81,24 +79,21 @@ def rolling_range_agg(
     date_col: str,
     aggs: dict[str, Column],
     days_back: int = 30,
-    include_current: bool = False,
 ) -> DataFrame:
     """Per-key rolling aggregate over a trailing day window.
 
     For each row: aggregate over rows of the same key whose date falls
-    in [date - days_back, date - 1] (or ... date] with
-    ``include_current``). Implemented as a RANGE window over
+    in [date - days_back, date - 1]. Implemented as a RANGE window over
     ``datediff`` days — single shuffle on ``keys``.
 
     ``aggs`` maps output column name -> aggregate Column (e.g.
     ``{"qty_30d": F.sum("qty")}``).
     """
-    upper = 0 if include_current else -1
     days = F.datediff(F.col(date_col), F.lit("1970-01-01").cast("date"))
     w = (
         Window.partitionBy(*keys)
         .orderBy(days)
-        .rangeBetween(-days_back, upper)
+        .rangeBetween(-days_back, -1)
     )
     out = df
     for name, agg in aggs.items():

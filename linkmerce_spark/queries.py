@@ -251,6 +251,16 @@ def q_full_outer_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------- §2.5 W6
+def _lineitem_order_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lineitems joined to their order's total price in cents."""
+    li, orders = _t(spark, sf_dir, "lineitem", "orders")
+    total_cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
+    return li.join(
+        orders.select("o_orderkey", total_cents.alias("total_cents")),
+        li.l_orderkey == F.col("o_orderkey"),
+    )
+
+
 def q_allocation_proportional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Proportional allocation w/ remainder-to-first-row (SURVEY W6).
 
@@ -261,12 +271,7 @@ def q_allocation_proportional(spark: SparkSession, sf_dir: str) -> DataFrame:
     Allocates each order's total (in cents) over its lineitems
     proportional to extendedprice.
     """
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    total_cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
-    base = li.join(
-        orders.select("o_orderkey", total_cents.alias("total_cents")),
-        li.l_orderkey == F.col("o_orderkey"),
-    )
+    base = _lineitem_order_cents(spark, sf_dir)
     # The synthetic lineitem has duplicate (orderkey, linenumber) pairs;
     # the residue-row pick needs a total order, so extend the tiebreak.
     out = allocate_proportional(
@@ -293,12 +298,7 @@ def q_allocation_integer_even(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: dbt_postgres/.../searchad__insight_daily.sql:195-216
     (conversion counts split evenly, first MOD rows get +1).
     """
-    li, orders = _t(spark, sf_dir, "lineitem", "orders")
-    total_cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
-    base = li.join(
-        orders.select("o_orderkey", total_cents.alias("total_cents")),
-        li.l_orderkey == F.col("o_orderkey"),
-    )
+    base = _lineitem_order_cents(spark, sf_dir)
     out = allocate_integer_even(
         base,
         group=["l_orderkey"],
@@ -712,16 +712,11 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_doc_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII-ish surface scan (emails/URLs/phone shapes) over a corpus
-    with deterministic synthetic contact snippets appended — the
-    pre-training filter/redaction signal. Patterns use only constructs
-    that parse identically under Java regex and RE2."""
-    from linkmerce_spark.functions.text import pii_counts
-
-    (docs,) = _t(spark, sf_dir, "documents")
+def _pii_body() -> Column:
+    """A document's text with deterministic synthetic contact snippets
+    (email, URL, phone shapes) appended by ``doc_id``."""
     did = F.col("doc_id")
-    body = F.concat(
+    return F.concat(
         F.col("text"),
         F.when(did % 7 == 0,
                F.concat(F.lit(" contact user"), did.cast("string"),
@@ -731,6 +726,17 @@ def q_doc_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                         did.cast("string"))).otherwise(F.lit("")),
         F.when(did % 11 == 0, F.lit(" call 010-1234-5678")).otherwise(F.lit("")),
     )
+
+
+def q_doc_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII-ish surface scan (emails/URLs/phone shapes) over a corpus
+    with deterministic synthetic contact snippets appended — the
+    pre-training filter/redaction signal. Patterns use only constructs
+    that parse identically under Java regex and RE2."""
+    from linkmerce_spark.functions.text import pii_counts
+
+    (docs,) = _t(spark, sf_dir, "documents")
+    body = _pii_body()
     scanned = docs.withColumn("__body", body)
     counts = pii_counts(F.col("__body"))
     return scanned.select(
@@ -753,17 +759,7 @@ def q_doc_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linkmerce_spark.functions.text import pii_counts, pii_redact
 
     (docs,) = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    body = F.concat(
-        F.col("text"),
-        F.when(did % 7 == 0,
-               F.concat(F.lit(" contact user"), did.cast("string"),
-                        F.lit("@mail.example.com now"))).otherwise(F.lit("")),
-        F.when(did % 5 == 0,
-               F.concat(F.lit(" see https://docs.example.com/page/"),
-                        did.cast("string"))).otherwise(F.lit("")),
-        F.when(did % 11 == 0, F.lit(" call 010-1234-5678")).otherwise(F.lit("")),
-    )
+    body = _pii_body()
     scanned = docs.select("doc_id", body.alias("__body"))
     counts = pii_counts(F.col("__body"))
     n_red = counts["email"] + counts["url"] + counts["phone"]
@@ -2187,6 +2183,20 @@ def q_media_stats_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _media_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The image/video attachments: (media_id, kind) for a fixed
+    doc_id sample."""
+    (docs,) = _t(spark, sf_dir, "documents")
+    return docs.filter(
+        (F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 4 != 1)
+    ).select(
+        F.col("doc_id").alias("media_id"),
+        F.when(F.col("doc_id") % 2 == 0, F.lit("image"))
+        .otherwise(F.lit("video"))
+        .alias("kind"),
+    )
+
+
 def q_media_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL decode -> integer area-average RESIZE: every image/video
     attachment becomes a fixed 4x4 RGB thumbnail (operators/thumbs.py
@@ -2199,15 +2209,7 @@ def q_media_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linkmerce_spark.operators.multimodal import synthesize_media
     from linkmerce_spark.operators.thumbs import extract_thumbnails
 
-    (docs,) = _t(spark, sf_dir, "documents")
-    media = docs.filter(
-        (F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 4 != 1)
-    ).select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("image"))
-        .otherwise(F.lit("video"))
-        .alias("kind"),
-    )
+    media = _media_sample(spark, sf_dir)
     th = extract_thumbnails(synthesize_media(media))
     return th.select(
         "media_id",
@@ -2240,15 +2242,7 @@ def q_media_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linkmerce_spark.operators.multimodal import synthesize_media
     from linkmerce_spark.operators.thumbs import extract_thumbnails
 
-    (docs,) = _t(spark, sf_dir, "documents")
-    media = docs.filter(
-        (F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 4 != 1)
-    ).select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("image"))
-        .otherwise(F.lit("video"))
-        .alias("kind"),
-    )
+    media = _media_sample(spark, sf_dir)
     th = (
         extract_thumbnails(synthesize_media(media))
         .where(F.col("thumb").isNotNull())
@@ -2516,19 +2510,23 @@ def q_order_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP subtotals over the region/nation hierarchy — beyond the
-    reference's surface (it has no grouping sets), standard warehouse
-    capability at scale (one pass, partial-aggregated)."""
+def _orders_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders joined through customer and nation to region."""
     orders, cust, nation, region = _t(
         spark, sf_dir, "orders", "customer", "nation", "region"
     )
-    j = (
+    return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    return j.rollup("r_name", "n_name").agg(
+
+
+def q_sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ROLLUP subtotals over the region/nation hierarchy — beyond the
+    reference's surface (it has no grouping sets), standard warehouse
+    capability at scale (one pass, partial-aggregated)."""
+    return _orders_by_region(spark, sf_dir).rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("n_orders"),
         _dsum("o_totalprice").alias("total_value"),
     )
@@ -4811,6 +4809,23 @@ def _stock_qty_inputs(spark: SparkSession, sf_dir: str):
     return eco, cj, rfm
 
 
+def _stock_time_feeds(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """Three channel feeds of batch ``updated_at`` timestamps."""
+    (orders,) = _t(spark, sf_dir, "orders")
+    ok = F.col("o_orderkey")
+
+    def _feed(mod: int) -> DataFrame:
+        secs = (ok % 86400).cast("int")
+        return orders.filter(ok % 3 == mod).select(
+            (
+                F.col("o_orderdate").cast("date").cast("timestamp")
+                + F.make_interval(secs=secs)
+            ).alias("updated_at"),
+        )
+
+    return [_feed(0), _feed(1), _feed(2)]
+
+
 def q_stock_qty_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """core__stock_qty_batch (marts/stock): DISTINCT ON sku relation,
     three channel feeds re-keyed to ecount codes, UNION ALL + the
@@ -4832,20 +4847,8 @@ def q_stock_time_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ymd, batch) (dbt core__stock_time_batch.sql:17-70)."""
     from linkmerce_spark.marts.stock import stock_time_batch
 
-    (orders,) = _t(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-
-    def _feed(mod: int) -> DataFrame:
-        secs = (ok % 86400).cast("int")
-        return orders.filter(ok % 3 == mod).select(
-            (
-                F.col("o_orderdate").cast("date").cast("timestamp")
-                + F.make_interval(secs=secs)
-            ).alias("updated_at"),
-        )
-
     return stock_time_batch(
-        _feed(0), _feed(1), _feed(2), "1996-01-01", "1996-03-31"
+        *_stock_time_feeds(spark, sf_dir), "1996-01-01", "1996-03-31"
     )
 
 
@@ -5113,8 +5116,6 @@ def q_google_ad_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linkmerce_spark.marts.masters import (
         GOOGLE_AD_TYPES,
         GOOGLE_ADGROUP_TYPES,
-        GOOGLE_BIDDING_STRATEGIES,
-        GOOGLE_CAMPAIGN_TYPES,
         GOOGLE_STATUSES,
         google_ad_master,
     )
@@ -5137,27 +5138,6 @@ def q_google_ad_master(spark: SparkSession, sf_dir: str) -> DataFrame:
         (ok % 100).cast("long").alias("click_count_30d"),
         ((ok % 90) * 10).cast("long").alias("ad_cost_30d"),
     )
-    campaign = spark.range(0, 12, 1, 1).select(
-        F.concat(F.lit("gc"), F.col("id").cast("string")).alias("campaign_id"),
-        F.concat(F.lit("g campaign "), F.col("id").cast("string")).alias(
-            "campaign_name"
-        ),
-        F.element_at(
-            F.array(*[F.lit(c) for _, c, _ in GOOGLE_CAMPAIGN_TYPES]),
-            (F.col("id") % 14 + 1).cast("int"),
-        ).alias("campaign_type"),
-        F.element_at(
-            F.array(*[F.lit(c) for _, c, _ in GOOGLE_BIDDING_STRATEGIES[:8]]),
-            (F.col("id") % 8 + 1).cast("int"),
-        ).alias("bidding_strategy"),
-        F.element_at(
-            F.array(*[F.lit(c) for _, c, _ in GOOGLE_STATUSES[:3]]),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("campaign_status"),
-        F.make_date(F.lit(2024), (F.col("id") % 12 + 1).cast("int"), F.lit(1)).alias(
-            "created_at"
-        ),
-    )
     adgroup = spark.range(0, 24, 1, 1).select(
         F.concat(F.lit("gg"), F.col("id").cast("string")).alias("adgroup_id"),
         F.concat(F.lit("g adgroup "), F.col("id").cast("string")).alias(
@@ -5172,11 +5152,6 @@ def q_google_ad_master(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("id") % 3 + 1).cast("int"),
         ).alias("adgroup_status"),
     )
-    account = values_df(
-        spark,
-        [(0, "google-a", 1), (1, "google-b", 2), (2, "google-c", None)],
-        "customer_id int, account_name string, account_seq int",
-    )
     rel_rows = []
     for i in range(0, 12, 2):
         rel_rows.append(("gc" + str(i), 0, "100001,100002"))
@@ -5189,7 +5164,9 @@ def q_google_ad_master(spark: SparkSession, sf_dir: str) -> DataFrame:
         rel_rows,
         "ad_id string, ad_level int, bundle_product_ids string",
     )
-    return google_ad_master(ad, adgroup, campaign, account, relation)
+    return google_ad_master(
+        ad, adgroup, _google_campaign_dim(spark), _google_account(spark), relation
+    )
 
 
 # ------------------------------------------------- core masters + CJ pair
@@ -6492,11 +6469,11 @@ def q_rfm_stock_qty_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rfm_order_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """coupang_rfm__order_count (marts/total_order): rocket pre-agg,
-    bundle COALESCE with the 200000 catch-all, 9-prefix promotion +
-    LEAST(status,3), order-count rollup
+    """coupang_rfm__order_count (marts/orders) over a date window:
+    rocket pre-agg, bundle COALESCE with the 200000 catch-all, 9-prefix
+    promotion + LEAST(status,3), order-count rollup
     (dbt coupang_rfm__order_count.sql:17-79)."""
-    from linkmerce_spark.marts.total_order import rfm_order_count
+    from linkmerce_spark.marts.orders import coupang_rfm_order_count
 
     (orders,) = _t(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
@@ -6511,11 +6488,16 @@ def q_rfm_order_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         (k % 4).alias("order_quantity"),
         F.col("o_orderdate").cast("date").alias("sales_date"),
     )
+    # Window the feed before the pre-rollup; the rollup's MAX of
+    # in-range dates is in range, so no filter is needed after it.
+    in_range = F.col("sales_date").between(
+        F.lit("1996-01-01").cast("date"), F.lit("1996-06-30").cast("date")
+    )
     rel = values_df(spark, RFM_OC_REL, "option_id string, bundle_product_ids string")
     vendor = values_df(
         spark, RFM_OC_VENDORS, "vendor_id string, bundle_brand_ids string"
     )
-    return rfm_order_count(sales, rel, vendor, "1996-01-01", "1996-06-30")
+    return coupang_rfm_order_count(sales.filter(in_range), rel, vendor)
 
 
 def q_stock_time_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6525,19 +6507,9 @@ def q_stock_time_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dbt analytics__stock_time_ds.sql:16-83)."""
     from linkmerce_spark.marts.stock import stock_time_batch, stock_time_ds
 
-    (orders,) = _t(spark, sf_dir, "orders")
-    ok = F.col("o_orderkey")
-
-    def _feed(mod: int) -> DataFrame:
-        secs = (ok % 86400).cast("int")
-        return orders.filter(ok % 3 == mod).select(
-            (
-                F.col("o_orderdate").cast("date").cast("timestamp")
-                + F.make_interval(secs=secs)
-            ).alias("updated_at"),
-        )
-
-    tb = stock_time_batch(_feed(0), _feed(1), _feed(2), "1996-01-01", "1996-03-31")
+    tb = stock_time_batch(
+        *_stock_time_feeds(spark, sf_dir), "1996-01-01", "1996-03-31"
+    )
     return stock_time_ds(tb, "1996-02-15", 99, today="1996-04-01")
 
 
@@ -6943,6 +6915,26 @@ def q_asof_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _priority_regimes(orders: DataFrame) -> DataFrame:
+    """Each customer's order priorities as a changelog, built into the
+    type-2 regime table (same-day ties: highest o_orderkey wins)."""
+    from linkmerce_spark.operators.scd2 import scd2_from_changelog
+
+    changelog = orders.select(
+        "o_custkey",
+        F.col("o_orderdate").cast("date").alias("changed_at"),
+        "o_orderpriority",
+        "o_orderkey",
+    )
+    return scd2_from_changelog(
+        changelog,
+        keys=["o_custkey"],
+        ts="changed_at",
+        attrs=["o_orderpriority"],
+        tiebreak="o_orderkey",
+    )
+
+
 def q_scd2_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 dimension built from a changelog (operators/scd2).
 
@@ -6952,22 +6944,8 @@ def q_scd2_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate changes resolve deterministically (highest o_orderkey
     wins); consecutive identical priorities collapse into one regime.
     """
-    from linkmerce_spark.operators.scd2 import scd2_from_changelog
-
     (orders,) = _t(spark, sf_dir, "orders")
-    changelog = orders.select(
-        "o_custkey",
-        F.col("o_orderdate").cast("date").alias("changed_at"),
-        "o_orderpriority",
-        "o_orderkey",
-    )
-    dim = scd2_from_changelog(
-        changelog,
-        keys=["o_custkey"],
-        ts="changed_at",
-        attrs=["o_orderpriority"],
-        tiebreak="o_orderkey",
-    )
+    dim = _priority_regimes(orders)
     return dim.select(
         "o_custkey",
         "o_orderpriority",
@@ -7307,22 +7285,9 @@ def q_scd2_effective_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     effective-dated relation in the reference's dbt models.
     """
     from linkmerce_spark.operators.asofjoin import asof_join
-    from linkmerce_spark.operators.scd2 import scd2_from_changelog
 
     orders, li = _t(spark, sf_dir, "orders", "lineitem")
-    changelog = orders.select(
-        "o_custkey",
-        F.col("o_orderdate").cast("date").alias("changed_at"),
-        "o_orderpriority",
-        "o_orderkey",
-    )
-    dim = scd2_from_changelog(
-        changelog,
-        keys=["o_custkey"],
-        ts="changed_at",
-        attrs=["o_orderpriority"],
-        tiebreak="o_orderkey",
-    )
+    dim = _priority_regimes(orders)
     facts = (
         li.select(
             "l_orderkey", F.col("l_shipdate").cast("date").alias("ship_d"), "l_quantity"
@@ -7362,15 +7327,7 @@ def q_cube_sales_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``grouping_id`` separates real NULL group values from subtotal
     rows (both engines use the standard SQL bitmask convention).
     One aggregation pass, partial-aggregated map-side."""
-    orders, cust, nation, region = _t(
-        spark, sf_dir, "orders", "customer", "nation", "region"
-    )
-    j = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return j.cube("r_name", "o_orderpriority").agg(
+    return _orders_by_region(spark, sf_dir).cube("r_name", "o_orderpriority").agg(
         F.grouping_id().cast("int").alias("gid"),
         F.count(F.lit(1)).alias("n_orders"),
         _dsum("o_totalprice").alias("total_value"),

@@ -143,7 +143,14 @@ def write_merge(
         # the merge to an append and drops the matched-update semantics.
         if not _is_path_not_found(e):
             raise
-        write_append(df, path, partition_by, keys)
+        if not_matched == "do_nothing":
+            # No new key is inserted, so the first write creates the
+            # target empty — unpartitioned, because an empty partitioned
+            # write leaves no file to read the schema back from. The
+            # next merge rewrites the whole target, partitioned.
+            write_append(df.limit(0), path)
+        else:
+            write_append(df, path, partition_by, keys)
         return
     merged = merge_frames(target, df, keys, matched, not_matched)
     staged = merged.localCheckpoint(eager=True)  # break lineage off the files being replaced

@@ -19,7 +19,8 @@ from linkmerce_spark.plans import plan_shape
 _VERBS = ["replace", "ignore", "greatest", "least", "source_first", "target_first"]
 
 _val = st.one_of(st.none(), st.integers(min_value=-50, max_value=50))
-_row = st.tuples(st.integers(min_value=0, max_value=5), _val, _val)  # (key, a, b)
+_key = st.one_of(st.none(), st.integers(min_value=0, max_value=5))
+_row = st.tuples(_key, _val, _val)  # (key, a, b)
 _rows = st.lists(_row, min_size=0, max_size=8)
 
 

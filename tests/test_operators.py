@@ -383,6 +383,23 @@ def test_merge_absent_source_column_keeps_target_values(spark):
     assert out[3] == (33, None)       # inserted row has no b
 
 
+def test_merge_rejects_unknown_not_matched(spark):
+    """Any not_matched other than insert_all / do_nothing is an error
+    in both merge forms, not a silent drop of every new key."""
+    import pytest
+
+    from linkmerce_spark.operators.merge import merge_deduped
+
+    target = spark.createDataFrame([(1, 10)], "k long, a long")
+    source = spark.createDataFrame([(2, 20)], "k long, a long")
+    for merge in (
+        lambda: merge_frames(target, source, ["k"], not_matched="insert"),
+        lambda: merge_deduped(target, source, ["k"], ["a"], not_matched="insert"),
+    ):
+        with pytest.raises(ValueError, match="insert_all"):
+            merge()
+
+
 def test_allocation_null_weight_conserves_total(spark):
     """NULL weights count as 0; the group still sums exactly to total
     even when the NULL-weight row sorts first (the residue row)."""

@@ -65,6 +65,22 @@ def test_write_merge_upsert(spark, tmp_path):
     assert got == {1: (10, "a"), 2: (20, "b2"), 3: (30, "c")}
 
 
+@pytest.mark.parametrize("partition_by", [(), ("p",)])
+def test_write_merge_first_write_do_nothing_inserts_nothing(spark, tmp_path, partition_by):
+    """not_matched='do_nothing' inserts no new key, also when the target
+    does not exist yet: the first write creates it empty, and later
+    merges read it back."""
+    path = str(tmp_path / "t")
+    src = spark.createDataFrame([(1, "a", "x"), (2, "b", "y")], "k int, v string, p string")
+    write_merge(src, path, keys=["k"], not_matched="do_nothing", partition_by=partition_by)
+    got = _read(spark, path)
+    assert got.count() == 0 and sorted(got.columns) == ["k", "p", "v"]
+    write_merge(src, path, keys=["k"], partition_by=partition_by)
+    assert sorted(tuple(r) for r in _read(spark, path).select("k", "v", "p").collect()) == [
+        (1, "a", "x"), (2, "b", "y")
+    ]
+
+
 def test_write_merge_propagates_non_missing_read_errors(spark, tmp_path):
     """A corrupt/unreadable target must raise, not silently append.
 

@@ -5,6 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from linkmerce_spark.marts.smartstore import (
+    _first_token,
+    _gift_status,
+    _sku_mult,
     delivery_tiers,
     max_delivery_fee,
     sku_quantity,
@@ -41,6 +44,32 @@ def test_sku_quantity_regex_guard(spark):
     )
     got = [r[0] for r in df.select(sku_quantity("bundle_product", "order_quantity")).collect()]
     assert got == [6, 2, 2, 7]
+
+
+def test_bundle_format_helpers(spark):
+    # bundle, status -> first ':' token, first '-' token, ':N' multiplier,
+    # gift status (promoted to 6), gift status over LEAST(status, 3)
+    table = [
+        ("p1:3", 0, "p1", "p1:3", 3, 0, 0),
+        ("p1-0002:2", 0, "p1-0002", "p1", 2, 0, 0),
+        ("p3:x9", 1, "p3", "p3:x9", 1, 1, 1),
+        ("p2", 5, "p2", "p2", 1, 5, 3),
+        ("9001:2", 0, "9001", "9001:2", 2, 6, 6),
+        ("9001", 2, "9001", "9001", 1, 2, 2),
+    ]
+    df = spark.createDataFrame(
+        [row[:2] for row in table], "bundle string, order_status int"
+    )
+    got = df.select(
+        "bundle",
+        "order_status",
+        _first_token("bundle", ":"),
+        _first_token(F.col("bundle"), "-"),
+        _sku_mult("bundle"),
+        _gift_status("bundle", 6),
+        _gift_status("bundle", 6, F.least("order_status", F.lit(3))),
+    ).collect()
+    assert sorted(tuple(r) for r in got) == sorted(table)
 
 
 def test_split_preserves_totals_with_remainder_on_first(spark):
