@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from linkmerce_spark import memo
 from linkmerce_spark.frames import values_df
 from linkmerce_spark.marts.smartstore import _first_token, _sku_mult
 
@@ -192,7 +193,7 @@ def smartstore_option_master(
     # master chain runs a single time instead of per-subtree.  Eager:
     # broadcast jobs launch concurrently, so a lazy checkpoint would
     # race and both subtrees would still compute the full chain.
-    product_master = product_master.localCheckpoint(eager=True)
+    product_master = memo.checkpoint(product_master)
     prd = product_master.select(
         F.col("product_id").alias("__p_pid"), F.col("sort_key").alias("__p_sort")
     )
@@ -346,7 +347,7 @@ def sabangnet_product_master(
         # referenced twice below (scale agg + the broadcast join):
         # checkpoint so the explode->window chain runs once (eager —
         # concurrent broadcast jobs would race a lazy checkpoint).
-        .localCheckpoint(eager=True)
+        .transform(memo.checkpoint)
     )
     scale = broadcast(
         primary.agg(
@@ -434,21 +435,15 @@ def sabangnet_option_master(
     product_master: DataFrame,
     core_item: DataFrame,
     core_product_master: DataFrame,
-    materialized: bool = False,
 ) -> DataFrame:
     """sabangnet__option_master.sql:10-100 on Spark frames.
 
-    ``materialized=True`` declares that ``product_master`` is already
-    a materialized frame (a dbt-style built upstream, e.g. via
-    ``frames.shared_frame``) — skip the defensive checkpoint."""
-    # the (expensive) sabangnet product-master chain feeds both the
-    # broadcast attribute lookup and the all-9s fallback agg — run it
-    # once (round-4 verdict perf item: shared master chain). The
-    # smaller core-product-master subtree is deliberately NOT
+    ``product_master`` must be a materialized frame (a dbt-style built
+    upstream, ``frames.shared_frame``): it feeds both the broadcast
+    attribute lookup and the all-9s fallback agg."""
+    # The smaller core-product-master subtree is deliberately NOT
     # checkpointed: an A/B showed the extra materialization job costs
     # as much as the duplicate-subtree compute it saves at bench scale.
-    if not materialized:
-        product_master = product_master.localCheckpoint(eager=True)
     cpm = broadcast(
         core_product_master.select(
             F.col("product_id").alias("__c_pid"),

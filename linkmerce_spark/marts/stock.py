@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from linkmerce_spark import memo
 from linkmerce_spark.frames import load_star
 from linkmerce_spark.operators.rownum import global_row_number
 
@@ -448,7 +449,7 @@ def stock_cost_mom(
         F.col("ymd").between(
             F.lit(lb_start).cast("date"), F.lit(ds_end).cast("date")
         )
-    ).localCheckpoint(eager=True)
+    ).transform(memo.checkpoint)
     month_max = broadcast(
         qb.groupBy(F.trunc("ymd", "month").alias("__mm"))
         .agg(F.max("ymd").alias("max_month_ymd"))
@@ -480,7 +481,7 @@ def stock_cost_mom(
         .withColumn("order_ym", F.trunc("stock_ymd", "month"))
         # monthly feeds three consumers (the fact union, the fallback
         # anti-join, and the month_dates broadcast) — materialize once.
-        .localCheckpoint(eager=True)
+        .transform(memo.checkpoint)
     )
 
     # Fallback: sales months without a stock row for that product.
@@ -591,7 +592,7 @@ def with_empty_fallback(primary: DataFrame, fallback: DataFrame) -> DataFrame:
     plan instead of being fully executed and then filtered away — the
     same data-dependent plan choice AQE makes, done one level up.
     """
-    primary = primary.localCheckpoint(eager=True)
+    primary = memo.checkpoint(primary)
     if primary.limit(1).count() > 0:
         # Shape through the same unionByName (with an empty fallback
         # slice) as the empty branch, so the output schema — type

@@ -231,7 +231,7 @@ def bpe_train_full(
       lambda references the joined columns), so the driver runs zero
       data-plane collects — it only schedules one materialization job
       per round;
-    - the vocabulary is localCheckpoint'ed per round — required here
+    - the vocabulary is checkpointed per round — required here
       not just as the Pregel lineage discipline but for correctness of
       cost: ``vocab_{k+1}`` references ``vocab_k`` TWICE (pair counts
       + re-segmentation), so an unmaterialized loop doubles the plan
@@ -274,7 +274,7 @@ def _bpe_train(
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wc"))
         .select(_char_syms("tok").alias("sym"), "wc")
-        .localCheckpoint(eager=True)
+        .transform(memo.checkpoint)
     )
     n_vocab = vocab.count()
     if n_vocab <= local_loop_threshold:
@@ -297,7 +297,7 @@ def _bpe_train(
         shuffle_width = 200
     parts = max(1, min(shuffle_width, n_vocab // 100_000 + 1))
     if parts < vocab.rdd.getNumPartitions():
-        vocab = vocab.repartition(parts).localCheckpoint(eager=True)
+        vocab = memo.checkpoint(vocab.repartition(parts))
     bests: list[DataFrame] = []
     # Scope AQE OFF for the loop (restored in finally): every round is
     # a fresh tiny job over the materialized vocabulary, and AQE's
@@ -338,7 +338,10 @@ def _bpe_train(
             vocab = (
                 vocab.join(F.broadcast(best), F.lit(True), "left")
                 .select(merged_sym.alias("sym"), "wc")
-                .localCheckpoint(eager=True)
+                # kept until memo.clear, not one round: ``merges`` is a
+                # lazy union of every round's ``best``, which reads the
+                # vocab of its own round
+                .transform(memo.checkpoint)
             )
             bests.append(
                 best.select(

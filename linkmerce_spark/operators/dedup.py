@@ -26,6 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from linkmerce_spark import memo
 from linkmerce_spark.functions.text import fingerprint
 
 __all__ = [
@@ -130,10 +131,9 @@ def connected_components(
     rounds ~ 2-4; ``max_iterations`` bounds adversarial chains.
     """
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
+    edges = memo.checkpoint(  # re-read every round; build once
         fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)  # re-read every round; build once
     )
     # Right-size the iteration parallelism to the graph, not the
     # upstream scan: the pair graph is orders of magnitude smaller than
@@ -148,7 +148,8 @@ def connected_components(
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     parts = max(1, min(int(prev_shuffle), n_edges // 100_000 + 1))
     if parts < edges.rdd.getNumPartitions():
-        edges = edges.repartition(parts, "src").localCheckpoint(eager=True)
+        wide, edges = edges, memo.checkpoint(edges.repartition(parts, "src"))
+        memo.release(wide)
     # The per-round checkpoint materialization path does not get AQE's
     # post-shuffle coalescing, so every exchange inside the loop would
     # keep the session-wide reducer count regardless of graph size.
@@ -157,11 +158,10 @@ def connected_components(
     # this is a no-op.
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        labels = (
+        labels = memo.checkpoint(
             edges.select(F.col("src").alias("id"))
             .distinct()
             .withColumn("label", F.col("id"))
-            .localCheckpoint(eager=True)
         )
         for _ in range(max_iterations):
             prop = (
@@ -173,20 +173,20 @@ def connected_components(
             # the change flag rides ALONG the update so the convergence
             # probe is a filter over the materialized checkpoint — no
             # extra join/shuffle per round.
-            nxt = (
+            prev, labels = labels, memo.checkpoint(
                 labels.join(prop, labels.id == F.col("__pid"), "left")
                 .select(
                     "id",
                     new_label.alias("label"),
                     (new_label != F.col("label")).alias("__changed"),
                 )
-                .localCheckpoint(eager=True)
             )
-            labels = nxt.select("id", "label")
-            if nxt.filter(F.col("__changed")).limit(1).count() == 0:
+            memo.release(prev)
+            if labels.filter(F.col("__changed")).limit(1).count() == 0:
                 break
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    memo.release(edges)
     return labels.select(F.col("id"), F.col("label").alias("component"))
 
 

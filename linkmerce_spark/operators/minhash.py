@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark import memo
 from linkmerce_spark.functions.text import shingles_from_tokens, word_tokens
 
 __all__ = [
@@ -107,13 +108,10 @@ def minhash_signature(
     # No size(shingles) filter: shingle-less docs vanish in the inner
     # join with the exploded aggregate below, and an explicit predicate
     # would be pushed down with the full shingle expression inlined.
-    # The persist is load-bearing for the same reason: explode makes
-    # InferFiltersFromGenerate synthesize size(shingles)>0 and push it
-    # into the scan with the whole interpreted shingle pipeline inlined
-    # (evaluated per row on the narrow scan stage); the cache boundary
-    # stops that, and the frame feeds three consumers anyway (band
-    # explode + both verify joins).
-    sh = _with_shingles(_fanout(df), text_col, shingle_words, "shingles").persist()
+    # A lazy checkpoint keeps explode's inferred size(shingles)>0 out of
+    # the scan too, and the first of its three consumers materializes it.
+    sh = _with_shingles(_fanout(df), text_col, shingle_words, "shingles")
+    sh = memo.checkpoint(sh, eager=False)
     # Explode + hash-aggregate instead of array_min(transform(...)):
     # higher-order array functions evaluate interpreted, while the
     # exploded shape runs md5 + the k affine mins inside whole-stage
@@ -145,7 +143,7 @@ def minhash_sigs(
 
     This is the right input for band-only consumers (LSH banding,
     incremental index matching) that never verify Jaccard — it saves
-    the shingle join and the shingle-frame persist that exist solely
+    the shingle join and the shingle-frame checkpoint that exist solely
     for the verify step. One shuffle total (the per-doc hash-min
     aggregation); shingle-less docs are absent, as in
     ``minhash_signature``.
@@ -208,11 +206,11 @@ def lsh_candidate_pairs(
     banded = signed.select(
         F.col(id_col), F.explode(F.array(*band_entries)).alias("b")
     ).select(id_col, "b.band_id", "b.band_key")
-    # The bucket self-join consumes `banded` twice; without a persist the
-    # whole signature lineage (k hash mins per shingle) executes once per
-    # branch. The banded projection is tiny (id + 2 keys) regardless of
-    # corpus size, so this is safe at scale.
-    banded = banded.persist()
+    # The bucket self-join consumes `banded` twice; the lazy checkpoint
+    # runs the signature lineage (k hash mins per shingle) once, not once
+    # per branch. The banded projection is tiny (id + 2 keys) regardless
+    # of corpus size, so this is safe at scale.
+    banded = memo.checkpoint(banded, eager=False)
     if max_bucket is not None:
         counts = banded.groupBy("band_id", "band_key").count()
         banded = banded.join(
@@ -257,7 +255,7 @@ def minhash_near_dups(
     corpus for other purposes (e.g. fuzzy decontamination) sign once
     and share. Must carry ``id_col``, ``sig`` and ``shingles``.
     """
-    # minhash_signature persists the expensive shingle frame internally;
+    # minhash_signature checkpoints the expensive shingle frame internally;
     # downstream consumers recompute only the cheap join/agg on top.
     signed = (
         presigned

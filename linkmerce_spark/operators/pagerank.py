@@ -10,7 +10,7 @@ implements the power-iteration form with a FIXED iteration count.
   destination -> blend with the teleport term], so the whole
   ``n_iter``-round computation is ONE lazy job with a linear chain of
   ``n_iter`` joins. Build time runs only the bounded setup (edge-list
-  localCheckpoint + the |V| count that folds 1/n into literals); the
+  checkpoint + the |V| count that folds 1/n into literals); the
   iteration itself executes at first action. Per-iteration cost at
   scale is one shuffle over the EDGE list (nodes-sized agg
   piggybacks) — the Pregel cost model without the Pregel machinery,
@@ -32,6 +32,8 @@ with the authority signal those ops consume.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from linkmerce_spark import memo
 
 __all__ = [
     "pagerank",
@@ -92,17 +94,13 @@ def pagerank(
         .over(Window.partitionBy(src))
         .cast("bigint")
         .alias("__out_w"),
-    ).localCheckpoint(eager=True)  # re-read by every iteration
+    ).transform(memo.checkpoint)  # re-read by every iteration
     # Nodes-sized (src, out_w) for the final output join — read off
     # the checkpoint (already src-partitioned: zero-exchange agg).
     out_w = e.groupBy(F.col("__esrc").alias("__src")).agg(
         F.max("__out_w").alias("__out_w")
     )
-    verts = (
-        nodes.select(F.col(node).alias("__node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = memo.checkpoint(nodes.select(F.col(node).alias("__node")).distinct())
     # |V| reaches the driver as ONE scalar (the sanctioned k-sized
     # collect) — folding 1/n into literals keeps every iteration free
     # of the 1-row crossJoin a column-borne n would need, and the

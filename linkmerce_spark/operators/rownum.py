@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from linkmerce_spark import memo
+
 __all__ = ["global_row_number"]
 
 _PID = "__grn_pid"
@@ -58,12 +60,9 @@ def global_row_number(
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # `ranged` feeds two jobs (the offsets collect and the final join).
-    # localCheckpoint MATERIALIZES the partitions and truncates
-    # lineage, so monotonically_increasing_id() is assigned exactly once:
-    # unlike persist(), a cache eviction cannot silently recompute (and
-    # renumber) partitions between the two jobs — block loss becomes a
-    # loud failure instead of wrong row numbers. Blocks are freed by the
-    # ContextCleaner once the returned DataFrame is unreferenced.
+    # A checkpoint, not persist(): monotonically_increasing_id() is
+    # assigned exactly once, since a lost block fails loudly where an
+    # evicted cache block would recompute (and renumber) a partition.
     # eager=False: the stats collect below is the first (sequential)
     # action, so materialization folds into it — one job instead of
     # two, with the identical pinning guarantee (no concurrent
@@ -73,7 +72,7 @@ def global_row_number(
         .sortWithinPartitions(*cols)
         .withColumn(_PID, F.spark_partition_id())
         .withColumn(_MID, F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
+        .transform(memo.checkpoint, eager=False)
     )
     stats = (
         ranged.groupBy(_PID)

@@ -400,20 +400,10 @@ def _ivf_train(df, id_col, vec_col, dim, k, quant, oversample) -> list[list[int]
     # Three passes read the quantized vectors (seed pick, weighting,
     # Lloyd stats) — persist once so the parquet scan + quantize run a
     # single time per training. Training is one job on a cluster; the
-    # cache is released before returning.
+    # cache is released before returning, also when a step raises.
     from linkmerce_spark.shipping import ensure_shipped
 
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_shipped(active)
-    qdf = df.select(F.col(id_col).alias("__id"), q.alias("__q")).persist()
-
-    cands = [
-        [int(v) for v in r["__q"]]
-        for r in qdf.orderBy("__id").limit(m).collect()
-    ]
+    ensure_shipped(df.sparkSession)
 
     def _nearest(frame, cents):
         # Arrow kernel over the pre-quantized __q arrays (quant=None):
@@ -421,24 +411,32 @@ def _ivf_train(df, id_col, vec_col, dim, k, quant, oversample) -> list[list[int]
         nn = _nearest_centroid_kernel(cents, None)
         return frame.withColumn("cell", nn(F.col("__q")).getField("cell"))
 
-    wts = {
-        r["cell"]: r["cnt"]
-        for r in _nearest(qdf, cands)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    order = sorted(range(1, m + 1), key=lambda c: (-wts.get(c, 0), c))[:k]
-    seeds = [cands[c - 1] for c in order]
+    qdf = df.select(F.col(id_col).alias("__id"), q.alias("__q")).persist()
+    try:
+        cands = [
+            [int(v) for v in r["__q"]]
+            for r in qdf.orderBy("__id").limit(m).collect()
+        ]
 
-    stats = (
-        _nearest(qdf, seeds)
-        .select("cell", F.posexplode("__q").alias("pos", "val"))
-        .groupBy("cell", "pos")
-        .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
-    qdf.unpersist()
+        wts = {
+            r["cell"]: r["cnt"]
+            for r in _nearest(qdf, cands)
+            .groupBy("cell")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+        order = sorted(range(1, m + 1), key=lambda c: (-wts.get(c, 0), c))[:k]
+        seeds = [cands[c - 1] for c in order]
+
+        stats = (
+            _nearest(qdf, seeds)
+            .select("cell", F.posexplode("__q").alias("pos", "val"))
+            .groupBy("cell", "pos")
+            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
+            .collect()
+        )
+    finally:
+        qdf.unpersist()
     by_cell: dict[int, dict[int, int]] = {}
     for r in stats:
         # Python // is floor division — identical to the SQL

@@ -916,7 +916,7 @@ def q_doc_clean_select_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives), redaction replaces PII with typed placeholders, and
     DSIR scores the redacted non-English pool against the redacted
     English target, keeping the top 40. One twin gates the full
-    chain; the rewritten+redacted frame is localCheckpoint'ed at the
+    chain; the rewritten+redacted frame is checkpointed at the
     diamond (it feeds the DSIR target, the candidate pool, and the
     output attributes)."""
     return clean_select_stages(spark, sf_dir)[1]
@@ -975,7 +975,7 @@ def clean_select_stages(spark: SparkSession, sf_dir: str):
             "kept_words",
             pii_redact(F.col("clean_text")).alias("safe_text"),
         )
-        .localCheckpoint()
+        .transform(memo.checkpoint)
     )
     target = safe.filter(F.col("lang") == "en")
     cands = safe.filter(F.col("lang") != "en")
@@ -1477,14 +1477,13 @@ def q_doc_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``clean``/``corpus``/``surv`` are the pipeline's diamond nodes —
     # each feeds 3+ downstream stages whose references would otherwise
     # re-expand (and re-analyze) the whole upstream subtree per use.
-    # localCheckpoint truncates lineage to a leaf there (the stock-mart
-    # pattern; bench.py's memo-clearing rule makes every timed pass
-    # redo this work). At 100 TB these are exactly the three points a
-    # real pipeline would materialize between stages.
+    # A checkpoint truncates lineage to a leaf there (the stock-mart
+    # pattern). At 100 TB these are exactly the three points a real
+    # pipeline would materialize between stages.
     rew = line_dedup_rewrite(exact, "text", "doc_id", seg_words=6, min_count=2)
     clean = exact.select("doc_id", "source").join(
         rew.select("doc_id", "text_clean"), "doc_id"
-    ).localCheckpoint()
+    ).transform(memo.checkpoint)
 
     # [5] fuzzy self near-dup on the REWRITTEN text: drop the higher id
     # of every verified near-dup pair (greedy keep-lowest-id). The
@@ -1503,7 +1502,7 @@ def q_doc_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id % 97 == 0 — external eval data is never gated/rewritten);
     # bench docs themselves leave the training corpus.
     bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = uniq.filter(F.col("doc_id") % 97 != 0).localCheckpoint()
+    corpus = memo.checkpoint(uniq.filter(F.col("doc_id") % 97 != 0))
     ex = decontaminate(
         corpus, ngram_hashes(bench, "text", n=6), "text_clean", "doc_id", n=6
     )
@@ -1519,7 +1518,7 @@ def q_doc_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .join(fz.filter(F.col("is_dup") == 0).select("doc_id"), "doc_id")
     )
-    surv = corpus.join(ok_ids, "doc_id", "left_semi").localCheckpoint()
+    surv = memo.checkpoint(corpus.join(ok_ids, "doc_id", "left_semi"))
 
     # [7] domain-mixture resampling: uniform-target weights computed
     # over the survivors, applied as deterministic per-doc keeps
@@ -2264,11 +2263,11 @@ def q_media_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n2") > 0)
         # both self-join sides read this frame: checkpoint so the
         # corpus decodes ONCE (48 ints + 4 longs per media row — tiny
-        # vs the per-file entropy decode it saves). localCheckpoint,
-        # not persist(): the CacheManager matches persisted plans
-        # across catalog passes, which would let a second bench pass
-        # skip the decode (the measurement-integrity rule).
-        .localCheckpoint(eager=True)
+        # vs the per-file entropy decode it saves). A checkpoint, not
+        # persist(): the CacheManager matches persisted plans across
+        # catalog passes, which would let a second bench pass skip the
+        # decode (the measurement-integrity rule).
+        .transform(memo.checkpoint)
     )
     a = th.select(
         F.col("media_id").alias("id_a"),
@@ -6026,7 +6025,6 @@ def q_sabangnet_option_master(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sbn_product_master_built(spark, sf_dir),
         item,
         _core_product_master_built(spark, sf_dir),
-        materialized=True,
     )
 
 

@@ -23,12 +23,14 @@ out-of-range dates before any data is replaced.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from linkmerce_spark import memo
 from linkmerce_spark.operators.dedup import dedupe_keep_first
 from linkmerce_spark.operators.merge import merge_frames
 
@@ -153,11 +155,19 @@ def write_merge(
             write_append(df, path, partition_by, keys)
         return
     merged = merge_frames(target, df, keys, matched, not_matched)
-    staged = merged.localCheckpoint(eager=True)  # break lineage off the files being replaced
-    writer = staged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    _write_staged(merged, path, partition_by)
+
+
+def _write_staged(df: DataFrame, path: str, partition_by: Sequence[str] | None) -> None:
+    """Overwrite ``path`` with ``df``, a frame that reads ``path``."""
+    staged = memo.checkpoint(df)  # break lineage off the files being replaced
+    try:
+        writer = staged.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+    finally:
+        memo.release(staged)
 
 
 def write_bucketed(
@@ -200,28 +210,20 @@ def compact(
     poor-man's Z-order, free at rewrite time.
     """
     df = spark.read.parquet(path)
-    # Portable size probe: sum file sizes via Python (local/DBFS-style
-    # paths; object stores would use the FileSystem API).
-    import os
-
-    size = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                size += os.path.getsize(os.path.join(root, f))
+    size = sum(os.path.getsize(f) for f in _parquet_files(path))
     n_files = max(1, -(-size // (target_mb * 1024 * 1024)))
-    out = df.repartition(n_files, *(partition_by or [])) if partition_by else df.repartition(n_files)
+    out = df.repartition(n_files, *(partition_by or []))
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
-    staged = out.localCheckpoint(eager=True)  # break lineage off the files being replaced
-    writer = staged.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    written = 0
-    for root, _dirs, files in os.walk(path):
-        written += sum(1 for f in files if f.endswith(".parquet"))
-    return written
+    _write_staged(out, path, partition_by)
+    return len(_parquet_files(path))
+
+
+def _parquet_files(path: str) -> list[str]:
+    # Portable listing via Python (local/DBFS-style paths; object
+    # stores would use the FileSystem API).
+    walk = os.walk(path)
+    return [os.path.join(d, f) for d, _, fs in walk for f in fs if f.endswith(".parquet")]
 
 
 def write_in_date_batches(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from linkmerce_spark.operators.allocation import (
@@ -540,3 +541,18 @@ def test_pii_redact_replaces_with_typed_placeholders(spark):
         [(1, got[1])], "doc_id long, body string"
     ).select(pii_redact(F.col("body")).alias("red"))
     assert redacted.collect()[0]["red"] == got[1]
+
+
+def test_ivf_train_releases_its_cache_when_a_step_raises(spark):
+    """More cells than rows makes the seed pick index past the
+    candidates; the quantized-vector cache must not outlive the raise."""
+    from linkmerce_spark.operators.similarity import ivf_train
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(3)], "vec_id long, embedding array<float>"
+    )
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(IndexError):
+        ivf_train(df, "vec_id", "embedding", dim=2, k=5, oversample=1)
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) == before

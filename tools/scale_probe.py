@@ -97,6 +97,10 @@ def main() -> None:
 
     names = sys.argv[1:] or DEFAULT_SET
     spark = get_spark()
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
     base = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
     dirs = {sf: os.path.join(base, sf) for sf in SFS}
     sfs = list(SFS)
@@ -123,12 +127,14 @@ def main() -> None:
                 reruns.append(time.perf_counter() - t0)
             best = sorted(reruns)[1]  # median-of-3
             warm.setdefault(name, {})[sf] = best
-            # Release the query's plan, training results and published
-            # checkpoints: one session probes every (sf, query) pair,
-            # and memo-owned checkpoints would otherwise pile up in it.
+            # Release the query's plan, training results and every
+            # checkpoint its build took: one session probes every
+            # (sf, query) pair, and they would otherwise pile up in it.
+            peak = persisted()
             memo.clear(spark)
             print(
-                f"{sf:8s} {name:32s} cold={cold[name][sf]:7.3f}s warm={best:7.3f}s",
+                f"{sf:8s} {name:32s} cold={cold[name][sf]:7.3f}s warm={best:7.3f}s"
+                f" persisted={peak}->{persisted()}",
                 flush=True,
             )
 
