@@ -60,6 +60,11 @@ def scd2_from_changelog(
         # plans hash(keys, ts) for the dedup and a second fact-sized
         # hash(keys) exchange for the regimes; guide §2.4). The sorts
         # compose too: (keys, ts, tiebreak DESC) prefixes (keys, ts).
+        # On an input ALREADY hash-partitioned by the keys this adds a
+        # redundant shuffle: Spark does not elide a user repartition.
+        # Every caller today reads raw scans, so none pays it; skipping
+        # it needs the input's outputPartitioning, i.e. a plan read in
+        # a runtime module, and no runtime module imports plans/ yet.
         df = df.repartition(*[F.col(k) for k in keys])
         w_dedup = Window.partitionBy(*keys, ts).orderBy(F.col(tiebreak).desc())
         df = (

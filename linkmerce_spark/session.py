@@ -4,8 +4,8 @@ The reference engine pins a session timezone before every connection
 (reference: src/linkmerce/common/load.py:327-332 ``SET TimeZone``); we do
 the same via ``spark.sql.session.timeZone``. Everything else here is
 Spark-first scale hygiene: AQE (runtime re-plan + skew-join splitting),
-Arrow for any pandas exchange, and a shuffle-partition count sized from
-the environment rather than the 200 default.
+Arrow for any pandas exchange, a shuffle-partition count sized from the
+environment, and a codegen cache that compiles each class once per JVM.
 
 Designed for a 1000-executor cluster but testable on ``local[N]``: all
 settings are cluster-neutral (AQE coalescing makes the shuffle-partition
@@ -72,11 +72,11 @@ def get_spark(
         # parallelismFirst (the default) refuses to coalesce a shuffle
         # below the cluster parallelism, so every dim-sized exchange
         # fans out to full width — measured 30%+ of wall time on the
-        # mart catalog at sf0.1. false = respect the 64MB advisory
-        # size: small shuffles collapse to a handful of tasks while a
-        # 100 TB shuffle still gets thousands of partitions. This is
-        # also the setting Spark's own docs recommend for busy
-        # clusters.
+        # mart catalog at sf0.1. false = respect the advisory size (2MB
+        # locally, Spark's 64MB on a cluster; set below): small shuffles
+        # collapse to a handful of tasks while a 100 TB shuffle still
+        # gets thousands of partitions. This is also the setting Spark's
+        # own docs recommend for busy clusters.
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # Arrow for every pandas_udf / mapInPandas / toPandas exchange.
@@ -129,6 +129,19 @@ def get_spark(
         # ones redundant. Spark's own tuning guidance lists this as
         # the first knob for analyzer/optimizer-bound workloads.
         "spark.sql.constraintPropagation.enabled": "false",
+        # Generated classes are cached per JVM, keyed by their source
+        # text; Spark's default keeps 100. One pass of the four
+        # perfbench marts generates ~330 classes (smartstore_sales_daily
+        # alone ~140), so a refresh that re-runs them in a new session
+        # per pass re-compiled all of them with Janino every pass. The
+        # full catalog generates ~2,840 distinct classes over two passes
+        # (2,745 cold); 4096 holds that with ~45% headroom for +18.5 MB
+        # of Metaspace. Measured on 4 cores: warm marts passes compile
+        # 4-20 classes instead of ~335, perfbench marts_refresh
+        # pass_cpu_s 14.1 -> 11.2 s (10/10 pairs; tools/digests/
+        # CODEGEN_CACHE.md). Plans, rows and memos are untouched: every
+        # run still analyzes, plans, generates source and executes.
+        "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     }
