@@ -4,9 +4,10 @@ The reference's universal interchange format is a ``list[dict]`` row
 batch bound into SQL as an UNNEST values-scan (reference:
 src/linkmerce/common/transform.py:817-819 ``expr_rows``;
 src/linkmerce/common/load.py:417-430 ``execute_with_json``). In Spark
-that is simply ``spark.createDataFrame(rows, schema)`` — this module
-keeps that bridge plus the logical-alias table map the reference renders
-into its SQL (``tables: {key: name}``, transform.py:677).
+that is ``from_rows``: the batch handed to the JVM once as an Arrow
+``LocalRelation``. This module keeps that bridge plus the logical-alias
+table map the reference renders into its SQL (``tables: {key: name}``,
+transform.py:677).
 """
 
 from __future__ import annotations
@@ -86,19 +87,113 @@ STAR_TABLES = (
 def from_rows(
     spark: SparkSession,
     rows: Iterable[Mapping[str, Any]],
-    schema: StructType | str | None = None,
+    schema: StructType | str | list[str] | None = None,
 ) -> DataFrame:
-    """Bind a row batch (``list[dict]``) as a relation.
+    """Bind a row batch (``list[dict]`` or tuples) as a relation.
 
     This is the engine's values-scan: the Spark-native equivalent of the
-    reference's ``(SELECT rows.* FROM (SELECT UNNEST($rows)))`` pattern.
-    Always pass an explicit schema in production paths — inference scans
-    the batch twice and widens types unpredictably.
+    reference's ``(SELECT rows.* FROM (SELECT UNNEST($rows)))`` pattern,
+    and the one way driver-held rows enter Spark. Always pass an
+    explicit schema in production paths — inference scans the batch
+    twice and widens types unpredictably. A list of names, as with
+    ``createDataFrame``, infers the types and renames the columns.
+
+    The batch crosses to the JVM once, as an Arrow ``LocalRelation``.
+    ``spark.createDataFrame(rows)`` wraps it in a pickled Python RDD
+    instead, and every evaluation of that (each merge, stage and
+    overwrite that re-reads the batch) reruns ``defaultParallelism``
+    Python-worker tasks to unpickle it. Rows and types read as there:
+    the schema comes from the same PySpark inference and verifier, and
+    each value goes through the same row converter and ``toInternal``
+    (non-string scalars in string fields become text, ``True`` as
+    ``'true'``; naive ``datetime`` values are the process's local time).
+    Decimals take the JVM's reading: rounded half-up to the column's
+    scale, NaN as NULL.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
     rows = list(rows)
-    if schema is not None:
-        return spark.createDataFrame(rows, schema=schema)
-    return spark.createDataFrame(rows)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if isinstance(schema, StructType):
+        verify = _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+        struct = schema
+    else:
+        # createDataFrame's own inference (private: PySpark has no
+        # public one), names applied over the inferred fields.
+        struct = spark._inferSchemaFromList(rows, names=schema)
+        for i, name in enumerate(schema or ()):
+            struct.fields[i].name = name
+            struct.names[i] = name
+    convert = _create_converter(struct)
+    internal = [struct.toInternal(convert(r)) for r in rows]
+    columns = list(zip(*internal)) or [()] * len(struct.fields)
+    arrays = []
+    for f, values in zip(struct.fields, columns):
+        fix = _decimal_reader(f.dataType)
+        arrays.append(
+            pa.array(
+                values if fix is None else [fix(v) for v in values],
+                type=to_arrow_type(f.dataType),
+            )
+        )
+    # What ``createDataFrame(pyarrow.Table)`` does, less its timestamp
+    # localize pass: the timestamps here are UTC instants already, and
+    # on pyarrow < 17 that pass rebuilds a map with nested values
+    # without its null mask, so a NULL map would read as ``{}``.
+    jvm = spark._jvm
+    jiter = spark.sparkContext._serialize_to_jvm(
+        pa.Table.from_arrays(arrays, names=struct.names).to_batches(),
+        ArrowStreamSerializer(),
+        jvm.PythonSQLUtils.readArrowStreamFromFile,
+        jvm.ArrowIteratorServer,
+    )
+    jdf = jvm.PythonSQLUtils.toDataFrame(jiter, struct.json(), spark._jsparkSession)
+    return DataFrame(jdf, spark)
+
+
+def _decimal_reader(dt: Any):
+    """Per-value fix-up for decimal leaves of ``dt`` (``None`` when it
+    has none): the JVM reading of a ``Decimal`` — half-up to the scale,
+    NaN as NULL — where Arrow would refuse a lossy rescale. A value too
+    wide for the column still raises, as it does on the JVM."""
+    from decimal import ROUND_HALF_UP, Context, Decimal
+
+    from pyspark.sql.types import ArrayType, DecimalType, MapType
+
+    if isinstance(dt, DecimalType):
+        quantum = Decimal(1).scaleb(-dt.scale)
+        wide = Context(prec=2 * dt.precision + dt.scale)
+
+        def read(v):
+            if v is None or v.is_nan():
+                return None
+            return v.quantize(quantum, rounding=ROUND_HALF_UP, context=wide)
+
+        return read
+    if isinstance(dt, ArrayType):
+        elem = _decimal_reader(dt.elementType)
+        if elem is None:
+            return None
+        return lambda v: None if v is None else [elem(x) for x in v]
+    if isinstance(dt, MapType):
+        key, val = _decimal_reader(dt.keyType), _decimal_reader(dt.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or (lambda x: x), val or (lambda x: x)
+        return lambda v: None if v is None else {key(k): val(x) for k, x in v.items()}
+    if isinstance(dt, StructType):
+        fields = [_decimal_reader(f.dataType) for f in dt.fields]
+        if all(f is None for f in fields):
+            return None
+        fields = [f or (lambda x: x) for f in fields]
+        return lambda v: None if v is None else tuple(f(x) for f, x in zip(fields, v))
+    return None
 
 
 # Alias kept for call sites that read better with the verb-first name.
@@ -224,14 +319,12 @@ def select_paths(df: DataFrame, schema: Mapping[str, str], extends: Mapping[str,
 def values_df(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFrame:
     """Small literal batch as a JVM-side LocalRelation (SQL ``VALUES``).
 
-    ``createDataFrame`` routes even a 5-row dim through a pickled RDD
-    with ``defaultParallelism`` splits — every evaluation (each
-    broadcast, each reuse in a multi-join plan) schedules ~32 tasks and
-    Python-worker round-trips (~1 s of pure overhead). A ``VALUES``
-    LocalRelation is parsed once on the JVM, costs no Python workers,
-    folds into LocalTableScan, and broadcasts instantly. Use this for
-    every literal dimension/config frame on a hot path; keep
-    ``from_rows`` for real row batches.
+    For literal dimension and config frames authored in code. Like
+    ``from_rows``, it costs no Python workers and folds into a
+    LocalTableScan that broadcasts instantly; unlike it, values take
+    SQL ``CAST`` semantics and the frame is a source-tier memo, so the
+    hundreds of queries that join the same dim share one plan. Use
+    ``from_rows`` for row batches computed or fetched at run time.
 
     ``schema`` is a DDL string (``"name string, price int"``); every
     column is CAST to its declared type, so NULLs and mixed literals

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.frames import from_rows
+
 __all__ = [
     "parse_campaigns",
     "parse_adgroups",
@@ -258,7 +260,7 @@ def settlement_shipping(raw: DataFrame, vendor_id: str) -> DataFrame:
 
 
 def _dim(spark, rows, schema):
-    return spark.createDataFrame(rows, schema)
+    return from_rows(spark, rows, schema)
 
 
 def goal_type_dim(spark) -> DataFrame:

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.frames import from_rows
+
 __all__ = [
     "parse_campaigns",
     "parse_adgroups",
@@ -184,7 +186,8 @@ DEVICE_VOCAB = [
 def vocab_dim(spark, vocab: list[tuple[str, str]]) -> DataFrame:
     """A seq/code/name dimension from a vocabulary list — the UNNEST
     STRUCT TVFs; seq is the list position, shared with the enums."""
-    return spark.createDataFrame(
+    return from_rows(
+        spark,
         [(i, code, name) for i, (code, name) in enumerate(vocab)],
         "seq int, code string, name string",
     )

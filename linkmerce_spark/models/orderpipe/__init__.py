@@ -32,7 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from linkmerce_spark.frames import select_paths
+from linkmerce_spark.frames import from_rows, select_paths
 from linkmerce_spark.functions.scalar import enum_code, safe_int, try_strptime
 from linkmerce_spark.operators.dedup import insert_ignore
 from linkmerce_spark.operators.merge import merge_frames
@@ -41,6 +41,7 @@ from linkmerce_spark.operators.unpivot import unpivot
 __all__ = [
     "ORDER_STATUS_CODES",
     "PARSE_SCHEMA",
+    "RAW_SCHEMA",
     "parse_orders",
     "append_orders",
     "upsert_orders",
@@ -68,6 +69,10 @@ PARSE_SCHEMA: Mapping[str, str] = {
     "delivered_at_raw": "content.delivery.deliveredDate",
 }
 
+# The raw batch as bound: each response object's two-level nest of
+# JSON scalars, read as text, plus its batch position.
+RAW_SCHEMA = "content map<string,map<string,string>>, seq bigint"
+
 PK: Sequence[str] = ("order_id", "channel_seq")
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -76,11 +81,11 @@ def parse_orders(spark: SparkSession, raw: list[dict[str, Any]]) -> DataFrame:
     """Raw response objects -> typed order rows.
 
     ``seq`` is the batch position (assigned driver-side before
-    createDataFrame): insertion order is PK-dedup tiebreak, and Spark
+    ``from_rows``): insertion order is PK-dedup tiebreak, and Spark
     partition order can never be trusted for that (SURVEY §7.4).
     """
     tagged = [{**item, "seq": i} for i, item in enumerate(raw)]
-    rows = spark.createDataFrame(tagged)  # nested dicts -> structs
+    rows = from_rows(spark, tagged, RAW_SCHEMA)  # nested dicts -> maps
     flat = select_paths(rows, dict(PARSE_SCHEMA) | {"seq": "seq"})
     return flat.select(
         F.col("order_id").cast("long").alias("order_id"),

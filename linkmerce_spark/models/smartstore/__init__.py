@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.frames import from_rows
 from linkmerce_spark.operators.dedup import dedupe_keep_first
 from linkmerce_spark.operators.merge import merge_frames
 from linkmerce_spark.operators.rownum import global_row_number
@@ -105,9 +106,7 @@ def parse_products(rows: DataFrame, channel_seq: int) -> DataFrame:
 
 def delivery_type_dim(spark) -> DataFrame:
     """ProductOrder: delivery_type TVF (api/product/models.sql:77-92)."""
-    return spark.createDataFrame(
-        DELIVERY_TYPES, "seq int, code string, name string"
-    )
+    return from_rows(spark, DELIVERY_TYPES, "seq int, code string, name string")
 
 
 _OPTION_COLS = [

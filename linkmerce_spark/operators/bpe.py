@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from linkmerce_spark import memo
+from linkmerce_spark.frames import from_rows
 
 __all__ = [
     "bpe_pair_counts",
@@ -193,8 +194,8 @@ def _train_local(
                     i += 1
             nxt.append((out, wc))
         rows = nxt
-    merges = spark.createDataFrame(merge_rows, schema=MERGE_SCHEMA)
-    final_vocab = spark.createDataFrame(rows, schema=_VOCAB_SCHEMA)
+    merges = from_rows(spark, merge_rows, MERGE_SCHEMA)
+    final_vocab = from_rows(spark, rows, _VOCAB_SCHEMA)
     return merges, final_vocab
 
 

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from linkmerce_spark.frames import from_rows
+
 __all__ = [
     "plan_compaction",
     "apply_compaction",
@@ -152,7 +154,8 @@ def apply_compaction(
         off += int(r["n_files"])
     spark = df.sparkSession
     key_field = plan.schema[part_name]
-    slot_df = spark.createDataFrame(
+    slot_df = from_rows(
+        spark,
         slots,
         T.StructType(
             [

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from linkmerce_spark import memo
+from linkmerce_spark.frames import from_rows
 
 __all__ = ["global_row_number"]
 
@@ -85,9 +86,7 @@ def global_row_number(
     for r in stats:
         rows.append((r[_PID], offset, r[_MIN]))
         offset += r["cnt"]
-    offsets = df.sparkSession.createDataFrame(
-        rows, f"{_PID} int, {_OFF} long, {_MIN} long"
-    )
+    offsets = from_rows(df.sparkSession, rows, f"{_PID} int, {_OFF} long, {_MIN} long")
     return (
         ranged.join(broadcast(offsets), _PID)
         .withColumn(col_name, F.col(_OFF) + (F.col(_MID) - F.col(_MIN)) + 1)

@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.frames import from_rows
+
 __all__ = [
     "cms_hash",
     "cms_counters",
@@ -153,7 +155,7 @@ def histogram_quantiles(
             )
         ).alias("total"),
     )
-    qdf = cum.sparkSession.createDataFrame([(q,) for q in quantiles], "q int")
+    qdf = from_rows(cum.sparkSession, [(q,) for q in quantiles], "q int")
     # target rank = ceil(q * total / 100), integer-exact
     joined = qdf.crossJoin(cum).filter(
         F.col("cum_n") * 100 >= F.col("q") * F.col("total")

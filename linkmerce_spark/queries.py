@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from linkmerce_spark import memo
-from linkmerce_spark.frames import load_star, select_paths, values_df
+from linkmerce_spark.frames import from_rows, load_star, select_paths, values_df
 from linkmerce_spark.operators.dedup import dedupe_keep_first, exact_dedup, insert_ignore
 from linkmerce_spark.operators.merge import merge_frames
 from linkmerce_spark.operators.minhash import (
@@ -6553,7 +6553,7 @@ def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nprobe nearest cells per query: distance of the QUERY vector to
     # each trained centroid, rank <= 2 (tie -> lower cell).
     cent_rows = [(j + 1, [int(v) for v in c]) for j, c in enumerate(cents)]
-    cent_df = spark.createDataFrame(cent_rows, "cell int, cq array<bigint>")
+    cent_df = from_rows(spark, cent_rows, "cell int, cq array<bigint>")
     qq = F.transform(
         F.col("qv"), lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5)).cast("bigint")
     )

@@ -11,7 +11,7 @@ Scale design (the JDBC-connector playbook, not a driver funnel):
 
 - :func:`read_duckdb` — one driver-side Arrow handoff; right for
   dim-sized tables (the reference's typical DuckDB table is an API
-  batch). Arrow blocks stream straight into ``createDataFrame``.
+  batch). The Arrow result binds through ``frames.from_rows``.
 - :func:`read_duckdb_partitioned` — the scale path: a k-sized
   min/max bounds query on the driver, then each EXECUTOR task opens
   the database read-only and scans its own ``BETWEEN`` slice
@@ -36,6 +36,8 @@ from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from linkmerce_spark.frames import from_rows
+
 __all__ = ["read_duckdb", "read_duckdb_partitioned", "write_duckdb"]
 
 
@@ -56,9 +58,24 @@ def read_duckdb(
     query = source if source.lstrip().upper().startswith("SELECT") else (
         f"SELECT * FROM {source}"
     )
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     with _connect(db_path, read_only=True) as con:
         table = con.execute(query).arrow()
-    return spark.createDataFrame(table.to_pandas())
+    # A zone-less TIMESTAMP is a wall-clock time in the session zone.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    table = pa.table(
+        [
+            pc.assume_timezone(c, tz)
+            if pa.types.is_timestamp(c.type) and c.type.tz is None
+            else c
+            for c in table.columns
+        ],
+        names=table.column_names,
+    )
+    return from_rows(spark, table.to_pylist(), from_arrow_schema(table.schema))
 
 
 def read_duckdb_partitioned(
@@ -92,7 +109,7 @@ def read_duckdb_partitioned(
         arrow_schema = con.execute(f"SELECT * FROM {table} LIMIT 0").arrow().schema
     spark_schema = from_arrow_schema(arrow_schema)
     if lo is None:  # empty table
-        return spark.createDataFrame([], spark_schema)
+        return from_rows(spark, [], spark_schema)
 
     stride = (float(hi) - float(lo)) / num_partitions
     bounds = []
@@ -100,7 +117,7 @@ def read_duckdb_partitioned(
         b_lo = None if i == 0 else float(lo) + stride * i
         b_hi = None if i == num_partitions - 1 else float(lo) + stride * (i + 1)
         bounds.append((i, b_lo, b_hi))
-    bounds_df = spark.createDataFrame(bounds, "pid int, lo double, hi double")
+    bounds_df = from_rows(spark, bounds, "pid int, lo double, hi double")
     if num_partitions > 1:
         bounds_df = bounds_df.repartition(num_partitions, "pid")
 

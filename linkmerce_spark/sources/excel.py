@@ -8,7 +8,7 @@ shared strings, inline strings, and numeric cells (the subset the
 reference's datasets use). It is a real working reader, not a stub.
 
 ``excel_to_rows`` is driver-side (one workbook fetched by the task
-layer -> ``createDataFrame``). For a DataFrame carrying one workbook
+layer -> ``frames.from_rows``). For a DataFrame carrying one workbook
 per row (multimodal-style binary column), wrap it in ``mapInPandas``
 exactly like sources/htmlsource.parse_html_column.
 """
@@ -22,6 +22,8 @@ import xml.etree.ElementTree as ET
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from linkmerce_spark.frames import from_rows
 
 __all__ = ["excel_to_rows", "excel_to_df"]
 
@@ -86,7 +88,7 @@ def excel_to_df(spark: SparkSession, content: bytes, sheet: int = 1, header: boo
     """Workbook bytes -> DataFrame (first row as column names by default)."""
     rows = excel_to_rows(content, sheet)
     if not rows:
-        return spark.createDataFrame([], "value string")
+        return from_rows(spark, [], "value string")
     if header:
         cols, body = [str(c) for c in rows[0]], rows[1:]
     else:
@@ -98,4 +100,4 @@ def excel_to_df(spark: SparkSession, content: bytes, sheet: int = 1, header: boo
             for r in body:
                 if isinstance(r[i], int):
                     r[i] = float(r[i])
-    return spark.createDataFrame([tuple(r) for r in body], cols)
+    return from_rows(spark, [tuple(r) for r in body], cols)

@@ -9,7 +9,7 @@ consumes (tables, repeated item nodes), not a stub.
 Two execution shapes:
 - ``html_tables`` / ``html_select_text``: driver-side, for single
   documents fetched by the task layer (tasks.py) before
-  ``createDataFrame`` — the reference's shape.
+  ``frames.from_rows`` — the reference's shape.
 - ``parse_html_column``: distributed ``mapInPandas`` over a DataFrame
   holding one HTML document per row — HTML parsing is per-document
   imperative string work, exactly the case where Python-in-Arrow-batch

@@ -174,10 +174,11 @@ def distributed_fetch(
     """
     import pandas as pd
 
+    from linkmerce_spark.frames import from_rows
     from linkmerce_spark.shipping import ensure_shipped
 
     ensure_shipped(spark)
-    pdf = spark.createDataFrame(params)
+    pdf = from_rows(spark, params)
     if parallelism:
         pdf = pdf.repartition(parallelism)
 

@@ -119,9 +119,9 @@ def test_request_each_distributed_schema_returns_lazy_dataframe(spark):
         schema="x long, sq long",
     )
     assert isinstance(out, DataFrame)  # lazy: nothing ran yet
-    # the fetch runs executor-side, straight off the payload RDD
+    # the fetch runs executor-side, straight off the params' LocalRelation
     ops = plan_shape(out, "analyzed").nodes
-    assert ops == {"MapInPandas": 1, "LogicalRDD": 1}, ops
+    assert ops == {"MapInPandas": 1, "LocalRelation": 1}, ops
     rows = out.collect()
     assert sorted((r["x"], r["sq"]) for r in rows) == [(i, i * i) for i in range(6)]
 
