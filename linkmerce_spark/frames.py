@@ -12,6 +12,7 @@ transform.py:677).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterable, Mapping
 from typing import Any
 
@@ -23,7 +24,6 @@ from linkmerce_spark import memo
 
 __all__ = [
     "from_rows",
-    "rows_to_df",
     "TableRegistry",
     "load_star",
     "select_paths",
@@ -32,7 +32,7 @@ __all__ = [
 ]
 
 
-def widen_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+def widen_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a narrow scan up to the session's
     default parallelism — a no-op whenever the input already has that
     many partitions (any real-scale table).
@@ -49,24 +49,18 @@ def widen_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     not widen — round-robin destroys file order. The partition probe
     (``df.rdd``) costs ~0.5 s of driver work, so the result is
     memoized on the DataFrame object; ``load_star``'s per-session
-    table memo makes that once per session per table. The memo only
-    serves the default-parallelism case: an explicit
-    ``min_parallelism`` always recomputes (a cached frame widened to a
-    different target must not be returned for it) and is not cached.
+    table memo makes that once per session per table.
     """
-    if min_parallelism is None:
-        cached = getattr(df, "_lm_widened", None)
-        if cached is not None:
-            return cached
-    spark = df.sparkSession
-    target = min_parallelism or spark.sparkContext.defaultParallelism
+    cached = getattr(df, "_lm_widened", None)
+    if cached is not None:
+        return cached
+    target = df.sparkSession.sparkContext.defaultParallelism
     out = df if df.rdd.getNumPartitions() >= target else df.repartition(target)
-    if min_parallelism is None:
-        try:
-            df._lm_widened = out
-            out._lm_widened = out  # re-widening the widened frame is free
-        except Exception:  # pragma: no cover - frozen/mocked frames
-            pass
+    try:
+        df._lm_widened = out
+        out._lm_widened = out  # re-widening the widened frame is free
+    except Exception:  # pragma: no cover - frozen/mocked frames
+        pass
     return out
 
 # Driver-generated TPC-H-ish star schema + pipeline tables (TESTDATA.md).
@@ -124,9 +118,8 @@ def from_rows(
             verify(r)
         struct = schema
     else:
-        # createDataFrame's own inference (private: PySpark has no
-        # public one), names applied over the inferred fields.
-        struct = spark._inferSchemaFromList(rows, names=schema)
+        # names applied over the inferred fields
+        struct = _infer_schema(spark, rows, schema)
         for i, name in enumerate(schema or ()):
             struct.fields[i].name = name
             struct.names[i] = name
@@ -155,6 +148,35 @@ def from_rows(
     )
     jdf = jvm.PythonSQLUtils.toDataFrame(jiter, struct.json(), spark._jsparkSession)
     return DataFrame(jdf, spark)
+
+
+_INFER_LOCK = threading.Lock()
+
+
+def _infer_schema(spark: SparkSession, rows: list, names: list[str] | None) -> StructType:
+    """``createDataFrame``'s own row inference (private: PySpark has no
+    public one) with one widening: where a long meets a double the type
+    is double, as DuckDB unifies INTEGER and DOUBLE. PySpark raises
+    ``CANNOT_MERGE_TYPE`` there (``[{"a": 1}, {"a": 2.5}]``), and inside
+    one map its answer hangs on key order. Its merge is looked up as a
+    module global at every step, so the widening wraps it for this call
+    only; it answers only where PySpark would raise, so every batch
+    PySpark infers keeps its schema."""
+    from pyspark.sql import session, types
+
+    merge = types._merge_type
+
+    def widen(a, b, name=None):
+        if {type(a), type(b)} == {types.LongType, types.DoubleType}:
+            return types.DoubleType()
+        return merge(a, b, name)
+
+    with _INFER_LOCK:
+        types._merge_type = session._merge_type = widen
+        try:
+            return spark._inferSchemaFromList(rows, names=names)
+        finally:
+            types._merge_type = session._merge_type = merge
 
 
 def _decimal_reader(dt: Any):
@@ -194,10 +216,6 @@ def _decimal_reader(dt: Any):
         fields = [f or (lambda x: x) for f in fields]
         return lambda v: None if v is None else tuple(f(x) for f, x in zip(fields, v))
     return None
-
-
-# Alias kept for call sites that read better with the verb-first name.
-rows_to_df = from_rows
 
 
 class TableRegistry:

@@ -10,7 +10,7 @@ from linkmerce_spark.functions.scalar import (  # noqa: F401
     safe_int,
     safe_float,
     try_strptime,
-    str_prefix,
+    iso_ts,
     split_part,
     enum_code,
     money,
@@ -28,7 +28,7 @@ __all__ = [
     "safe_int",
     "safe_float",
     "try_strptime",
-    "str_prefix",
+    "iso_ts",
     "split_part",
     "enum_code",
     "money",

@@ -6,8 +6,8 @@ Mapping table (reference site -> here):
   (reference: src/linkmerce/utils/cast.py:9-26)       -> ``safe_int``/``safe_float``
 - ``TRY_STRPTIME(s, fmt)`` null-on-parse-failure
   (core/smartstore/api/order/models.sql:78)           -> ``try_strptime``
-- ``PREFIX(s, p)`` / ``starts_with``
-  (core/searchad/center/exposure/models.sql:22)       -> ``str_prefix``
+- ``TRY_STRPTIME(SUBSTR(s, 1, 19), '%Y-%m-%dT%H:%M:%S')`` ISO-8601
+  (core/coupang/advertising/report/models.sql:56-57)  -> ``iso_ts``
 - ``split_part(s, sep, n)``
   (dbt_postgres/.../smartstore__sales_daily.sql:147)  -> ``split_part`` (Spark builtin passthrough)
 - CASE-WHEN enum encoding, 306 uses
@@ -31,7 +31,7 @@ __all__ = [
     "safe_int",
     "safe_float",
     "try_strptime",
-    "str_prefix",
+    "iso_ts",
     "split_part",
     "enum_code",
     "money",
@@ -64,9 +64,11 @@ def try_strptime(c: Column | str, fmt: str) -> Column:
     return F.try_to_timestamp(_col(c), F.lit(fmt))
 
 
-def str_prefix(c: Column | str, prefix: str) -> Column:
-    """PREFIX/starts_with predicate."""
-    return _col(c).startswith(prefix)
+def iso_ts(c: Column | str) -> Column:
+    """ISO-8601 timestamp, NULL on failure: the first 19 characters
+    (``2026-01-31T12:34:56``) parsed, so a fraction or zone suffix is
+    ignored as the reference's SUBSTR drops it."""
+    return try_strptime(F.substring(_col(c), 1, 19), "yyyy-MM-dd'T'HH:mm:ss")
 
 
 def split_part(c: Column | str, sep: str, n: int) -> Column:

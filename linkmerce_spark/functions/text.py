@@ -23,6 +23,8 @@ __all__ = [
     "char_ngrams",
     "shingles_from_tokens",
     "word_shingles",
+    "gram_starts",
+    "gram_hash",
     "punct_ratio",
     "stopword_ratio",
     "quality_score",
@@ -119,6 +121,24 @@ def word_shingles(c: Column | str, n: int = 3) -> Column:
     a column once and calling ``shingles_from_tokens`` in hot paths.
     """
     return shingles_from_tokens(word_tokens(c), n)
+
+
+def gram_starts(words: Column, n: int) -> Column:
+    """1-based start position of every word n-gram of ``words``: an
+    empty ``array<int>`` when it holds fewer than ``n`` words, so an
+    ``explode_outer`` keeps the short document as one NULL row."""
+    n_grams = F.size(words) - n + 1
+    return F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
+def gram_hash(words: Column, pos: Column, n: int) -> Column:
+    """The word n-gram of ``words`` at ``pos``, space-joined and
+    ``xxhash64``'d: the gram key of every gram operator. Their SQL
+    twins group by the joined text itself, so the slice and the join
+    must match theirs; one definition keeps every operator on it."""
+    return F.xxhash64(F.array_join(F.slice(words, pos, n), " "))
 
 
 def punct_ratio(c: Column | str) -> Column:

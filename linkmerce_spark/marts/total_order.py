@@ -22,9 +22,10 @@ intermediate/sales/sabangnet/sabangnet__sales_daily.sql and
 - ``with_cost_data`` (:199-238): COALESCE(ecount org_price, item
   org_price, 0) + item extra_cost, '-'-defaulted delivery group,
   bundle_product_count window and the numeric cost_amount.
-- ``split_group_sum`` (:239-292): allocate the ORDER-TOTAL of each
-  amount over rows by cost weight (ROUND half-up), remainder folded
-  into the first row by product_id; groups of one bypass untouched.
+- split group sum (:239-292): allocate the ORDER-TOTAL of each amount
+  over rows by cost weight (ROUND half-up), remainder folded into the
+  first row by product_id; groups of one bypass untouched. That is
+  ``split_by_cost_weight`` over each amount's group sum.
 - ``with_cj_delivery`` (:293-337): delivery fee COALESCE(cj invoice,
   cj order, own, 0), box COALESCE, delivery_quantity = sku x unit.
 - max delivery fee (:338-403): reuses marts/smartstore
@@ -68,7 +69,6 @@ from linkmerce_spark.marts.smartstore import (
     _gift_status,
     _sku_mult,
     attach_max_delivery_fee,
-    max_delivery_fee,
     split_by_cost_weight,
 )
 from linkmerce_spark.operators.topk import top_k_per_group
@@ -77,7 +77,6 @@ __all__ = [
     "ecount_product_dim",
     "sabangnet_explode",
     "with_cost_data",
-    "split_group_sum",
     "with_cj_delivery",
     "sabangnet_product_order",
     "rocket_sales_shipping",
@@ -212,49 +211,6 @@ def with_cost_data(
     )
 
 
-def split_group_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    amount_cols: Sequence[str],
-    cost_col: str = "cost_amount",
-    order_col: str = "product_id",
-) -> DataFrame:
-    """Allocate each amount's GROUP TOTAL over rows by cost weight
-    (:239-292): split_i = floor(total * cost_i/total_cost + 0.5),
-    remainder folded into the first row by ``order_col``; groups of one
-    keep their amounts."""
-    wg = Window.partitionBy(*keys)
-    wo = Window.partitionBy(*keys).orderBy(F.col(order_col).asc())
-    out = (
-        df.withColumn("__n", F.count(F.lit(1)).over(wg))
-        .withColumn("__total_cost", F.sum(cost_col).over(wg))
-        .withColumn("__rn", F.row_number().over(wo))
-    )
-    for c in amount_cols:
-        total = F.sum(c).over(wg)
-        split = F.coalesce(
-            F.floor(
-                total * (F.col(cost_col) / F.nullif(F.col("__total_cost"), F.lit(0)))
-                + F.lit(0.5)
-            ).cast("long"),
-            F.lit(0),
-        )
-        out = out.withColumn(f"__split_{c}", split).withColumn(f"__total_{c}", total)
-        adjusted = (
-            F.when(
-                F.col("__rn") == 1,
-                F.col(f"__total_{c}") - F.sum(f"__split_{c}").over(wg),
-            ).otherwise(F.lit(0))
-            + F.col(f"__split_{c}")
-        )
-        out = out.withColumn(c, F.when(F.col("__n") > 1, adjusted).otherwise(F.col(c)))
-    return out.drop(
-        "__n", "__total_cost", "__rn",
-        *[f"__split_{c}" for c in amount_cols],
-        *[f"__total_{c}" for c in amount_cols],
-    )
-
-
 def with_cj_delivery(
     ord_df: DataFrame,
     cj_inv: DataFrame,
@@ -314,11 +270,13 @@ def sabangnet_product_order(
     # order_id, with only broadcast joins in between — so an explicit
     # hash(order_id) repartition serves every window below (Spark
     # otherwise plans one data-sized exchange per distinct key set).
-    split = split_group_sum(
-        costed.repartition(F.col("order_id")),
-        ["account_no", "order_id"],
-        ["payment_amount", "supply_amount"],
+    # The amount split allocates each amount's ORDER TOTAL: its group
+    # sum, split by cost weight.
+    keys, amounts = ["account_no", "order_id"], ["payment_amount", "supply_amount"]
+    totals = costed.repartition(F.col("order_id")).withColumns(
+        {c: F.sum(c).over(Window.partitionBy(*keys)) for c in amounts}
     )
+    split = split_by_cost_weight(totals, keys, amounts)
     dlv = with_cj_delivery(split, cj_inv, cj_ord, unit)
     # Fused fee attach (see attach_max_delivery_fee): the old
     # aggregate+join-back diamond re-executed the explode/cost/split

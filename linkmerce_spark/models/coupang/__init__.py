@@ -18,9 +18,10 @@ Parity sites (semantics, not code):
 
 Spark-first notes
 -----------------
-- Every parse is a narrow projection; enums are chained ``when``
-  chains (codegen), comma-stripping is regexp_replace + try_cast —
-  the ``functions.scalar`` comma-number idiom.
+- Every parse is a narrow projection; enums are ``functions.scalar``
+  ``enum_code`` map lookups, ISO timestamps its ``iso_ts``, and
+  comma-stripping is regexp_replace + try_cast — the comma-number
+  idiom.
 - Report rollups are single partial-aggregation groupBys keyed by the
   target PK — the PK grain is fine (date x campaign x option), no
   skew; AVG(stay_time) aggregates map-side like any other agg.
@@ -32,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import from_rows
+from linkmerce_spark.functions.scalar import enum_code, iso_ts
 
 __all__ = [
     "parse_campaigns",
@@ -64,22 +66,6 @@ PRODUCT_SIZE_NAMES = [
 ]
 
 
-def _map_enum(col: Column, mapping: dict[str, int], default: int | None = None) -> Column:
-    expr: Column = (
-        F.lit(default).cast("int") if default is not None else F.lit(None).cast("int")
-    )
-    for label, code in reversed(list(mapping.items())):
-        expr = F.when(col == label, F.lit(code)).otherwise(expr)
-    return expr
-
-
-def _iso_ts(col: str) -> Column:
-    """TRY_STRPTIME(SUBSTR(x, 1, 19), '%Y-%m-%dT%H:%M:%S') (:56-57)."""
-    return F.try_to_timestamp(
-        F.substring(F.col(col), 1, 19), F.lit("yyyy-MM-dd'T'HH:mm:ss")
-    )
-
-
 def _comma_int(col: str) -> Column:
     """TRY_CAST(REPLACE(x, ',', '') AS INTEGER) (:176-182)."""
     return F.regexp_replace(F.col(col).cast("string"), ",", "").try_cast("int")
@@ -98,13 +84,13 @@ def parse_campaigns(rows: DataFrame, vendor_id: str) -> DataFrame:
         F.col("name").alias("campaign_name"),
         F.col("campaignType").alias("campaign_type"),
         F.lit(vendor_id).alias("vendor_id"),
-        _map_enum(F.col("vendorType"), _VENDOR_TYPES).alias("vendor_type"),
-        _map_enum(F.col("goalType"), _GOAL_TYPES).alias("goal_type"),
+        enum_code("vendorType", _VENDOR_TYPES).alias("vendor_type"),
+        enum_code("goalType", _GOAL_TYPES).alias("goal_type"),
         F.col("isActive").cast("boolean").alias("is_active"),
         F.col("isDeleted").cast("boolean").alias("is_deleted"),
         F.col("roasTarget").cast("int").alias("roas_target"),
-        _iso_ts("createdAt").alias("created_at"),
-        _iso_ts("updatedAt").alias("updated_at"),
+        iso_ts("createdAt").alias("created_at"),
+        iso_ts("updatedAt").alias("updated_at"),
     )
 
 
@@ -115,12 +101,12 @@ def parse_adgroups(rows: DataFrame, vendor_id: str) -> DataFrame:
         F.col("name").alias("adgroup_name"),
         F.lit(vendor_id).alias("vendor_id"),
         F.col("campaignId").cast("long").alias("campaign_id"),
-        _map_enum(F.col("goalType"), _GOAL_TYPES).alias("goal_type"),
+        enum_code("goalType", _GOAL_TYPES).alias("goal_type"),
         F.col("isActive").cast("boolean").alias("is_active"),
         F.col("isDeleted").cast("boolean").alias("is_deleted"),
         F.col("roasTarget").cast("int").alias("roas_target"),
-        _iso_ts("createdAt").alias("created_at"),
-        _iso_ts("updatedAt").alias("updated_at"),
+        iso_ts("createdAt").alias("created_at"),
+        iso_ts("updatedAt").alias("updated_at"),
     )
 
 
@@ -158,7 +144,7 @@ def product_ad_report(raw: DataFrame, vendor_id: str) -> DataFrame:
         F.coalesce(F.col("광고전환매출발생 옵션ID").cast("bigint"), F.lit(0)).alias(
             "option_conv_id"
         ),
-        _map_enum(F.col("광고 노출 지면"), _PLACEMENT, default=2).alias(
+        enum_code("광고 노출 지면", _PLACEMENT, default=2).alias(
             "placement_group"
         ),
         *[_comma_int(src).alias(dst) for src, dst in _AD_MEASURES],
@@ -177,11 +163,11 @@ def new_customer_ad_report(raw: DataFrame, vendor_id: str) -> DataFrame:
     parsed = raw.select(
         F.col("캠페인 ID").cast("bigint").alias("campaign_id"),
         F.col("소재 ID").cast("bigint").alias("creative_id"),
-        _map_enum(F.col("소재"), {"상품": 0, "동영상": 1}).alias("creative_type"),
+        enum_code("소재", {"상품": 0, "동영상": 1}).alias("creative_type"),
         F.nullif(F.col("광고집행 옵션 ID").try_cast("bigint"), F.lit(0)).alias(
             "option_id"
         ),
-        _map_enum(F.col("광고 노출 지면"), _PLACEMENT, default=2).alias(
+        enum_code("광고 노출 지면", _PLACEMENT, default=2).alias(
             "placement_group"
         ),
         F.col("노출수").try_cast("int").alias("impression_count"),
@@ -225,8 +211,8 @@ def settlement_sales(raw: DataFrame, vendor_id: str) -> DataFrame:
         F.col("옵션ID").cast("bigint").alias("option_id"),
         F.col("SKU ID").try_cast("bigint").alias("sku_id"),
         F.col("카테고리ID").try_cast("int").alias("category_id"),
-        _map_enum(F.col("거래유형"), _SALES_TXN, default=99).alias("settlement_type"),
-        _map_enum(F.col("정산유형"), _PERIOD, default=99).alias("period_type"),
+        enum_code("거래유형", _SALES_TXN, default=99).alias("settlement_type"),
+        enum_code("정산유형", _PERIOD, default=99).alias("period_type"),
         F.col("판매가(A)").try_cast("int").alias("unit_price"),
         F.col("판매수량(B)").try_cast("int").alias("order_quantity"),
         F.col("쿠팡지원할인(C)").try_cast("int").alias("coupang_discount"),
@@ -246,10 +232,10 @@ def settlement_shipping(raw: DataFrame, vendor_id: str) -> DataFrame:
         F.col("등록상품 ID").cast("bigint").alias("product_id"),
         F.col("옵션ID").cast("bigint").alias("option_id"),
         F.col("SKU ID").cast("bigint").alias("sku_id"),
-        _map_enum(F.col("거래유형"), _SHIPPING_TXN, default=99).alias(
+        enum_code("거래유형", _SHIPPING_TXN, default=99).alias(
             "settlement_type"
         ),
-        _map_enum(F.col("정산유형"), _PERIOD, default=99).alias("period_type"),
+        enum_code("정산유형", _PERIOD, default=99).alias("period_type"),
         F.col("발생비용(A)").try_cast("int").alias("warehousing_fee"),
         F.col("할인가(B)").try_cast("int").alias("discount_amount"),
         F.col("추가비용").try_cast("int").alias("extra_fee"),

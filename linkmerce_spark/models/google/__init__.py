@@ -14,7 +14,7 @@ Parity sites (semantics, not code) in
   fieldType and 7-value device enums.
 - The seq/code/name vocabularies (:1-10, :45-91, :124-148, :180-218,
   :279-316, :393-441) as plain dimension DataFrames; enum encodings
-  are POSITIONS in these lists, so dim and CASE can never drift.
+  are POSITIONS in these lists, so dim and enum can never drift.
 
 Spark-first notes
 -----------------
@@ -23,7 +23,7 @@ Spark-first notes
 - Micros conversion uses exact integer math ((x + 500000) DIV 1e6 ==
   ROUND-half-up for the non-negative micro amounts the API emits) —
   no double rounding nondeterminism.
-- Enum chains are codegen ``when`` chains generated from the
+- Enums are ``functions.scalar.enum_code`` map lookups built from the
   vocabulary lists.
 """
 
@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import from_rows
+from linkmerce_spark.functions.scalar import enum_code
 
 __all__ = [
     "parse_campaigns",
@@ -193,11 +194,9 @@ def vocab_dim(spark, vocab: list[tuple[str, str]]) -> DataFrame:
     )
 
 
-def _enum(col: Column, vocab: list[tuple[str, str]]) -> Column:
-    expr = F.lit(None).cast("int")
-    for seq, (code, _) in reversed(list(enumerate(vocab))):
-        expr = F.when(col == code, F.lit(seq)).otherwise(expr)
-    return expr
+def _seqs(vocab: list[tuple[str, str]]) -> dict[str, int]:
+    """code -> seq (list position) for ``enum_code``."""
+    return {code: seq for seq, (code, _) in enumerate(vocab)}
 
 
 def _micros_int(path: str) -> Column:
@@ -270,7 +269,7 @@ def parse_insights(rows: DataFrame, customer_id: int) -> DataFrame:
         F.col("campaign.id").cast("string").alias("campaign_id"),
         F.col("adGroup.id").cast("string").alias("adgroup_id"),
         F.col("adGroupAd.ad.id").cast("string").alias("ad_id"),
-        _enum(F.col("segments.device"), DEVICE_VOCAB).alias("device_type"),
+        enum_code("segments.device", _seqs(DEVICE_VOCAB)).alias("device_type"),
         _count("metrics.impressions").alias("impression_count"),
         _count("metrics.clicks").alias("click_count"),
         _micros_int("metrics.costMicros").alias("ad_cost"),
@@ -298,10 +297,10 @@ def parse_asset_views(rows: DataFrame, customer_id: int) -> DataFrame:
         F.col("adGroup.id").cast("string").alias("adgroup_id"),
         F.col("adGroupAd.ad.id").cast("string").alias("ad_id"),
         F.col("asset.id").cast("string").alias("asset_id"),
-        _enum(F.col("adGroupAdAssetView.fieldType"), FIELD_TYPE_VOCAB).alias(
+        enum_code("adGroupAdAssetView.fieldType", _seqs(FIELD_TYPE_VOCAB)).alias(
             "field_type"
         ),
-        _enum(F.col("segments.device"), DEVICE_VOCAB).alias("device_type"),
+        enum_code("segments.device", _seqs(DEVICE_VOCAB)).alias("device_type"),
         _count("metrics.impressions").alias("impression_count"),
         _count("metrics.clicks").alias("click_count"),
         _micros_int("metrics.costMicros").alias("ad_cost"),

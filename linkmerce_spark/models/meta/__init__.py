@@ -18,9 +18,10 @@ window each at dim cardinality.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.functions.scalar import iso_ts
 from linkmerce_spark.operators.dedup import dedupe_keep_first
 
 __all__ = [
@@ -58,12 +59,6 @@ OBJECTIVE_VOCAB = [
 ]
 
 
-def _iso_ts(col: str) -> Column:
-    return F.try_to_timestamp(
-        F.substring(F.col(col), 1, 19), F.lit("yyyy-MM-dd'T'HH:mm:ss")
-    )
-
-
 def parse_campaigns(rows: DataFrame, account_id: str) -> DataFrame:
     """Campaigns bulk_insert (models.sql:31-40)."""
     return rows.select(
@@ -72,7 +67,7 @@ def parse_campaigns(rows: DataFrame, account_id: str) -> DataFrame:
         F.lit(account_id).alias("account_id"),
         F.col("objective"),
         F.col("effective_status"),
-        _iso_ts("created_time").alias("created_at"),
+        iso_ts("created_time").alias("created_at"),
     )
 
 
@@ -85,7 +80,7 @@ def parse_adsets(rows: DataFrame, account_id: str) -> DataFrame:
         F.col("campaign_id"),
         F.col("effective_status"),
         F.col("daily_budget").cast("int").alias("daily_budget"),
-        _iso_ts("created_time").alias("created_at"),
+        iso_ts("created_time").alias("created_at"),
     )
 
 
@@ -98,7 +93,7 @@ def parse_ads(rows: DataFrame, account_id: str) -> DataFrame:
         F.col("campaign_id"),
         F.col("adset_id"),
         F.col("effective_status"),
-        _iso_ts("created_time").alias("created_at"),
+        iso_ts("created_time").alias("created_at"),
     )
 
 

@@ -25,7 +25,7 @@ Parity sites (semantics, not code) in
 Spark-first notes
 -----------------
 - Every parse is a narrow column projection (codegen); enum blocks are
-  chained ``when`` expressions, not UDFs.
+  ``functions.scalar.enum_code`` map lookups, not UDFs.
 - QUALIFY dedup is the one-window ``dedupe_keep_first`` operator;
   the upsert is ``merge_frames`` (full-outer merge, one shuffle per
   side) with the verb map {source_first x12, least, greatest} — the
@@ -36,9 +36,10 @@ Spark-first notes
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.functions.scalar import enum_code
 from linkmerce_spark.operators.dedup import dedupe_keep_first
 from linkmerce_spark.operators.merge import merge_frames
 
@@ -108,13 +109,6 @@ _OPTION = '상품코드(사방넷)'
 _PRODUCT_SHOP = '상품코드(쇼핑몰)'
 _ORDER_DT = '주문일시(YYYY-MM-DD HH:MM)'
 _REGISTER_DT = '수집일시(YYYY-MM-DD HH:MM:SS)'
-
-
-def _enum(col: Column, labels: list[tuple[str, int]]) -> Column:
-    expr = F.lit(None).cast("int")
-    for label, code in reversed(labels):
-        expr = F.when(col == label, F.lit(code)).otherwise(expr)
-    return expr
 
 
 def parse_order(rows: DataFrame) -> DataFrame:
@@ -297,8 +291,8 @@ def download_invoice(raw: DataFrame) -> DataFrame:
         F.col(_ACCOUNT).cast("int").alias("account_no"),
         F.col("송장번호").alias("invoice_no"),
         F.col("택배사").alias("delivery_company"),
-        _enum(F.col("주문구분"), ORDER_STATUS_DIV_LABELS).alias("order_status_div"),
-        _enum(F.col("주문상태"), ORDER_STATUS_LABELS).alias("order_status"),
+        enum_code("주문구분", dict(ORDER_STATUS_DIV_LABELS)).alias("order_status_div"),
+        enum_code("주문상태", dict(ORDER_STATUS_LABELS)).alias("order_status"),
         order_dt.alias("order_dt"),
         F.col("송장등록일자(YYYY-MM-DD)").try_cast("date").alias("invoice_date"),
     )

@@ -21,6 +21,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.functions.scalar import iso_ts
+
 __all__ = [
     "parse_accounts",
     "parse_shops",
@@ -72,9 +74,7 @@ def parse_shops(rows: DataFrame) -> DataFrame:
         F.col("exclFormSrno").cast("int").alias("shop_seq"),
         F.col("rpstNm").alias("rep_name"),
         F.col("shmaExpoYn").alias("use_yn"),
-        F.try_to_timestamp(
-            F.substring(F.col("fstRegsDt"), 1, 19), F.lit("yyyy-MM-dd'T'HH:mm:ss")
-        ).alias("created_at"),
+        iso_ts("fstRegsDt").alias("created_at"),
     )
 
 
@@ -160,7 +160,7 @@ def parse_add_products(rows: DataFrame, meta: Mapping[str, str]) -> DataFrame:
     request parameters ride along as row constants; option id is
     CONCAT(prdNo, '-', skuNo)."""
     iso = lambda v: (  # noqa: E731
-        F.try_to_timestamp(F.lit(str(v)[:19]), F.lit("yyyy-MM-dd'T'HH:mm:ss"))
+        iso_ts(F.lit(str(v)))
         if v is not None
         else F.lit(None).cast("timestamp")
     )

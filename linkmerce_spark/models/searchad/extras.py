@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.functions.scalar import enum_code
 from linkmerce_spark.operators.merge import merge_frames
 
 __all__ = [
@@ -70,19 +71,12 @@ BRANDNEW_CONTRACT_STATUS = {
 }
 
 
-def _enum(col: Column, mapping: dict[str, int], default: int | None = None) -> Column:
-    expr: Column = F.lit(default).cast("int")
-    for code, seq in reversed(list(mapping.items())):
-        expr = F.when(col == code, F.lit(seq)).otherwise(expr)
-    return expr
-
-
 def parse_gfa_campaigns(rows: DataFrame) -> DataFrame:
     """GFA Campaign bulk_insert (gfa/report/models.sql:13-31)."""
     return rows.select(
         F.col("no").cast("string").alias("campaign_id"),
         F.col("name").alias("campaign_name"),
-        _enum(F.col("objective"), _GFA_OBJECTIVES).alias("campaign_type"),
+        enum_code("objective", _GFA_OBJECTIVES).alias("campaign_type"),
         F.col("adAccountNo").cast("bigint").alias("customer_id"),
         F.col("activated").cast("boolean").alias("is_enabled"),
         F.col("deleted").cast("boolean").alias("is_deleted"),
@@ -95,7 +89,7 @@ def parse_gfa_adsets(rows: DataFrame, account_no: int) -> DataFrame:
         F.col("no").cast("string").alias("adgroup_id"),
         F.col("campaignNo").cast("string").alias("campaign_id"),
         F.col("name").alias("adgroup_name"),
-        _enum(F.col("bidGoal"), _GFA_BID_GOALS).alias("adgroup_type"),
+        enum_code("bidGoal", _GFA_BID_GOALS).alias("adgroup_type"),
         F.lit(account_no).cast("bigint").alias("customer_id"),
         F.col("activated").cast("boolean").alias("is_enabled"),
         (F.col("status") == "DELETED").alias("is_deleted"),
@@ -113,7 +107,7 @@ def parse_gfa_creatives(rows: DataFrame, account_no: int) -> DataFrame:
         .cast("string")
         .alias("ad_id"),
         F.col("adSetNo").cast("string").alias("adgroup_id"),
-        _enum(F.col("creativeType"), _GFA_CREATIVE_TYPES).alias("ad_type"),
+        enum_code("creativeType", _GFA_CREATIVE_TYPES).alias("ad_type"),
         F.lit(account_no).cast("bigint").alias("customer_id"),
         F.col("name").alias("title"),
         F.col("message").alias("description"),
@@ -254,10 +248,10 @@ def center_daily_report(rows: DataFrame, customer_id: int) -> DataFrame:
         F.regexp_replace(F.col("nccAdId"), r"\(삭제\)", "").alias("ad_id"),
         F.lit(customer_id).cast("int").alias("customer_id"),
         F.col("mediaNm").alias("media_name"),
-        _enum(F.col("pcMblTp"), {"PC": 0, "모바일": 1}, default=2).alias(
+        enum_code("pcMblTp", {"PC": 0, "모바일": 1}, default=2).alias(
             "pc_mobile_type"
         ),
-        _enum(F.col("ntwkTp"), {"검색": 0, "콘텐츠": 1}, default=2).alias(
+        enum_code("ntwkTp", {"검색": 0, "콘텐츠": 1}, default=2).alias(
             "network_type"
         ),
         F.col("impCnt").cast("int").alias("impression_count"),
@@ -300,7 +294,7 @@ def parse_keywords(rows: DataFrame, as_of: str) -> DataFrame:
         F.col("monthlyAveMobileClkCnt").cast("decimal(18,1)").alias(
             "monthly_avg_click_cnt_mo"
         ),
-        _enum(F.col("compIdx"), {"낮음": 0, "중간": 1, "높음": 2}).alias("comp_idx"),
+        enum_code("compIdx", {"낮음": 0, "중간": 1, "높음": 2}).alias("comp_idx"),
         F.col("plAvgDepth").cast("int").alias("avg_depth_pc"),
         F.lit((anchor - _dt.timedelta(days=31)).isoformat())
         .cast("date")
@@ -354,7 +348,7 @@ def parse_time_contracts(rows: DataFrame) -> DataFrame:
         F.col("nccAdgroupId").alias("adgroup_id"),
         *_contract_common(rows)[:2],
         F.lit(0).cast("tinyint").alias("contract_type"),
-        _enum(F.col("contractStatus"), TIME_CONTRACT_STATUS).alias("contract_status"),
+        enum_code("contractStatus", TIME_CONTRACT_STATUS).alias("contract_status"),
         _vat_amount("paymentAmt").alias("contract_amount"),
         F.col("refundAmt").cast("int").alias("refund_amount"),
         F.col("contractQc").cast("int").alias("contract_qc"),
@@ -371,7 +365,7 @@ def parse_brandnew_contracts(rows: DataFrame) -> DataFrame:
         F.col("nccAdgroupId").alias("adgroup_id"),
         *_contract_common(rows)[:2],
         F.lit(1).cast("tinyint").alias("contract_type"),
-        _enum(F.col("contractStatus"), BRANDNEW_CONTRACT_STATUS).alias(
+        enum_code("contractStatus", BRANDNEW_CONTRACT_STATUS).alias(
             "contract_status"
         ),
         F.col("paymentAmt").cast("int").alias("contract_amount"),

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import from_rows
+from linkmerce_spark.functions.scalar import enum_code, iso_ts
 from linkmerce_spark.operators.dedup import dedupe_keep_first
 from linkmerce_spark.operators.merge import merge_frames
 from linkmerce_spark.operators.rownum import global_row_number
@@ -69,19 +70,8 @@ DELIVERY_TYPES = [
 ]
 
 
-def _iso_ts(col: str) -> Column:
-    return F.try_to_timestamp(
-        F.substring(F.col(col), 1, 19), F.lit("yyyy-MM-dd'T'HH:mm:ss")
-    )
-
-
 def parse_products(rows: DataFrame, channel_seq: int) -> DataFrame:
     """Product bulk_insert (api/product/models.sql:33-75)."""
-    delivery = F.lit(None).cast("int")
-    for seq, code, _ in reversed(DELIVERY_TYPES):
-        delivery = F.when(
-            F.col("deliveryAttributeType") == code, F.lit(seq)
-        ).otherwise(delivery)
     return rows.select(
         F.col("channelProductNo").cast("bigint").alias("product_id"),
         F.col("originProductNo").cast("bigint").alias("product_no"),
@@ -97,10 +87,12 @@ def parse_products(rows: DataFrame, channel_seq: int) -> DataFrame:
         F.col("sellerTags").alias("tags"),
         F.col("salePrice").cast("int").alias("price"),
         F.col("discountedPrice").cast("int").alias("sales_price"),
-        delivery.alias("delivery_type"),
+        enum_code(
+            "deliveryAttributeType", {code: seq for seq, code, _ in DELIVERY_TYPES}
+        ).alias("delivery_type"),
         F.col("deliveryFee").cast("int").alias("delivery_fee"),
-        _iso_ts("regDate").alias("register_dt"),
-        _iso_ts("modifiedDate").alias("modify_dt"),
+        iso_ts("regDate").alias("register_dt"),
+        iso_ts("modifiedDate").alias("modify_dt"),
     )
 
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linkmerce_spark.functions.scalar import enum_code, iso_ts
+
 __all__ = [
     "split_category",
     "parse_brand_catalog",
@@ -72,12 +74,6 @@ PRODUCT_ORDER_TYPES = [
     ("POST_ORDER_ADJUSTMENT_AMOUNT", "주문 후 변동 금액"),
     ("CSF", "통관 대행료"), ("CONCESSION", "구매자 보상"),
 ]
-
-
-def _iso_ts(col: str) -> Column:
-    return F.try_to_timestamp(
-        F.substring(F.col(col), 1, 19), F.lit("yyyy-MM-dd'T'HH:mm:ss")
-    )
 
 
 def split_category(full_id: Column | str, full_name: Column | str) -> list[Column]:
@@ -127,7 +123,7 @@ def parse_brand_catalog(rows: DataFrame) -> DataFrame:
         F.col("productCount").cast("int").alias("product_count"),
         F.col("totalReviewCount").cast("int").alias("review_count"),
         F.col("reviewRating").try_cast("tinyint").alias("review_rating"),
-        _iso_ts("registerDate").alias("register_dt"),
+        iso_ts("registerDate").alias("register_dt"),
     )
 
 
@@ -153,7 +149,7 @@ def parse_brand_products(rows: DataFrame, mall_seq: int) -> DataFrame:
         F.col("deliveryFee").try_cast("int").alias("delivery_fee"),
         F.col("clickCount").cast("int").alias("click_count"),
         F.col("totalReviewCount").cast("int").alias("review_count"),
-        _iso_ts("registerDate").alias("register_dt"),
+        iso_ts("registerDate").alias("register_dt"),
     )
 
 
@@ -277,9 +273,6 @@ def parse_settlements(rows: DataFrame, channel_seq: int) -> DataFrame:
     """Settlement bulk_insert (settlement/models.sql:21-46): HUGEINT
     order ids as DECIMAL(38,0), the settleType enum, and the pay-date
     guard."""
-    settle = F.lit(None).cast("int")
-    for code, seq in reversed(list(SETTLE_TYPES.items())):
-        settle = F.when(F.col("settleType") == code, F.lit(seq)).otherwise(settle)
     pay_date = F.try_to_timestamp(F.col("payDate"), F.lit("yyyy-MM-dd")).cast("date")
     return rows.filter(pay_date.isNotNull()).select(
         F.col("productOrderId").cast("decimal(38,0)").alias("product_order_id"),
@@ -287,7 +280,7 @@ def parse_settlements(rows: DataFrame, channel_seq: int) -> DataFrame:
         F.lit(channel_seq).cast("bigint").alias("channel_seq"),
         F.col("productId").try_cast("bigint").alias("product_id"),
         F.col("productOrderType").alias("product_order_type"),
-        settle.alias("settle_type"),
+        enum_code("settleType", SETTLE_TYPES).alias("settle_type"),
         F.col("paySettleAmount").cast("int").alias("payment_amount"),
         F.col("totalPayCommissionAmount").cast("int").alias("pay_commision_amount"),
         F.col("freeInstallmentCommissionAmount")

@@ -92,11 +92,11 @@ def exact_dedup(
     Adds ``fp`` (md5 of normalized text) and ``dup_count`` (group size).
     Single shuffle on the fingerprint — uniform distribution, no skew.
     """
-    from linkmerce_spark.operators.minhash import _fanout
+    from linkmerce_spark.frames import widen_scan
 
-    # fanout: the regex-normalize + md5 map work otherwise runs at the
+    # widen: the regex-normalize + md5 map work otherwise runs at the
     # scan's parallelism (1 partition for a small file).
-    with_fp = _fanout(df).withColumn("fp", fingerprint(text_col))
+    with_fp = widen_scan(df).withColumn("fp", fingerprint(text_col))
     w = Window.partitionBy("fp").orderBy(F.col(id_col).asc())
     return (
         with_fp.withColumn("__rn", F.row_number().over(w))

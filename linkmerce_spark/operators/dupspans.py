@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from linkmerce_spark.functions.text import gram_hash, gram_starts
+
 __all__ = [
     "dup_span_coverage",
     "dup_span_rewrite",
@@ -71,14 +73,10 @@ def dup_span_coverage(
     words = F.coalesce(
         F.split(F.col(text_col), " "), F.array().cast("array<string>")
     )
-    n_grams = F.size(words) - n + 1
-    starts = F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = df.select(
         F.col(id_col),
         F.size(words).alias("_nw"),
-        F.explode_outer(starts).alias("_pos"),
+        F.explode_outer(gram_starts(words, n)).alias("_pos"),
         words.alias("_w"),
     ).select(
         F.col(id_col),
@@ -86,7 +84,7 @@ def dup_span_coverage(
         F.col("_pos"),
         F.when(
             F.col("_pos").isNotNull(),
-            F.xxhash64(F.array_join(F.slice(F.col("_w"), F.col("_pos"), n), " ")),
+            gram_hash(F.col("_w"), F.col("_pos"), n),
         ).alias("_gram"),
     )
     occurrences = (
@@ -187,20 +185,14 @@ def dup_span_rewrite(
     words = F.coalesce(
         F.split(F.col(text_col), " "), F.array().cast("array<string>")
     )
-    n_grams = F.size(words) - n + 1
-    starts = F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = df.select(
         F.col(id_col),
-        F.explode(starts).alias("_pos"),
+        F.explode(gram_starts(words, n)).alias("_pos"),
         words.alias("_w"),
     ).select(
         F.col(id_col),
         F.col("_pos"),
-        F.xxhash64(F.array_join(F.slice(F.col("_w"), F.col("_pos"), n), " ")).alias(
-            "_gram"
-        ),
+        gram_hash(F.col("_w"), F.col("_pos"), n).alias("_gram"),
     )
     # canonical occurrence = lexicographic min (doc_id, pos), encoded
     # as one BIGINT (doc_id * 2^32 + pos — positions are word indexes,

@@ -28,7 +28,7 @@ Scale design
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -58,14 +58,14 @@ def winnow_fingerprints(
     distinct. Docs shorter than k+w-1 normalized chars produce no
     fingerprints (no complete window), mirroring the guarantee bound.
     """
-    from linkmerce_spark.operators.minhash import _fanout
+    from linkmerce_spark.frames import widen_scan
 
     # Materialize the normalized text before slicing: the gram lambda
     # would otherwise inline (and re-run) the regex normalizer per
     # reference (same pitfall as operators/minhash._with_shingles).
-    # _fanout spreads the gram/hash map work beyond the scan's split
+    # widen_scan spreads the gram/hash map work beyond the scan's split
     # count (a small file reads as one partition).
-    norm = _fanout(df).withColumn("__norm", normalize_text(text_col))
+    norm = widen_scan(df).withColumn("__norm", normalize_text(text_col))
     grams = norm.withColumn(
         "__grams",
         F.when(

@@ -604,6 +604,43 @@ def _check_sampling_divisible(comps: list) -> None:
             )
 
 
+def _read_table(marker: int, seg: bytes, qtables: dict, htables: dict) -> None:
+    """Read a DQT (8- or 16-bit entries) or a DHT segment into
+    ``qtables`` / ``htables``."""
+    p = 0
+    while p < len(seg):
+        if marker == 0xDB:
+            pq, tq = seg[p] >> 4, seg[p] & 0x0F
+            width_ = 2 if pq else 1
+            vals = seg[p + 1 : p + 1 + 64 * width_]
+            qtables[tq] = list(struct.unpack(f">{64}H", vals)) if pq else list(vals)
+            p += 1 + 64 * width_
+        else:
+            tc, th = seg[p] >> 4, seg[p] & 0x0F
+            bits = list(seg[p + 1 : p + 17])
+            n = sum(bits)
+            htables[(tc, th)] = _codes_from_dht(bits, list(seg[p + 17 : p + 17 + n]))
+            p += 17 + n
+
+
+def _read_frame(seg: bytes) -> tuple[int, int, int, list]:
+    """An SOF segment's ``(width, height, n_components, components)``:
+    8-bit precision only, T.81 sampling factors 1..4 that divide the
+    frame maximum."""
+    precision, h, w, nc = struct.unpack(">BHHB", seg[:6])
+    if precision != 8:
+        raise ValueError(f"unsupported precision {precision}")
+    comps = []
+    for c in range(nc):
+        cid, sampling, tq = seg[6 + 3 * c : 9 + 3 * c]
+        hs, vs = sampling >> 4, sampling & 0x0F
+        if not (1 <= hs <= 4 and 1 <= vs <= 4):
+            raise ValueError(f"sampling factors {hs}x{vs} out of T.81 range")
+        comps.append({"id": cid, "tq": tq, "h": hs, "v": vs})
+    _check_sampling_divisible(comps)
+    return w, h, nc, comps
+
+
 def _decode_huffman(reader: _BitReader, codes: dict) -> int:
     code = 0
     for ln in range(1, 17):
@@ -648,39 +685,10 @@ def decode_jpeg(content: bytes, want_pixels: bool = False) -> dict:
             return _decode_progressive(content, want_pixels)
         if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(f"non-baseline SOF 0x{marker:02x} needs the library tier")
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                width_ = 2 if pq else 1
-                vals = seg[p + 1 : p + 1 + 64 * width_]
-                if pq:
-                    table = list(struct.unpack(f">{64}H", vals))
-                else:
-                    table = list(vals)
-                qtables[tq] = table
-                p += 1 + 64 * width_
-        elif marker == 0xC4:
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0x0F
-                bits = list(seg[p + 1 : p + 17])
-                n = sum(bits)
-                huffval = list(seg[p + 17 : p + 17 + n])
-                htables[(tc, th)] = _codes_from_dht(bits, huffval)
-                p += 17 + n
+        if marker in (0xDB, 0xC4):
+            _read_table(marker, seg, qtables, htables)
         elif marker == 0xC0:
-            precision, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if precision != 8:
-                raise ValueError(f"unsupported precision {precision}")
-            comps = []
-            for c in range(nc):
-                cid, sampling, tq = seg[6 + 3 * c : 9 + 3 * c]
-                hs, vs = sampling >> 4, sampling & 0x0F
-                if not (1 <= hs <= 4 and 1 <= vs <= 4):
-                    raise ValueError(f"sampling factors {hs}x{vs} out of T.81 range")
-                comps.append({"id": cid, "tq": tq, "h": hs, "v": vs})
-            _check_sampling_divisible(comps)
+            w, h, nc, comps = _read_frame(seg)
             sof = (w, h, nc)
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack(">H", seg[:2])
@@ -867,38 +875,10 @@ def _decode_progressive(content: bytes, want_pixels: bool = False) -> dict:
             break
         (seglen,) = struct.unpack(">H", content[pos + 2 : pos + 4])
         seg = content[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                width_ = 2 if pq else 1
-                vals = seg[p + 1 : p + 1 + 64 * width_]
-                qtables[tq] = (
-                    list(struct.unpack(f">{64}H", vals)) if pq else list(vals)
-                )
-                p += 1 + 64 * width_
-        elif marker == 0xC4:
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0x0F
-                bits = list(seg[p + 1 : p + 17])
-                n = sum(bits)
-                htables[(tc, th)] = _codes_from_dht(
-                    bits, list(seg[p + 17 : p + 17 + n])
-                )
-                p += 17 + n
+        if marker in (0xDB, 0xC4):
+            _read_table(marker, seg, qtables, htables)
         elif marker == 0xC2:
-            precision, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if precision != 8:
-                raise ValueError(f"unsupported precision {precision}")
-            comps = []
-            for c in range(nc):
-                cid, sampling, tq = seg[6 + 3 * c : 9 + 3 * c]
-                hs, vs = sampling >> 4, sampling & 0x0F
-                if not (1 <= hs <= 4 and 1 <= vs <= 4):
-                    raise ValueError(f"sampling factors {hs}x{vs} out of T.81 range")
-                comps.append({"id": cid, "tq": tq, "h": hs, "v": vs})
-            _check_sampling_divisible(comps)
+            w, h, nc, comps = _read_frame(seg)
             sof = (w, h, nc)
             hmax = max(c_["h"] for c_ in comps)
             vmax = max(c_["v"] for c_ in comps)

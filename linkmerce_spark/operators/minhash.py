@@ -19,10 +19,11 @@ Scale design
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkmerce_spark import memo
+from linkmerce_spark.frames import widen_scan
 from linkmerce_spark.functions.text import shingles_from_tokens, word_tokens
 
 __all__ = [
@@ -32,20 +33,6 @@ __all__ = [
     "simhash32",
     "jaccard_pairs",
 ]
-
-
-def _fanout(df: DataFrame) -> DataFrame:
-    """Spread CPU-bound map work across all cores.
-
-    Shingling + k hash mins are pure map stages; their parallelism is
-    the *scan* parallelism, which for a small file is 1 partition — so
-    the whole corpus hashes on one core. Delegates to
-    ``frames.widen_scan`` (memoized partition probe; no-op at real
-    scale where the scan already has thousands of splits).
-    """
-    from linkmerce_spark.frames import widen_scan
-
-    return widen_scan(df)
 
 
 def _with_shingles(
@@ -110,7 +97,7 @@ def minhash_signature(
     # would be pushed down with the full shingle expression inlined.
     # A lazy checkpoint keeps explode's inferred size(shingles)>0 out of
     # the scan too, and the first of its three consumers materializes it.
-    sh = _with_shingles(_fanout(df), text_col, shingle_words, "shingles")
+    sh = _with_shingles(widen_scan(df), text_col, shingle_words, "shingles")
     sh = memo.checkpoint(sh, eager=False)
     # Explode + hash-aggregate instead of array_min(transform(...)):
     # higher-order array functions evaluate interpreted, while the
@@ -148,7 +135,7 @@ def minhash_sigs(
     aggregation); shingle-less docs are absent, as in
     ``minhash_signature``.
     """
-    toks = _with_shingles(_fanout(df), text_col, shingle_words, "shingles")
+    toks = _with_shingles(widen_scan(df), text_col, shingle_words, "shingles")
     ex = toks.select(id_col, F.explode("shingles").alias("__s")).withColumn(
         "__h", _hash32(F.col("__s"))
     )
@@ -288,7 +275,7 @@ def simhash32(df: DataFrame, text_col: str = "text", out: str = "simhash") -> Da
     md5s are computed once per token, then folded per bit position.
     """
     high = ("8", "9", "a", "b", "c", "d", "e", "f")
-    df = _fanout(df).withColumn("__tok_md5", F.transform(word_tokens(text_col), lambda t: F.md5(t)))
+    df = widen_scan(df).withColumn("__tok_md5", F.transform(word_tokens(text_col), lambda t: F.md5(t)))
     bits = F.transform(
         F.sequence(F.lit(1), F.lit(32)),
         lambda i: F.when(
@@ -328,10 +315,10 @@ def jaccard_pairs(
     whose probes are a subset of candidates dedup the probe-probe
     duplicates themselves (e.g. ``id_b not probe OR id_a < id_b``).
     """
-    p = _with_shingles(_fanout(probes), text_col, shingle_words, "sh_a", require=True).select(
+    p = _with_shingles(widen_scan(probes), text_col, shingle_words, "sh_a", require=True).select(
         *join_on, F.col(id_col).alias("id_a"), "sh_a"
     )
-    c = _with_shingles(_fanout(candidates), text_col, shingle_words, "sh_b", require=True).select(
+    c = _with_shingles(widen_scan(candidates), text_col, shingle_words, "sh_b", require=True).select(
         *join_on, F.col(id_col).alias("id_b"), "sh_b"
     )
     pair_cond = (

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkmerce_spark import memo
+from linkmerce_spark.functions.text import gram_hash, gram_starts
 
 __all__ = [
     "pagerank",
@@ -194,19 +195,13 @@ def shared_gram_edges(
     df = widen_scan(df.where(F.col(group_col).isNotNull()))
     # the gram explode behind this scan is ~50x the input bytes
     words = F.split(F.col(text_col), " ")
-    n_grams = F.size(words) - n + 1
-    starts = F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = df.select(
         F.col(group_col).alias("__g"),
-        F.explode(starts).alias("__pos"),
+        F.explode(gram_starts(words, n)).alias("__pos"),
         words.alias("__w"),
     ).select(
         "__g",
-        F.xxhash64(
-            F.array_join(F.slice(F.col("__w"), F.col("__pos"), n), " ")
-        ).alias("__gram"),
+        gram_hash(F.col("__w"), F.col("__pos"), n).alias("__gram"),
     )
     # Pre-shuffle on the gram key so the set aggregation runs ONCE on
     # co-located rows: a groupBy straight off the explode plans a

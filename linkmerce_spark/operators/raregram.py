@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from linkmerce_spark.functions.text import gram_hash, gram_starts
+
 __all__ = [
     "rare_gram_stats",
 ]
@@ -59,19 +61,15 @@ def rare_gram_stats(
 
     df = widen_scan(df)  # token/gram explode far exceeds the scan bytes
     words = F.split(F.col(text_col), " ")
-    n_grams = F.size(words) - n + 1
-    starts = F.when(n_grams >= 1, F.sequence(F.lit(1), n_grams)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = df.select(
         F.col(id_col),
-        F.explode_outer(starts).alias("_pos"),
+        F.explode_outer(gram_starts(words, n)).alias("_pos"),
         words.alias("_w"),
     ).select(
         F.col(id_col),
         F.when(
             F.col("_pos").isNotNull(),
-            F.xxhash64(F.array_join(F.slice(F.col("_w"), F.col("_pos"), n), " ")),
+            gram_hash(F.col("_w"), F.col("_pos"), n),
         ).alias("_gram"),
     )
     occ = (

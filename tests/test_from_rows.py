@@ -144,3 +144,21 @@ def test_from_rows_is_the_only_create_dataframe_door():
         if re.search(r"createDataFrame\(", line)
     ]
     assert not hits, hits
+
+
+def test_long_meets_double_as_double(spark):
+    """Inference widens long and double to double, as DuckDB unifies
+    INTEGER and DOUBLE; PySpark alone raises CANNOT_MERGE_TYPE, and in
+    a map nest its answer hung on key order."""
+    df = from_rows(spark, [{"a": 1}, {"a": None}, {"a": 2.5}])
+    assert df.schema.simpleString() == "struct<a:double>"
+    assert [r.a for r in df.collect()] == [1.0, None, 2.5]
+    df = from_rows(spark, [{"m": {"x": 1, "y": 2.5}, "l": [1, 2.5]}])
+    assert df.schema.simpleString() == "struct<l:array<double>,m:map<string,double>>"
+    assert df.first().asDict() == {"m": {"x": 1.0, "y": 2.5}, "l": [1.0, 2.5]}
+    for order in ({"orderId": 1001, "amt": 2.5, "st": "A"}, {"orderId": 1001, "st": "A", "amt": 2.5}):
+        df = from_rows(spark, [{"content": {"order": order}}])
+        assert df.schema.simpleString() == "struct<content:map<string,map<string,string>>>"
+        assert df.first().content["order"] == {"orderId": "1001", "amt": "2.5", "st": "A"}
+    # batches PySpark infers keep its schema
+    _same(spark, [{"a": 1, "b": 1.5, "c": "x"}, {"a": 2, "b": 2.0, "c": 3}])
