@@ -102,7 +102,8 @@ def from_rows(
     (non-string scalars in string fields become text, ``True`` as
     ``'true'``; naive ``datetime`` values are the process's local time).
     Decimals take the JVM's reading: rounded half-up to the column's
-    scale, NaN as NULL.
+    scale, NaN as NULL. Where inference meets a ``bool`` and a long in
+    one field, the ``bool`` reads as 1/0.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.serializers import ArrowStreamSerializer
@@ -128,7 +129,7 @@ def from_rows(
     columns = list(zip(*internal)) or [()] * len(struct.fields)
     arrays = []
     for f, values in zip(struct.fields, columns):
-        fix = _decimal_reader(f.dataType)
+        fix = _leaf_reader(f.dataType)
         arrays.append(
             pa.array(
                 values if fix is None else [fix(v) for v in values],
@@ -155,8 +156,10 @@ _INFER_LOCK = threading.Lock()
 
 def _infer_schema(spark: SparkSession, rows: list, names: list[str] | None) -> StructType:
     """``createDataFrame``'s own row inference (private: PySpark has no
-    public one) with one widening: where a long meets a double the type
-    is double, as DuckDB unifies INTEGER and DOUBLE. PySpark raises
+    public one) with two widenings, as DuckDB unifies its types: where a
+    long meets a double the type is double (INTEGER and DOUBLE), and
+    where a bool meets a long it is long (``VALUES (true), (1)`` types
+    as INTEGER, reading ``true`` as 1). PySpark raises
     ``CANNOT_MERGE_TYPE`` there (``[{"a": 1}, {"a": 2.5}]``), and inside
     one map its answer hangs on key order. Its merge is looked up as a
     module global at every step, so the widening wraps it for this call
@@ -167,8 +170,11 @@ def _infer_schema(spark: SparkSession, rows: list, names: list[str] | None) -> S
     merge = types._merge_type
 
     def widen(a, b, name=None):
-        if {type(a), type(b)} == {types.LongType, types.DoubleType}:
+        pair = {type(a), type(b)}
+        if pair == {types.LongType, types.DoubleType}:
             return types.DoubleType()
+        if pair == {types.BooleanType, types.LongType}:
+            return types.LongType()
         return merge(a, b, name)
 
     with _INFER_LOCK:
@@ -179,15 +185,19 @@ def _infer_schema(spark: SparkSession, rows: list, names: list[str] | None) -> S
             types._merge_type = session._merge_type = merge
 
 
-def _decimal_reader(dt: Any):
-    """Per-value fix-up for decimal leaves of ``dt`` (``None`` when it
-    has none): the JVM reading of a ``Decimal`` — half-up to the scale,
-    NaN as NULL — where Arrow would refuse a lossy rescale. A value too
-    wide for the column still raises, as it does on the JVM."""
+def _leaf_reader(dt: Any):
+    """Per-value fix-up for the decimal and long leaves of ``dt``
+    (``None`` when it has none), where Arrow refuses a value: a
+    ``Decimal`` takes the JVM reading, half-up to the scale and NaN as
+    NULL (Arrow would refuse a lossy rescale; a value too wide for the
+    column still raises, as it does on the JVM), and a ``bool`` in a
+    long field, which only inference puts there, reads as 1/0."""
     from decimal import ROUND_HALF_UP, Context, Decimal
 
-    from pyspark.sql.types import ArrayType, DecimalType, MapType
+    from pyspark.sql.types import ArrayType, DecimalType, LongType, MapType
 
+    if isinstance(dt, LongType):
+        return lambda v: int(v) if v.__class__ is bool else v
     if isinstance(dt, DecimalType):
         quantum = Decimal(1).scaleb(-dt.scale)
         wide = Context(prec=2 * dt.precision + dt.scale)
@@ -199,18 +209,18 @@ def _decimal_reader(dt: Any):
 
         return read
     if isinstance(dt, ArrayType):
-        elem = _decimal_reader(dt.elementType)
+        elem = _leaf_reader(dt.elementType)
         if elem is None:
             return None
         return lambda v: None if v is None else [elem(x) for x in v]
     if isinstance(dt, MapType):
-        key, val = _decimal_reader(dt.keyType), _decimal_reader(dt.valueType)
+        key, val = _leaf_reader(dt.keyType), _leaf_reader(dt.valueType)
         if key is None and val is None:
             return None
         key, val = key or (lambda x: x), val or (lambda x: x)
         return lambda v: None if v is None else {key(k): val(x) for k, x in v.items()}
     if isinstance(dt, StructType):
-        fields = [_decimal_reader(f.dataType) for f in dt.fields]
+        fields = [_leaf_reader(f.dataType) for f in dt.fields]
         if all(f is None for f in fields):
             return None
         fields = [f or (lambda x: x) for f in fields]

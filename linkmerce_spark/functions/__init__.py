@@ -12,6 +12,7 @@ from linkmerce_spark.functions.scalar import (  # noqa: F401
     try_strptime,
     iso_ts,
     split_part,
+    lookup,
     enum_code,
     money,
     int_div,
@@ -30,6 +31,7 @@ __all__ = [
     "try_strptime",
     "iso_ts",
     "split_part",
+    "lookup",
     "enum_code",
     "money",
     "int_div",

@@ -11,7 +11,9 @@ Mapping table (reference site -> here):
 - ``split_part(s, sep, n)``
   (dbt_postgres/.../smartstore__sales_daily.sql:147)  -> ``split_part`` (Spark builtin passthrough)
 - CASE-WHEN enum encoding, 306 uses
-  (core/smartstore/api/order/models.sql:91-117)       -> ``enum_code`` map-literal lookup
+  (core/smartstore/api/order/models.sql:91-117)       -> ``enum_code``: ``lookup`` plus its int cast
+- ``(VALUES ...) AS mapping(seq, code, label)`` LEFT JOINs
+  (dbt_postgres/macros/mapping/*.sql)                 -> ``lookup`` map literal
 - ``DIV``/``MOD`` integer split
   (dbt_postgres/.../searchad__insight_daily.sql:201)  -> ``int_div`` / ``F.pmod``
 - ``generate_series(date, date, interval)`` date spine
@@ -33,6 +35,7 @@ __all__ = [
     "try_strptime",
     "iso_ts",
     "split_part",
+    "lookup",
     "enum_code",
     "money",
     "int_div",
@@ -80,21 +83,42 @@ def split_part(c: Column | str, sep: str, n: int) -> Column:
     return F.split_part(_col(c), F.lit(sep), F.lit(n))
 
 
+def _sql_literal(v: str | int | None) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    raise TypeError(f"lookup literal must be str, int or None, got {v!r}")
+
+
+def lookup(c: Column | str, mapping: Mapping[str | int, str | int | None]) -> Column:
+    """Code -> value lookup as one map literal; a missing or NULL code
+    reads NULL, as the LEFT JOIN to a ``(VALUES ...)`` mapping did.
+
+    The map is parsed from SQL text in one ``F.expr`` call: per-entry
+    ``F.lit`` pairs under ``F.create_map`` cost ~30x the py4j round
+    trips (285 against 9 for a 34-entry map), and ``F.lit(dict)`` is
+    not a supported literal. An integral key column wider than the
+    map's keys widens the map, as the join widened the code column; a
+    string key against int codes fails analysis instead of casting.
+    """
+    entries = ", ".join(f"{_sql_literal(k)}, {_sql_literal(v)}" for k, v in mapping.items())
+    return F.element_at(F.expr(f"map({entries})"), _col(c))
+
+
 def enum_code(
     c: Column | str,
     mapping: Mapping[str, int],
     default: int | None = None,
 ) -> Column:
-    """String -> small-int enum encode as a map-literal lookup.
+    """String -> small-int enum encode: ``lookup`` cast to int.
 
     One ``element_at(map(...))`` expression instead of a 12-arm CASE
     chain: constant-folded by Catalyst, and the mapping is data not code.
     """
-    pairs: list[Column] = []
-    for k, v in mapping.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    looked = F.element_at(F.create_map(*pairs), _col(c))
+    looked = lookup(c, mapping)
     if default is not None:
         looked = F.coalesce(looked, F.lit(default))
     return looked.cast("int")

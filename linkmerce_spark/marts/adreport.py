@@ -22,8 +22,9 @@ marts/core_masters) — the dbt models also consume them as relations.
 
 Scale notes
 -----------
-- Masters and mappings are dims: every join broadcasts; the only wide
-  plans are the insight scans themselves, filtered by ymd literals
+- Masters are dims: every join broadcasts, and the code->label
+  mappings are map-literal lookups, not joins; the only wide plans are
+  the insight scans themselves, filtered by ymd literals
   (partition-prunable).
 - The union is column harmonization only — no shuffle added on top of
   the branch plans.
@@ -35,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from linkmerce_spark.frames import values_df
+from linkmerce_spark.functions.scalar import lookup
 
 __all__ = [
     "searchad_report_daily",
@@ -102,14 +103,9 @@ def searchad_report_daily(
     end_date: str,
 ) -> DataFrame:
     """searchad__report_daily.sql:17-135: insight + contract branches."""
-    spark = insight.sparkSession
-    dev = broadcast(
-        values_df(spark, SEARCHAD_DEVICE_TYPES, "seq int, code int, label string")
-    ).alias("dev")
     ins = (
         insight.filter(_between("ymd", start_date, end_date))
         .alias("insight")
-        .join(dev, F.col("insight.device_type") == F.col("dev.code"), "left")
         .join(
             broadcast(campaign_master.alias("cmp")),
             F.col("insight.campaign_id") == F.col("cmp.campaign_id"),
@@ -151,7 +147,10 @@ def searchad_report_daily(
         F.col("ad.mall_product_id").alias("mall_product_id"),
         F.col("insight.product_id").alias("product_id"),
         *_product_attrs(),
-        F.coalesce(F.col("dev.label"), F.lit("-")).alias("device_type"),
+        F.coalesce(
+            lookup("insight.device_type", {c: l for _, c, l in SEARCHAD_DEVICE_TYPES}),
+            F.lit("-"),
+        ).alias("device_type"),
         "insight.impression_count",
         "insight.click_count",
         "insight.ad_cost",
@@ -220,14 +219,9 @@ def google_report_daily(
     end_date: str,
 ) -> DataFrame:
     """google_ads__report_daily.sql:17-62."""
-    spark = insight.sparkSession
-    dev = broadcast(
-        values_df(spark, GOOGLE_DEVICE_TYPES, "seq int, code int, label string")
-    ).alias("dev")
     out = (
         insight.filter(_between("ymd", start_date, end_date))
         .alias("insight")
-        .join(dev, F.col("insight.device_type") == F.col("dev.code"), "left")
         .join(
             broadcast(ad_master.alias("master")),
             F.col("insight.ad_id") == F.col("master.ad_id"),
@@ -256,7 +250,10 @@ def google_report_daily(
         F.coalesce("master.ad_status", F.lit("알 수 없음")).alias("ad_status"),
         F.col("insight.product_id").alias("product_id"),
         *_product_attrs(),
-        F.coalesce(F.col("dev.label"), F.lit("-")).alias("device_type"),
+        F.coalesce(
+            lookup("insight.device_type", {c: l for _, c, l in GOOGLE_DEVICE_TYPES}),
+            F.lit("-"),
+        ).alias("device_type"),
         "insight.impression_count",
         "insight.click_count",
         "insight.ad_cost",
@@ -317,14 +314,9 @@ def coupang_report_daily(
     end_date: str,
 ) -> DataFrame:
     """coupang_ads__report_daily.sql:17-70."""
-    spark = insight.sparkSession
-    pl = broadcast(
-        values_df(spark, COUPANG_PLACEMENT_GROUPS, "seq int, code int, label string")
-    ).alias("pl")
     out = (
         insight.filter(_between("ymd", start_date, end_date))
         .alias("insight")
-        .join(pl, F.col("insight.placement_group") == F.col("pl.code"), "left")
         .join(
             broadcast(campaign_master.alias("master")),
             F.col("insight.campaign_id") == F.col("master.campaign_id"),
@@ -366,7 +358,10 @@ def coupang_report_daily(
         .otherwise(F.col("option.product_name"))
         .alias("option_name"),
         F.col("option.category_name").alias("category_name_cpg"),
-        F.coalesce(F.col("pl.label"), F.lit("-")).alias("placement_group"),
+        F.coalesce(
+            lookup("insight.placement_group", {c: l for _, c, l in COUPANG_PLACEMENT_GROUPS}),
+            F.lit("-"),
+        ).alias("placement_group"),
         "insight.impression_count",
         "insight.click_count",
         "insight.ad_cost",

@@ -16,20 +16,20 @@ dbt_postgres/models/intermediate/ads/:
 - ``google_ad_master``          ~ google_ads/google_ads__ad_master.sql
   (:19-108): the deep one — ad -> adgroup -> campaign -> account dim
   chain, four label maps, the final status resolved by
-  GREATEST(campaign, adgroup, ad status seq) re-joined to the status
-  map, and bundle_product_ids resolved ad > adgroup > campaign from the
-  level-filtered relation table.
+  GREATEST(campaign, adgroup, ad status seq) looked back up through
+  the status vocabulary, and bundle_product_ids resolved ad > adgroup >
+  campaign from the level-filtered relation table.
 
 The label vocabularies live in the reference's dbt macros
 (dbt_postgres/macros/mapping/{searchad,meta_ads,coupang_ads,
 google_ads}.sql) — reproduced here as (seq, code, label) tuples and
-planned as JVM LocalRelations (``values_df``).
+looked up as map literals (``functions.scalar.lookup``).
 
 Scale notes
 -----------
-- Every mapping is a literal VALUES dim and every account/vendor/
-  campaign/adgroup frame is dimension-sized: ALL joins broadcast, zero
-  shuffles in any master build. At 100 TB the entity tables are still
+- Every mapping is a map-literal lookup (no join) and every account/
+  vendor/campaign/adgroup frame is dimension-sized: ALL joins
+  broadcast, zero shuffles in any master build. At 100 TB the entity tables are still
   dims (ads, not facts); if one ever grows, the equi-joins shuffle
   cleanly on unskewed ids.
 - Sort keys are pure integer arithmetic (codegen).
@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from linkmerce_spark.frames import values_df
+from linkmerce_spark.functions.scalar import lookup
 
 __all__ = [
     "searchad_campaign_master",
@@ -309,14 +309,6 @@ GOOGLE_AD_TYPES = [
     (33, "YOUTUBE_AUDIO_AD", "유튜브 오디오 광고"),
 ]
 
-_MAP_SCHEMA_INT = "seq int, code int, label string"
-_MAP_SCHEMA_STR = "seq int, code string, label string"
-
-
-def _mapping(df_or_rows, spark, schema: str) -> DataFrame:
-    rows = df_or_rows
-    return values_df(spark, rows, schema)
-
 
 def _level_rel(relation: DataFrame, level: int, alias: str) -> DataFrame:
     """The bundle relation rows of one ad level (0/1/2 = campaign /
@@ -331,33 +323,18 @@ def _level_rel(relation: DataFrame, level: int, alias: str) -> DataFrame:
     )
 
 
-def _seq99(col: str) -> Column:
-    return F.coalesce(F.col(col), F.lit(99))
+def _seq99(col: Column | str) -> Column:
+    return F.coalesce(col, F.lit(99))
 
 
 def searchad_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFrame:
     """searchad__campaign_master.sql:19-47 on Spark frames."""
-    spark = campaign.sparkSession
-    ctype = _mapping(SEARCHAD_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_INT)
-    adtype = _mapping(SEARCHAD_CAMPAIGN_AD_TYPES, spark, _MAP_SCHEMA_INT)
-    cmp_, acc = campaign.alias("cmp"), account.alias("acc")
-    out = (
-        cmp_.join(broadcast(acc), "customer_id", "left")
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(adtype.alias("at")),
-            F.col("cmp.campaign_type") == F.col("at.code"),
-            "left",
-        )
-    )
+    ctype = "cmp.campaign_type"
+    out = campaign.alias("cmp").join(broadcast(account.alias("acc")), "customer_id", "left")
     sort_key = (
         F.when(F.col("cmp.is_deleted"), F.lit(2)).otherwise(F.lit(1)) * 100 * 100
         + _seq99("acc.account_seq") * 100
-        + _seq99("ct.seq")
+        + _seq99(lookup(ctype, {c: s for s, c, _ in SEARCHAD_CAMPAIGN_TYPES}))
     )
     return out.select(
         "customer_id",
@@ -365,8 +342,8 @@ def searchad_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFra
         "acc.account_type",
         "cmp.campaign_id",
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
-        F.col("at.label").alias("ad_type"),
+        lookup(ctype, {c: l for _, c, l in SEARCHAD_CAMPAIGN_TYPES}).alias("campaign_type"),
+        lookup(ctype, {c: l for _, c, l in SEARCHAD_CAMPAIGN_AD_TYPES}).alias("ad_type"),
         "cmp.is_enabled",
         "cmp.is_deleted",
         "cmp.created_at",
@@ -377,23 +354,8 @@ def searchad_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFra
 
 def meta_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFrame:
     """meta_ads__campaign_master.sql:19-45 on Spark frames."""
-    spark = campaign.sparkSession
-    obj = _mapping(META_OBJECTIVES, spark, _MAP_SCHEMA_STR)
-    st = _mapping(META_EFFECTIVE_STATUSES, spark, _MAP_SCHEMA_STR)
-    out = (
-        campaign.alias("cmp")
-        .join(broadcast(account.alias("acc")), "account_id", "left")
-        .join(
-            broadcast(obj.alias("ob")),
-            F.col("cmp.objective") == F.col("ob.code"),
-            "left",
-        )
-        .join(
-            broadcast(st.alias("es")),
-            F.col("cmp.effective_status") == F.col("es.code"),
-            "left",
-        )
-    )
+    objective = "cmp.objective"
+    out = campaign.alias("cmp").join(broadcast(account.alias("acc")), "account_id", "left")
     sort_key = (
         F.when(F.col("cmp.effective_status") == "DELETED", F.lit(2)).otherwise(
             F.lit(1)
@@ -401,15 +363,17 @@ def meta_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFrame:
         * 100
         * 100
         + _seq99("acc.account_seq") * 100
-        + _seq99("ob.seq")
+        + _seq99(lookup(objective, {c: s for s, c, _ in META_OBJECTIVES}))
     )
     return out.select(
         "account_id",
         "acc.account_name",
         "cmp.campaign_id",
         "cmp.campaign_name",
-        F.col("ob.label").alias("objective"),
-        F.col("es.label").alias("effective_status"),
+        lookup(objective, {c: l for _, c, l in META_OBJECTIVES}).alias("objective"),
+        lookup(
+            "cmp.effective_status", {c: l for _, c, l in META_EFFECTIVE_STATUSES}
+        ).alias("effective_status"),
         "cmp.created_at",
         sort_key.alias("sort_key"),
     )
@@ -417,51 +381,44 @@ def meta_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFrame:
 
 def coupang_campaign_master(campaign: DataFrame, vendor: DataFrame) -> DataFrame:
     """coupang_ads__campaign_master.sql:19-55 on Spark frames."""
-    spark = campaign.sparkSession
-    vtype = _mapping(COUPANG_VENDOR_TYPES, spark, _MAP_SCHEMA_INT)
-    ctype = _mapping(COUPANG_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_STR)
-    gtype = _mapping(COUPANG_GOAL_TYPES, spark, _MAP_SCHEMA_INT)
-    out = (
-        campaign.alias("cmp")
-        .join(broadcast(vendor.alias("vdr")), "vendor_id", "left")
-        .join(
-            broadcast(vtype.alias("vt")),
-            F.col("cmp.vendor_type") == F.col("vt.code"),
-            "left",
-        )
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("gt")),
-            F.col("cmp.goal_type") == F.col("gt.code"),
-            "left",
-        )
-    )
+    goal = "cmp.goal_type"
+    out = campaign.alias("cmp").join(broadcast(vendor.alias("vdr")), "vendor_id", "left")
     sort_key = (
         F.when(F.col("cmp.is_deleted"), F.lit(2)).otherwise(F.lit(1)) * 10 * 100
         + F.coalesce(F.col("vdr.vendor_seq"), F.lit(99)) * 10
-        + F.coalesce(F.col("gt.seq"), F.lit(9))
+        + F.coalesce(lookup(goal, {c: s for s, c, _ in COUPANG_GOAL_TYPES}), F.lit(9))
     )
     return out.select(
         "vendor_id",
         "vdr.vendor_name",
         "vdr.vendor_alias",
-        F.col("vt.label").alias("vendor_type"),
+        lookup("cmp.vendor_type", {c: l for _, c, l in COUPANG_VENDOR_TYPES}).alias(
+            "vendor_type"
+        ),
         "cmp.campaign_id",
         "cmp.campaign_name",
-        F.coalesce(F.col("ct.label"), F.col("cmp.campaign_type")).alias(
-            "campaign_type"
-        ),
-        F.col("gt.label").alias("goal_type"),
+        F.coalesce(
+            lookup("cmp.campaign_type", {c: l for _, c, l in COUPANG_CAMPAIGN_TYPES}),
+            F.col("cmp.campaign_type"),
+        ).alias("campaign_type"),
+        lookup(goal, {c: l for _, c, l in COUPANG_GOAL_TYPES}).alias("goal_type"),
         "cmp.is_active",
         "cmp.is_deleted",
         "cmp.roas_target",
         "cmp.created_at",
         "cmp.updated_at",
         sort_key.alias("sort_key"),
+    )
+
+
+def _worst_status(statuses: list[str], vocab) -> tuple[Column, Column]:
+    """GREATEST over the status seqs of ``statuses``, resolved back to
+    its (label, code): the most-degraded status of a master chain."""
+    seqs = {code: s for s, code, _ in vocab}
+    worst = F.greatest(*(lookup(c, seqs) for c in statuses))
+    return (
+        lookup(worst, {s: label for s, _, label in vocab}),
+        lookup(worst, {s: code for s, code, _ in vocab}),
     )
 
 
@@ -478,57 +435,12 @@ def google_ad_master(
     ``relation`` carries (ad_id, ad_level, bundle_product_ids) already
     filtered to the platform; levels 0/1/2 = campaign/adgroup/ad.
     """
-    spark = ad.sparkSession
-    st_map = _mapping(GOOGLE_STATUSES, spark, _MAP_SCHEMA_STR)
-    ctype = _mapping(GOOGLE_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_STR)
-    btype = _mapping(GOOGLE_BIDDING_STRATEGIES, spark, _MAP_SCHEMA_STR)
-    gtype = _mapping(GOOGLE_ADGROUP_TYPES, spark, _MAP_SCHEMA_STR)
-    atype = _mapping(GOOGLE_AD_TYPES, spark, _MAP_SCHEMA_STR)
-
+    ctype, gtype, atype = "cmp.campaign_type", "grp.adgroup_type", "ad.ad_type"
     out = (
         ad.alias("ad")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
         .join(broadcast(campaign.alias("cmp")), "campaign_id", "left")
         .join(broadcast(adgroup.alias("grp")), "adgroup_id", "left")
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(btype.alias("bt")),
-            F.col("cmp.bidding_strategy") == F.col("bt.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("agt")),
-            F.col("grp.adgroup_type") == F.col("agt.code"),
-            "left",
-        )
-        .join(
-            broadcast(atype.alias("adt")),
-            F.col("ad.ad_type") == F.col("adt.code"),
-            "left",
-        )
-        .join(
-            broadcast(st_map.alias("sc")),
-            F.col("cmp.campaign_status") == F.col("sc.code"),
-            "left",
-        )
-        .join(
-            broadcast(st_map.alias("sg")),
-            F.col("grp.adgroup_status") == F.col("sg.code"),
-            "left",
-        )
-        .join(
-            broadcast(st_map.alias("sa")),
-            F.col("ad.ad_status") == F.col("sa.code"),
-            "left",
-        )
-    )
-    worst = F.greatest("sc.seq", "sg.seq", "sa.seq")
-    out = (
-        out.join(broadcast(st_map.alias("sf")), worst == F.col("sf.seq"), "left")
         .join(
             broadcast(_level_rel(relation, 0, "rc")),
             F.col("campaign_id") == F.col("rc.rc_key"),
@@ -543,28 +455,33 @@ def google_ad_master(
             broadcast(_level_rel(relation, 2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
         )
     )
+    status, status_code = _worst_status(
+        ["cmp.campaign_status", "grp.adgroup_status", "ad.ad_status"], GOOGLE_STATUSES
+    )
     sort_key = (
-        F.when(F.col("sf.code") == "REMOVED", F.lit(2)).otherwise(F.lit(1))
+        F.when(status_code == "REMOVED", F.lit(2)).otherwise(F.lit(1))
         * 100 * 100 * 100 * 100
         + _seq99("acc.account_seq") * 100 * 100 * 100
-        + _seq99("ct.seq") * 100 * 100
-        + _seq99("agt.seq") * 100
-        + _seq99("adt.seq")
+        + _seq99(lookup(ctype, {c: s for s, c, _ in GOOGLE_CAMPAIGN_TYPES})) * 100 * 100
+        + _seq99(lookup(gtype, {c: s for s, c, _ in GOOGLE_ADGROUP_TYPES})) * 100
+        + _seq99(lookup(atype, {c: s for s, c, _ in GOOGLE_AD_TYPES}))
     )
     return out.select(
         "customer_id",
         "acc.account_name",
         "campaign_id",
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
-        F.col("bt.label").alias("bidding_strategy"),
+        lookup(ctype, {c: l for _, c, l in GOOGLE_CAMPAIGN_TYPES}).alias("campaign_type"),
+        lookup(
+            "cmp.bidding_strategy", {c: l for _, c, l in GOOGLE_BIDDING_STRATEGIES}
+        ).alias("bidding_strategy"),
         "adgroup_id",
         "grp.adgroup_name",
-        F.col("agt.label").alias("adgroup_type"),
+        lookup(gtype, {c: l for _, c, l in GOOGLE_ADGROUP_TYPES}).alias("adgroup_type"),
         "ad.ad_id",
         "ad.ad_name",
-        F.col("adt.label").alias("ad_type"),
-        F.col("sf.label").alias("ad_status"),
+        lookup(atype, {c: l for _, c, l in GOOGLE_AD_TYPES}).alias("ad_type"),
+        status.alias("ad_status"),
         F.coalesce("ra.ra_bundle", "rg.rg_bundle", "rc.rc_bundle").alias(
             "bundle_product_ids"
         ),
@@ -582,29 +499,17 @@ def searchad_adgroup_master(
     """searchad__adgroup_master.sql:19-55: adgroup -> campaign ->
     account chain, campaign/adgroup type labels, the AND-folded
     is_enabled COALESCE, 4-component sort key."""
-    spark = adgroup.sparkSession
-    ctype = _mapping(SEARCHAD_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_INT)
-    gtype = _mapping(SEARCHAD_ADGROUP_TYPES, spark, _MAP_SCHEMA_INT)
+    ctype, gtype = "cmp.campaign_type", "grp.adgroup_type"
     out = (
         adgroup.alias("grp")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
         .join(broadcast(campaign.alias("cmp")), "campaign_id", "left")
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("gt")),
-            F.col("grp.adgroup_type") == F.col("gt.code"),
-            "left",
-        )
     )
     sort_key = (
         F.when(F.col("grp.is_deleted"), F.lit(2)).otherwise(F.lit(1)) * 1000000
         + _seq99("acc.account_seq") * 10000
-        + _seq99("ct.seq") * 100
-        + _seq99("gt.seq")
+        + _seq99(lookup(ctype, {c: s for s, c, _ in SEARCHAD_CAMPAIGN_TYPES})) * 100
+        + _seq99(lookup(gtype, {c: s for s, c, _ in SEARCHAD_ADGROUP_TYPES}))
     )
     return out.select(
         "customer_id",
@@ -612,10 +517,10 @@ def searchad_adgroup_master(
         "acc.account_type",
         "campaign_id",
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
+        lookup(ctype, {c: l for _, c, l in SEARCHAD_CAMPAIGN_TYPES}).alias("campaign_type"),
         "grp.adgroup_id",
         "grp.adgroup_name",
-        F.col("gt.label").alias("adgroup_type"),
+        lookup(gtype, {c: l for _, c, l in SEARCHAD_ADGROUP_TYPES}).alias("adgroup_type"),
         "grp.bid_amount",
         F.coalesce(
             F.col("cmp.is_enabled") & F.col("grp.is_enabled"), F.col("grp.is_enabled")
@@ -642,11 +547,7 @@ def searchad_ad_master(
     ``relation``: (ad_id, ad_level, bundle_product_ids), already
     platform-filtered; ``product_rel``: (product_id,
     bundle_product_ids) — relation__smt_prd_to_sbn_ids."""
-    spark = ad.sparkSession
-    ctype = _mapping(SEARCHAD_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_INT)
-    gtype = _mapping(SEARCHAD_ADGROUP_TYPES, spark, _MAP_SCHEMA_INT)
-    atype = _mapping(SEARCHAD_AD_TYPES, spark, _MAP_SCHEMA_INT)
-
+    ctype, gtype, atype = "cmp.campaign_type", "grp.adgroup_type", "ad.ad_type"
     out = (
         ad.alias("ad")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
@@ -654,21 +555,6 @@ def searchad_ad_master(
         .join(
             broadcast(campaign.alias("cmp")),
             F.col("grp.campaign_id") == F.col("cmp.campaign_id"),
-            "left",
-        )
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("gt")),
-            F.col("grp.adgroup_type") == F.col("gt.code"),
-            "left",
-        )
-        .join(
-            broadcast(atype.alias("at")),
-            F.col("ad.ad_type") == F.col("at.code"),
             "left",
         )
         .join(
@@ -696,9 +582,9 @@ def searchad_ad_master(
     sort_key = (
         F.when(F.col("ad.is_deleted"), F.lit(2)).otherwise(F.lit(1)) * 100000000
         + _seq99("acc.account_seq") * 1000000
-        + _seq99("ct.seq") * 10000
-        + _seq99("gt.seq") * 100
-        + _seq99("at.seq")
+        + _seq99(lookup(ctype, {c: s for s, c, _ in SEARCHAD_CAMPAIGN_TYPES})) * 10000
+        + _seq99(lookup(gtype, {c: s for s, c, _ in SEARCHAD_ADGROUP_TYPES})) * 100
+        + _seq99(lookup(atype, {c: s for s, c, _ in SEARCHAD_AD_TYPES}))
     )
     return out.select(
         "customer_id",
@@ -706,14 +592,14 @@ def searchad_ad_master(
         "acc.account_type",
         F.col("grp.campaign_id").alias("campaign_id"),
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
+        lookup(ctype, {c: l for _, c, l in SEARCHAD_CAMPAIGN_TYPES}).alias("campaign_type"),
         "adgroup_id",
         "grp.adgroup_name",
-        F.col("gt.label").alias("adgroup_type"),
+        lookup(gtype, {c: l for _, c, l in SEARCHAD_ADGROUP_TYPES}).alias("adgroup_type"),
         "ad.ad_id",
         "ad.title",
         "ad.description",
-        F.col("at.label").alias("ad_type"),
+        lookup(atype, {c: l for _, c, l in SEARCHAD_AD_TYPES}).alias("ad_type"),
         F.col("ad.product_id").alias("mall_product_id"),
         F.coalesce("rp.rp_bundle", "ra.ra_bundle", "rg.rg_bundle", "rc.rc_bundle").alias(
             "bundle_product_ids"
@@ -738,9 +624,7 @@ def meta_adset_master(
     """meta_ads__adset_master.sql:19-55: campaign joined on (account_id,
     campaign_id), GREATEST(campaign, adset) status resolution, created
     COALESCE, DELETED sort penalty."""
-    spark = adset.sparkSession
-    obj = _mapping(META_OBJECTIVES, spark, _MAP_SCHEMA_STR)
-    st = _mapping(META_EFFECTIVE_STATUSES, spark, _MAP_SCHEMA_STR)
+    objective = "cmp.objective"
     out = (
         adset.alias("adset")
         .join(broadcast(account.alias("acc")), "account_id", "left")
@@ -750,41 +634,24 @@ def meta_adset_master(
             & (F.col("adset.campaign_id") == F.col("cmp.campaign_id")),
             "left",
         )
-        .join(
-            broadcast(obj.alias("ob")),
-            F.col("cmp.objective") == F.col("ob.code"),
-            "left",
-        )
-        .join(
-            broadcast(st.alias("sc")),
-            F.col("cmp.effective_status") == F.col("sc.code"),
-            "left",
-        )
-        .join(
-            broadcast(st.alias("sa")),
-            F.col("adset.effective_status") == F.col("sa.code"),
-            "left",
-        )
     )
-    out = out.join(
-        broadcast(st.alias("sf")),
-        F.greatest("sc.seq", "sa.seq") == F.col("sf.seq"),
-        "left",
+    status, status_code = _worst_status(
+        ["cmp.effective_status", "adset.effective_status"], META_EFFECTIVE_STATUSES
     )
     sort_key = (
-        F.when(F.col("sf.code") == "DELETED", F.lit(2)).otherwise(F.lit(1)) * 10000
+        F.when(status_code == "DELETED", F.lit(2)).otherwise(F.lit(1)) * 10000
         + _seq99("acc.account_seq") * 100
-        + _seq99("ob.seq")
+        + _seq99(lookup(objective, {c: s for s, c, _ in META_OBJECTIVES}))
     )
     return out.select(
         F.col("adset.account_id").alias("account_id"),
         "acc.account_name",
         F.col("adset.campaign_id").alias("campaign_id"),
         "cmp.campaign_name",
-        F.col("ob.label").alias("objective"),
+        lookup(objective, {c: l for _, c, l in META_OBJECTIVES}).alias("objective"),
         "adset.adset_id",
         "adset.adset_name",
-        F.col("sf.label").alias("effective_status"),
+        status.alias("effective_status"),
         "adset.daily_budget",
         F.coalesce("adset.created_at", "cmp.created_at").alias("created_at"),
         sort_key.alias("sort_key"),
@@ -800,42 +667,12 @@ def meta_ad_master(
 ) -> DataFrame:
     """meta_ads__ad_master.sql:19-108: three-status GREATEST resolution,
     ad > adset > campaign bundle COALESCE, 3-way created COALESCE."""
-    spark = ad.sparkSession
-    obj = _mapping(META_OBJECTIVES, spark, _MAP_SCHEMA_STR)
-    st = _mapping(META_EFFECTIVE_STATUSES, spark, _MAP_SCHEMA_STR)
-
+    objective = "cmp.objective"
     out = (
         ad.alias("ad")
         .join(broadcast(account.alias("acc")), "account_id", "left")
         .join(broadcast(campaign.alias("cmp")), "campaign_id", "left")
         .join(broadcast(adset.alias("adset")), "adset_id", "left")
-        .join(
-            broadcast(obj.alias("ob")),
-            F.col("cmp.objective") == F.col("ob.code"),
-            "left",
-        )
-        .join(
-            broadcast(st.alias("sc")),
-            F.col("cmp.effective_status") == F.col("sc.code"),
-            "left",
-        )
-        .join(
-            broadcast(st.alias("ss")),
-            F.col("adset.effective_status") == F.col("ss.code"),
-            "left",
-        )
-        .join(
-            broadcast(st.alias("sa")),
-            F.col("ad.effective_status") == F.col("sa.code"),
-            "left",
-        )
-    )
-    out = (
-        out.join(
-            broadcast(st.alias("sf")),
-            F.greatest("sc.seq", "ss.seq", "sa.seq") == F.col("sf.seq"),
-            "left",
-        )
         .join(
             broadcast(_level_rel(relation, 0, "rc")),
             F.col("campaign_id") == F.col("rc.rc_key"),
@@ -848,22 +685,26 @@ def meta_ad_master(
             broadcast(_level_rel(relation, 2, "ra")), F.col("ad.ad_id") == F.col("ra.ra_key"), "left"
         )
     )
+    status, status_code = _worst_status(
+        ["cmp.effective_status", "adset.effective_status", "ad.effective_status"],
+        META_EFFECTIVE_STATUSES,
+    )
     sort_key = (
-        F.when(F.col("sf.code") == "DELETED", F.lit(2)).otherwise(F.lit(1)) * 10000
+        F.when(status_code == "DELETED", F.lit(2)).otherwise(F.lit(1)) * 10000
         + _seq99("acc.account_seq") * 100
-        + _seq99("ob.seq")
+        + _seq99(lookup(objective, {c: s for s, c, _ in META_OBJECTIVES}))
     )
     return out.select(
         "account_id",
         "acc.account_name",
         "campaign_id",
         "cmp.campaign_name",
-        F.col("ob.label").alias("objective"),
+        lookup(objective, {c: l for _, c, l in META_OBJECTIVES}).alias("objective"),
         "adset_id",
         "adset.adset_name",
         "ad.ad_id",
         "ad.ad_name",
-        F.col("sf.label").alias("effective_status"),
+        status.alias("effective_status"),
         F.coalesce("ra.ra_bundle", "rs.rs_bundle", "rc.rc_bundle").alias(
             "bundle_product_ids"
         ),
@@ -880,48 +721,33 @@ def coupang_adgroup_master(
     """coupang_ads__adgroup_master.sql:19-55: campaign attrs pulled
     through the adgroup, vendor_type mapped off the CAMPAIGN row,
     goal off the adgroup, (deleted, vendor, goal) sort key."""
-    spark = adgroup.sparkSession
-    vtype = _mapping(COUPANG_VENDOR_TYPES, spark, _MAP_SCHEMA_INT)
-    ctype = _mapping(COUPANG_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_STR)
-    gtype = _mapping(COUPANG_GOAL_TYPES, spark, _MAP_SCHEMA_INT)
+    goal = "grp.goal_type"
     out = (
         adgroup.alias("grp")
         .join(broadcast(campaign.alias("cmp")), "campaign_id", "left")
         .join(broadcast(vendor.alias("vdr")), "vendor_id", "left")
-        .join(
-            broadcast(vtype.alias("vt")),
-            F.col("cmp.vendor_type") == F.col("vt.code"),
-            "left",
-        )
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("gt")),
-            F.col("grp.goal_type") == F.col("gt.code"),
-            "left",
-        )
     )
     sort_key = (
         F.when(F.col("grp.is_deleted"), F.lit(2)).otherwise(F.lit(1)) * 1000
         + F.coalesce(F.col("vdr.vendor_seq"), F.lit(99)) * 10
-        + F.coalesce(F.col("gt.seq"), F.lit(9))
+        + F.coalesce(lookup(goal, {c: s for s, c, _ in COUPANG_GOAL_TYPES}), F.lit(9))
     )
     return out.select(
         "vendor_id",
         "vdr.vendor_name",
         "vdr.vendor_alias",
-        F.col("vt.label").alias("vendor_type"),
+        lookup("cmp.vendor_type", {c: l for _, c, l in COUPANG_VENDOR_TYPES}).alias(
+            "vendor_type"
+        ),
         "campaign_id",
         "cmp.campaign_name",
-        F.coalesce(F.col("ct.label"), F.col("cmp.campaign_type")).alias(
-            "campaign_type"
-        ),
+        F.coalesce(
+            lookup("cmp.campaign_type", {c: l for _, c, l in COUPANG_CAMPAIGN_TYPES}),
+            F.col("cmp.campaign_type"),
+        ).alias("campaign_type"),
         "grp.adgroup_id",
         "grp.adgroup_name",
-        F.col("gt.label").alias("goal_type"),
+        lookup(goal, {c: l for _, c, l in COUPANG_GOAL_TYPES}).alias("goal_type"),
         "grp.is_active",
         "grp.is_deleted",
         "grp.roas_target",
@@ -936,63 +762,34 @@ def google_adgroup_master(
 ) -> DataFrame:
     """google_ads__adgroup_master.sql:19-75: campaign dim chain,
     GREATEST(campaign, adgroup) status, target_cpa + 30d metrics."""
-    spark = adgroup.sparkSession
-    st_map = _mapping(GOOGLE_STATUSES, spark, _MAP_SCHEMA_STR)
-    ctype = _mapping(GOOGLE_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_STR)
-    btype = _mapping(GOOGLE_BIDDING_STRATEGIES, spark, _MAP_SCHEMA_STR)
-    gtype = _mapping(GOOGLE_ADGROUP_TYPES, spark, _MAP_SCHEMA_STR)
+    ctype, gtype = "cmp.campaign_type", "grp.adgroup_type"
     out = (
         adgroup.alias("grp")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
         .join(broadcast(campaign.alias("cmp")), "campaign_id", "left")
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(btype.alias("bt")),
-            F.col("cmp.bidding_strategy") == F.col("bt.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("agt")),
-            F.col("grp.adgroup_type") == F.col("agt.code"),
-            "left",
-        )
-        .join(
-            broadcast(st_map.alias("sc")),
-            F.col("cmp.campaign_status") == F.col("sc.code"),
-            "left",
-        )
-        .join(
-            broadcast(st_map.alias("sg")),
-            F.col("grp.adgroup_status") == F.col("sg.code"),
-            "left",
-        )
     )
-    out = out.join(
-        broadcast(st_map.alias("sf")),
-        F.greatest("sc.seq", "sg.seq") == F.col("sf.seq"),
-        "left",
+    status, status_code = _worst_status(
+        ["cmp.campaign_status", "grp.adgroup_status"], GOOGLE_STATUSES
     )
     sort_key = (
-        F.when(F.col("sf.code") == "REMOVED", F.lit(2)).otherwise(F.lit(1)) * 1000000
+        F.when(status_code == "REMOVED", F.lit(2)).otherwise(F.lit(1)) * 1000000
         + _seq99("acc.account_seq") * 10000
-        + _seq99("ct.seq") * 100
-        + _seq99("agt.seq")
+        + _seq99(lookup(ctype, {c: s for s, c, _ in GOOGLE_CAMPAIGN_TYPES})) * 100
+        + _seq99(lookup(gtype, {c: s for s, c, _ in GOOGLE_ADGROUP_TYPES}))
     )
     return out.select(
         "customer_id",
         "acc.account_name",
         "campaign_id",
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
-        F.col("bt.label").alias("bidding_strategy"),
+        lookup(ctype, {c: l for _, c, l in GOOGLE_CAMPAIGN_TYPES}).alias("campaign_type"),
+        lookup(
+            "cmp.bidding_strategy", {c: l for _, c, l in GOOGLE_BIDDING_STRATEGIES}
+        ).alias("bidding_strategy"),
         "grp.adgroup_id",
         "grp.adgroup_name",
-        F.col("agt.label").alias("adgroup_type"),
-        F.col("sf.label").alias("adgroup_status"),
+        lookup(gtype, {c: l for _, c, l in GOOGLE_ADGROUP_TYPES}).alias("adgroup_type"),
+        status.alias("adgroup_status"),
         "grp.target_cpa",
         "grp.impression_count_30d",
         "grp.click_count_30d",
@@ -1005,45 +802,28 @@ def google_adgroup_master(
 def google_campaign_master(campaign: DataFrame, account: DataFrame) -> DataFrame:
     """google_ads__campaign_master.sql:19-55: account join, three label
     maps; the sort penalty keys off the RAW status code."""
-    spark = campaign.sparkSession
-    st_map = _mapping(GOOGLE_STATUSES, spark, _MAP_SCHEMA_STR)
-    ctype = _mapping(GOOGLE_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_STR)
-    btype = _mapping(GOOGLE_BIDDING_STRATEGIES, spark, _MAP_SCHEMA_STR)
-    out = (
-        campaign.alias("cmp")
-        .join(broadcast(account.alias("acc")), "customer_id", "left")
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(btype.alias("bt")),
-            F.col("cmp.bidding_strategy") == F.col("bt.code"),
-            "left",
-        )
-        .join(
-            broadcast(st_map.alias("cs")),
-            F.col("cmp.campaign_status") == F.col("cs.code"),
-            "left",
-        )
-    )
+    ctype = "cmp.campaign_type"
+    out = campaign.alias("cmp").join(broadcast(account.alias("acc")), "customer_id", "left")
     sort_key = (
         F.when(F.col("cmp.campaign_status") == "REMOVED", F.lit(2)).otherwise(
             F.lit(1)
         )
         * 10000
         + _seq99("acc.account_seq") * 100
-        + _seq99("ct.seq")
+        + _seq99(lookup(ctype, {c: s for s, c, _ in GOOGLE_CAMPAIGN_TYPES}))
     )
     return out.select(
         "customer_id",
         "acc.account_name",
         "campaign_id",
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
-        F.col("cs.label").alias("campaign_status"),
-        F.col("bt.label").alias("bidding_strategy"),
+        lookup(ctype, {c: l for _, c, l in GOOGLE_CAMPAIGN_TYPES}).alias("campaign_type"),
+        lookup("cmp.campaign_status", {c: l for _, c, l in GOOGLE_STATUSES}).alias(
+            "campaign_status"
+        ),
+        lookup(
+            "cmp.bidding_strategy", {c: l for _, c, l in GOOGLE_BIDDING_STRATEGIES}
+        ).alias("bidding_strategy"),
         "cmp.campaign_budget",
         "cmp.impression_count_30d",
         "cmp.click_count_30d",
@@ -1063,10 +843,7 @@ def searchad_contract_master(
     """searchad__contract_master.sql:19-70: contract -> adgroup ->
     campaign -> account chain, three label maps, the cancel-date sort
     penalty (active=1 beats cancelled=2)."""
-    spark = contract.sparkSession
-    ctype = _mapping(SEARCHAD_CAMPAIGN_TYPES, spark, _MAP_SCHEMA_INT)
-    gtype = _mapping(SEARCHAD_ADGROUP_TYPES, spark, _MAP_SCHEMA_INT)
-    ttype = _mapping(SEARCHAD_CONTRACT_TYPES, spark, _MAP_SCHEMA_INT)
+    ctype, gtype, ttype = "cmp.campaign_type", "grp.adgroup_type", "sad.contract_type"
     out = (
         contract.alias("sad")
         .join(broadcast(account.alias("acc")), "customer_id", "left")
@@ -1076,29 +853,14 @@ def searchad_contract_master(
             F.col("grp.campaign_id") == F.col("cmp.campaign_id"),
             "left",
         )
-        .join(
-            broadcast(ctype.alias("ct")),
-            F.col("cmp.campaign_type") == F.col("ct.code"),
-            "left",
-        )
-        .join(
-            broadcast(gtype.alias("gt")),
-            F.col("grp.adgroup_type") == F.col("gt.code"),
-            "left",
-        )
-        .join(
-            broadcast(ttype.alias("tt")),
-            F.col("sad.contract_type") == F.col("tt.code"),
-            "left",
-        )
     )
     sort_key = (
         F.when(F.col("sad.cancel_date").isNull(), F.lit(1)).otherwise(F.lit(2))
         * 10000000
         + _seq99("acc.account_seq") * 100000
-        + _seq99("ct.seq") * 1000
-        + _seq99("gt.seq") * 10
-        + F.coalesce(F.col("tt.seq"), F.lit(9))
+        + _seq99(lookup(ctype, {c: s for s, c, _ in SEARCHAD_CAMPAIGN_TYPES})) * 1000
+        + _seq99(lookup(gtype, {c: s for s, c, _ in SEARCHAD_ADGROUP_TYPES})) * 10
+        + F.coalesce(lookup(ttype, {c: s for s, c, _ in SEARCHAD_CONTRACT_TYPES}), F.lit(9))
     )
     return out.select(
         "customer_id",
@@ -1106,13 +868,13 @@ def searchad_contract_master(
         "acc.account_type",
         F.col("grp.campaign_id").alias("campaign_id"),
         "cmp.campaign_name",
-        F.col("ct.label").alias("campaign_type"),
+        lookup(ctype, {c: l for _, c, l in SEARCHAD_CAMPAIGN_TYPES}).alias("campaign_type"),
         "adgroup_id",
         "grp.adgroup_name",
-        F.col("gt.label").alias("adgroup_type"),
+        lookup(gtype, {c: l for _, c, l in SEARCHAD_ADGROUP_TYPES}).alias("adgroup_type"),
         "sad.contract_id",
         "sad.contract_name",
-        F.col("tt.label").alias("contract_type"),
+        lookup(ttype, {c: l for _, c, l in SEARCHAD_CONTRACT_TYPES}).alias("contract_type"),
         "sad.contract_amount",
         "sad.contract_start_date",
         "sad.contract_end_date",

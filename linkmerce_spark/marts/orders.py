@@ -59,8 +59,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from linkmerce_spark.marts.profit import (
-    ORDER_STATUS_LABELS,
-    _join_date_range,
+    _date_range_label,
+    _order_status_label,
     _profit_dim_cols,
 )
 from linkmerce_spark.marts.smartstore import _first_token, _gift_status
@@ -284,20 +284,11 @@ def order_count_enrich(
 ) -> DataFrame:
     """analytics__order_count dim join with COALESCE fallback labels
     (:79-116); status labels come from the shared mapping macro."""
-    from linkmerce_spark.frames import values_df
-
-    spark = fact.sparkSession
-    status_map = values_df(spark, ORDER_STATUS_LABELS, "code int, label string")
     dash = F.lit("-")
     enriched = (
         fact.alias("f")
         .join(broadcast(item.alias("item")), F.col("f.product_id") == F.col("item.product_id"), "left")
         .join(broadcast(shop.alias("shop")), F.col("f.shop_id") == F.col("shop.shop_id"), "left")
-        .join(
-            broadcast(status_map.alias("st")),
-            F.col("f.order_status") == F.col("st.code"),
-            "left",
-        )
     )
     return enriched.select(
         F.col("f.order_id").alias("order_id"),
@@ -307,7 +298,7 @@ def order_count_enrich(
         F.col("f.shop_id").alias("shop_id"),
         F.coalesce("shop.shop_group", dash).alias("shop_group"),
         F.coalesce("shop.shop_alias", dash).alias("shop_name"),
-        F.coalesce("st.label", F.lit("알 수 없음")).alias("order_status"),
+        _order_status_label().alias("order_status"),
         F.col("f.order_quantity").alias("order_quantity"),
         F.col("f.order_date").alias("order_date"),
     )
@@ -360,12 +351,11 @@ def order_count_mom(
         _month_floor_col(F.col("order_date")).alias("order_ym"),
     )
     fact = ds_frame.unionByName(lb_frame).drop("order_date")
-    j, date_range = _join_date_range(fact.alias("f"))
     keep = [c for c in fact.columns if c not in ("order_start_date", "order_end_date", "order_ym")]
-    return j.select(
+    return fact.alias("f").select(
         *[F.col(f"f.{c}").alias(c) for c in keep],
         F.col("f.order_ym").alias("order_ym"),
         F.col("f.order_start_date").alias("order_start_date"),
         F.col("f.order_end_date").alias("order_end_date"),
-        date_range.alias("order_date_range"),
+        _date_range_label().alias("order_date_range"),
     )

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from linkmerce_spark import memo
-from linkmerce_spark.frames import values_df
+from linkmerce_spark.functions.scalar import lookup
 from linkmerce_spark.marts.smartstore import _first_token, _sku_mult
 
 __all__ = [
@@ -119,34 +119,20 @@ SABANGNET_OPTION_TYPES = [
     (3, 3, "일반"),
 ]
 
-_INT_MAP = "seq int, code int, label string"
-_STR_MAP = "seq int, code string, label string"
-
-
-def _map(spark, rows, schema):
-    return broadcast(values_df(spark, rows, schema))
-
-
 def smartstore_product_master(
     product: DataFrame, channel: DataFrame, category: DataFrame
 ) -> DataFrame:
     """smartstore__product_master.sql:10-64 on Spark frames."""
-    spark = product.sparkSession
-    st = _map(spark, SMARTSTORE_PRODUCT_STATUSES, _STR_MAP).alias("st")
-    dp = _map(spark, SMARTSTORE_DISPLAY_TYPES, _STR_MAP).alias("dp")
-    dl = _map(spark, SMARTSTORE_DELIVERY_TYPES, _INT_MAP).alias("dl")
+    status = "prd.status_type"
     out = (
         product.alias("prd")
         .join(broadcast(channel.alias("chl")), "channel_seq", "left")
-        .join(st, F.col("prd.status_type") == F.col("st.code"), "left")
-        .join(dp, F.col("prd.display_type") == F.col("dp.code"), "left")
-        .join(dl, F.col("prd.delivery_type") == F.col("dl.code"), "left")
         .join(broadcast(category.alias("cat")), "category_id", "left")
     )
     sort_key = (
         F.coalesce(F.col("chl.brand_seq"), F.lit(99)) * 1000
         + F.coalesce(F.col("prd.delivery_type"), F.lit(99)) * 10
-        + F.coalesce(F.col("st.seq"), F.lit(9))
+        + F.coalesce(lookup(status, {c: s for s, c, _ in SMARTSTORE_PRODUCT_STATUSES}), F.lit(9))
     ).cast("int")
     return out.select(
         "prd.product_id",
@@ -155,9 +141,13 @@ def smartstore_product_master(
         "chl.team_name",
         "chl.brand_name",
         "prd.product_name",
-        F.col("st.label").alias("status_type"),
-        F.col("dp.label").alias("display_type"),
-        F.col("dl.label").alias("delivery_type"),
+        lookup(status, {c: l for _, c, l in SMARTSTORE_PRODUCT_STATUSES}).alias("status_type"),
+        lookup("prd.display_type", {c: l for _, c, l in SMARTSTORE_DISPLAY_TYPES}).alias(
+            "display_type"
+        ),
+        lookup("prd.delivery_type", {c: l for _, c, l in SMARTSTORE_DELIVERY_TYPES}).alias(
+            "delivery_type"
+        ),
         "category_id",
         "cat.category_name1",
         "cat.category_name2",
@@ -186,8 +176,6 @@ def smartstore_option_master(
     order_option: DataFrame, channel: DataFrame, product_master: DataFrame
 ) -> DataFrame:
     """smartstore__option_master.sql:10-45 on Spark frames."""
-    spark = order_option.sparkSession
-    pt = _map(spark, SMARTSTORE_PRODUCT_TYPES, _INT_MAP).alias("pt")
     # product_master feeds TWO broadcast subtrees (the sort-key lookup
     # and the all-9s fallback agg); checkpoint once so the upstream
     # master chain runs a single time instead of per-subtree.  Eager:
@@ -201,7 +189,6 @@ def smartstore_option_master(
         order_option.alias("opt")
         .join(broadcast(channel.alias("chl")), "channel_seq", "left")
         .join(broadcast(prd), F.col("opt.product_id") == F.col("__p_pid"), "left")
-        .join(pt, F.col("opt.product_type") == F.col("pt.code"), "left")
         .crossJoin(broadcast(_nines_fallback(product_master)))
     )
     return out.select(
@@ -211,7 +198,9 @@ def smartstore_option_master(
         "chl.brand_name",
         "opt.product_name",
         "opt.option_name",
-        F.col("pt.label").alias("product_type"),
+        lookup("opt.product_type", {c: l for _, c, l in SMARTSTORE_PRODUCT_TYPES}).alias(
+            "product_type"
+        ),
         "opt.seller_product_code",
         "opt.seller_option_code",
         "opt.sales_price",
@@ -357,9 +346,6 @@ def sabangnet_product_master(
             ).alias("__scale")
         )
     )
-    spark = product.sparkSession
-    st = _map(spark, SABANGNET_PRODUCT_STATUSES, _INT_MAP).alias("st")
-    ot = _map(spark, SABANGNET_OPTION_TYPES, _INT_MAP).alias("ot")
     cat = _item_categories(core_item)
     main = broadcast(
         core_product_master.select(F.col("product_id").alias("__m_pid"))
@@ -375,8 +361,6 @@ def sabangnet_product_master(
         .join(broadcast(primary.alias("opt")), "product_id", "left")
         .join(cat, F.col("opt.item_id") == F.col("__t_item"), "left")
         .join(main, F.col("prd.product_id") == F.col("__m_pid"), "left")
-        .join(st, F.col("prd.product_status") == F.col("st.code"), "left")
-        .join(ot, F.col("opt.option_type") == F.col("ot.code"), "left")
         .join(brd, F.col("prd.brand_name") == F.col("__b_brand"), "left")
         .crossJoin(scale)
     )
@@ -415,10 +399,12 @@ def sabangnet_product_master(
         F.col("__t_c2").alias("category_name2"),
         F.col("__t_c3").alias("category_name3"),
         F.col("__t_c4").alias("category_name4"),
-        F.col("st.label").alias("product_status"),
-        F.when(is_main, F.lit("대표")).otherwise(F.col("ot.label")).alias(
-            "option_type"
+        lookup("prd.product_status", {c: l for _, c, l in SABANGNET_PRODUCT_STATUSES}).alias(
+            "product_status"
         ),
+        F.when(is_main, F.lit("대표"))
+        .otherwise(lookup("opt.option_type", {c: l for _, c, l in SABANGNET_OPTION_TYPES}))
+        .alias("option_type"),
         "opt.option_count",
         "prd.manufacture_year",
         "prd.sales_price",
@@ -507,9 +493,6 @@ def sabangnet_option_master(
             "bundle_option_names",
         )
     )
-    spark = option.sparkSession
-    ost = _map(spark, SABANGNET_OPTION_STATUSES, _INT_MAP).alias("ost")
-    oty = _map(spark, SABANGNET_OPTION_TYPES, _INT_MAP).alias("oty")
     prd = broadcast(
         product_master.select(
             F.col("product_id").alias("__pm_pid"),
@@ -537,8 +520,6 @@ def sabangnet_option_master(
             F.col("opt.option_id") == F.col("__b_opt"),
             "left",
         )
-        .join(ost, F.col("opt.option_status") == F.col("ost.code"), "left")
-        .join(oty, F.col("opt.option_type") == F.col("oty.code"), "left")
         .crossJoin(broadcast(_nines_fallback(product_master, "sort_key")))
     )
     return out.select(
@@ -557,9 +538,11 @@ def sabangnet_option_master(
         F.col("__t_c4").alias("category_name4"),
         "opt.bundle_option_ids",
         "bundle_option_names",
-        F.col("ost.label").alias("option_status"),
+        lookup("opt.option_status", {c: l for _, c, l in SABANGNET_OPTION_STATUSES}).alias(
+            "option_status"
+        ),
         F.when(F.col("__pm_otype") == "대표", F.lit("대표"))
-        .otherwise(F.col("oty.label"))
+        .otherwise(lookup("opt.option_type", {c: l for _, c, l in SABANGNET_OPTION_TYPES}))
         .alias("option_type"),
         "opt.option_quantity",
         "opt.option_price",

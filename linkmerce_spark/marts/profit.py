@@ -16,7 +16,8 @@ Parity targets (semantics, not code):
   order_ym (:111-112); the 19-metric CROSS JOIN LATERAL VALUES unpivot
   (:125-158) as one ``stack()`` projection; and the six LEFT dim joins
   (:218-230 — product master twice-collapsed to once here, shop,
-  order-status mapping, metric mapping, day-of-week mapping twice)
+  order-status mapping, metric mapping, day-of-week mapping twice; the
+  mappings are map-literal lookups here, not joins)
   with the reference's COALESCE fallback labels, composed metric sort
   label (:192-197) and the multi-line order_date_range string
   (:203-217).
@@ -42,6 +43,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+from linkmerce_spark.functions.scalar import lookup
 
 __all__ = [
     "profit_base",
@@ -215,7 +218,6 @@ def profit_mom_dims(
     in Python so both engines receive pre-resolved literals (the
     reference renders params before planning for the same reason).
     """
-    spark = product_master.sparkSession
     keys = ["product_id", "shop_id", "order_status"]
     sums = [F.sum(m).alias(m) for m in _BASE_METRICS]
     dates = [
@@ -287,37 +289,22 @@ def profit_mom_dims(
         f"stack({len(metric_names)}, {stack_args}) AS (metric_name, metric_value)",
     ).filter(F.col("metric_value").isNotNull())
 
-    from linkmerce_spark.frames import values_df
-
-    status_map = values_df(spark, ORDER_STATUS_LABELS, "code int, label string")
-    metric_map = values_df(
-        spark, METRIC_MAPPING, "name_en string, sort_seq int, sub_seq int, name_ko string"
-    )
-
-    f = unpivoted.alias("f")
-    enriched, date_range = _join_date_range(
-        f.join(broadcast(item), "product_id", "left")
+    enriched = (
+        unpivoted.alias("f")
+        .join(broadcast(item), "product_id", "left")
         .join(broadcast(shop_dim.alias("shop")), "shop_id", "left")
-        .join(
-            broadcast(status_map.alias("st")),
-            F.col("f.order_status") == F.col("st.code"),
-            "left",
-        )
-        .join(
-            broadcast(metric_map.alias("m")),
-            F.col("f.metric_name") == F.col("m.name_en"),
-            "left",
-        )
     )
-
+    metric = "f.metric_name"
+    sort_seq = lookup(metric, {m: seq for m, seq, _, _ in METRIC_MAPPING})
+    sub_seq = lookup(metric, {m: sub for m, _, sub, _ in METRIC_MAPPING})
     metric_ko = F.concat(
-        F.lpad(F.col("m.sort_seq").cast("string"), 2, "0"),
+        F.lpad(sort_seq.cast("string"), 2, "0"),
         F.coalesce(
-            F.concat(F.lit("-"), F.lpad(F.col("m.sub_seq").cast("string"), 1, "0")),
+            F.concat(F.lit("-"), F.lpad(sub_seq.cast("string"), 1, "0")),
             F.lit(""),
         ),
         F.lit(". "),
-        F.col("m.name_ko"),
+        lookup(metric, {m: ko for m, _, _, ko in METRIC_MAPPING}),
     )
     dash = F.lit("-")
     return enriched.select(
@@ -326,40 +313,34 @@ def profit_mom_dims(
         F.col("f.shop_id").alias("shop_id"),
         F.coalesce("shop.shop_group", dash).alias("shop_group"),
         F.coalesce("shop.shop_alias", dash).alias("shop_name"),
-        F.coalesce("st.label", F.lit("알 수 없음")).alias("order_status"),
+        _order_status_label().alias("order_status"),
         F.col("f.metric_name").alias("metric_name_en"),
         metric_ko.alias("metric_name_ko"),
         F.col("f.metric_value").alias("metric_value"),
         F.col("f.order_start_date").alias("order_start_date"),
         F.col("f.order_end_date").alias("order_end_date"),
         F.col("f.order_ym").alias("order_ym"),
-        date_range.alias("order_date_range"),
+        _date_range_label().alias("order_date_range"),
     )
 
 
-def _join_date_range(j: DataFrame) -> tuple[DataFrame, Column]:
-    """Append the start-day (``sd``) and end-day (``ed``) day-of-week
-    label joins to ``j`` — whose fact side is aliased ``f`` and carries
-    order_start_date / order_end_date — and build the multi-line Korean
-    order_date_range label over them (analytics__profit_mom.sql:
-    203-217 == analytics__order_count_mom.sql:108-128)."""
-    from linkmerce_spark.frames import values_df
+def _order_status_label() -> Column:
+    """The fact's (alias ``f``) order-status label, '알 수 없음' when
+    unmapped (core__order_status_mapping())."""
+    return F.coalesce(lookup("f.order_status", dict(ORDER_STATUS_LABELS)), F.lit("알 수 없음"))
 
-    dow_map = values_df(j.sparkSession, DOW_NAMES, "dayofweek int, name_ko string")
-    j = j.join(
-        broadcast(dow_map.alias("sd")),
-        F.dayofweek("f.order_start_date") == F.col("sd.dayofweek"),
-        "left",
-    ).join(
-        broadcast(dow_map.alias("ed")),
-        F.dayofweek("f.order_end_date") == F.col("ed.dayofweek"),
-        "left",
-    )
+
+def _date_range_label() -> Column:
+    """The multi-line Korean order_date_range label of a fact aliased
+    ``f`` that carries order_start_date / order_end_date, with each
+    day's day-of-week name (analytics__profit_mom.sql:203-217 ==
+    analytics__order_count_mom.sql:108-128)."""
+    dow = dict(DOW_NAMES)
 
     def _fmt(col: str, pat: str) -> Column:
         return F.date_format(F.col(col), pat)
 
-    date_range = F.concat(
+    return F.concat(
         F.lit("[ "),
         _fmt("f.order_end_date", "yy"),
         F.lit("년 "),
@@ -369,14 +350,13 @@ def _join_date_range(j: DataFrame) -> tuple[DataFrame, Column]:
             F.col("f.order_start_date") != F.col("f.order_end_date"),
             F.concat(
                 _fmt("f.order_start_date", "yy/MM/dd"),
-                F.col("sd.name_ko"),
+                lookup(F.dayofweek("f.order_start_date"), dow),
                 F.lit("\n~ "),
             ),
         ).otherwise(F.lit("\n")),
         _fmt("f.order_end_date", "yy/MM/dd"),
-        F.col("ed.name_ko"),
+        lookup(F.dayofweek("f.order_end_date"), dow),
     )
-    return j, date_range
 
 
 def _profit_dim_cols(item_alias: str = "item", shop_alias: str = "shop"):
@@ -412,22 +392,13 @@ def _enrich_profit_fact(
     tail_cols: list[str],
 ) -> DataFrame:
     """Dimension enrichment shared by profit_daily / profit_monthly:
-    LEFT joins to the product master, shop dim and the order-status
-    label mapping (all broadcast), the reference's COALESCE fallbacks,
-    and unit_quantity = sku_quantity * unit_scale."""
-    spark = fact.sparkSession
-    from linkmerce_spark.frames import values_df
-
-    status_map = values_df(spark, ORDER_STATUS_LABELS, "code int, label string")
-    f = fact.alias("f")
+    LEFT joins to the product master and shop dim (broadcast), the
+    order-status label lookup, the reference's COALESCE fallbacks, and
+    unit_quantity = sku_quantity * unit_scale."""
     enriched = (
-        f.join(broadcast(product_master.alias("item")), "product_id", "left")
+        fact.alias("f")
+        .join(broadcast(product_master.alias("item")), "product_id", "left")
         .join(broadcast(shop_dim.alias("shop")), "shop_id", "left")
-        .join(
-            broadcast(status_map.alias("st")),
-            F.col("f.order_status") == F.col("st.code"),
-            "left",
-        )
     )
     dash = F.lit("-")
     return enriched.select(
@@ -436,7 +407,7 @@ def _enrich_profit_fact(
         F.col("f.shop_id").alias("shop_id"),
         F.coalesce("shop.shop_group", dash).alias("shop_group"),
         F.coalesce("shop.shop_alias", dash).alias("shop_name"),
-        F.coalesce("st.label", F.lit("알 수 없음")).alias("order_status"),
+        _order_status_label().alias("order_status"),
         F.coalesce(
             F.col("f.sku_quantity") * F.coalesce("item.unit_scale", F.lit(1)),
             F.lit(0),

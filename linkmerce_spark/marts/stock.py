@@ -414,7 +414,7 @@ def stock_cost_mom(
     month's stock date (:66-103). Date params resolve in Python so both
     engines plan over literals.
     """
-    from linkmerce_spark.frames import values_df
+    from linkmerce_spark.functions.scalar import lookup
     from linkmerce_spark.marts.profit import (
         DOW_NAMES,
         _month_floor,
@@ -539,15 +539,8 @@ def stock_cost_mom(
         "product_id", "stock_cost", "stock_ymd", "order_ym"
     ).unionByName(fallback)
 
-    spark = fact.sparkSession
-    dow_map = values_df(spark, DOW_NAMES, "dayofweek int, name_ko string")
-    f = fact.alias("f")
-    enriched = f.join(
+    enriched = fact.alias("f").join(
         broadcast(product_master.alias("item")), "product_id", "left"
-    ).join(
-        broadcast(dow_map.alias("ed")),
-        F.dayofweek("f.stock_ymd") == F.col("ed.dayofweek"),
-        "left",
     )
     return enriched.select(
         F.col("f.product_id").alias("product_id"),
@@ -558,7 +551,7 @@ def stock_cost_mom(
         F.concat(
             F.lit("[ "),
             F.date_format("f.stock_ymd", "yy/MM/dd"),
-            F.col("ed.name_ko"),
+            lookup(F.dayofweek("f.stock_ymd"), dict(DOW_NAMES)),
             F.lit(" ]"),
         ).alias("stock_date_label"),
     )

@@ -4137,9 +4137,10 @@ SELECT option_id, bundle_product_ids FROM best
 """
 
 # --- ad-platform masters -------------------------------------------------
-# Label vocabularies are rendered from the same Python constants the
-# Spark side plans as VALUES LocalRelations (marts/masters.py), so the
-# twins can never drift on mapping data.
+# Label vocabularies are rendered as VALUES CTEs from the same Python
+# constants the Spark side looks up as map literals (marts/masters.py,
+# ``functions.scalar.lookup``), so the twins can never drift on mapping
+# data.
 from linkmerce_spark.marts import masters as _m
 
 

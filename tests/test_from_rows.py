@@ -148,11 +148,19 @@ def test_from_rows_is_the_only_create_dataframe_door():
 
 def test_long_meets_double_as_double(spark):
     """Inference widens long and double to double, as DuckDB unifies
-    INTEGER and DOUBLE; PySpark alone raises CANNOT_MERGE_TYPE, and in
-    a map nest its answer hung on key order."""
+    INTEGER and DOUBLE, and bool and long to long, as DuckDB types
+    ``VALUES (true), (1)`` INTEGER with ``true`` as 1; PySpark alone
+    raises CANNOT_MERGE_TYPE, and in a map nest its answer hung on key
+    order."""
     df = from_rows(spark, [{"a": 1}, {"a": None}, {"a": 2.5}])
     assert df.schema.simpleString() == "struct<a:double>"
     assert [r.a for r in df.collect()] == [1.0, None, 2.5]
+    df = from_rows(spark, [{"a": True}, {"a": 1}])
+    assert df.schema.simpleString() == "struct<a:bigint>"
+    assert [r.a for r in df.collect()] == [1, 1]
+    df = from_rows(spark, [{"m": {"x": 1, "y": False}, "l": [True, 2]}])
+    assert df.schema.simpleString() == "struct<l:array<bigint>,m:map<string,bigint>>"
+    assert df.first().asDict() == {"m": {"x": 1, "y": 0}, "l": [1, 2]}
     df = from_rows(spark, [{"m": {"x": 1, "y": 2.5}, "l": [1, 2.5]}])
     assert df.schema.simpleString() == "struct<l:array<double>,m:map<string,double>>"
     assert df.first().asDict() == {"m": {"x": 1.0, "y": 2.5}, "l": [1.0, 2.5]}

@@ -1,9 +1,12 @@
 """Each shared parse and operator rule has one definition.
 
-- The ISO-8601 parse and the word n-gram hash live in ``functions/``
-  only, and no model builds its own CASE-chain enum encoder.
+- The ISO-8601 parse, the word n-gram hash and the map literal live
+  in ``functions/`` only, no model builds its own CASE-chain enum
+  encoder, and no mart joins a ``values_df`` vocabulary.
 - Every vocabulary a model passes to ``functions.scalar.enum_code``
   encodes as the CASE chain it replaced (kept here as the reference).
+- Every mart vocabulary looks up through ``functions.scalar.lookup``
+  as the broadcast LEFT JOIN it replaced (kept here as the reference).
 - The sabangnet amount split, each amount's group sum fed to
   ``split_by_cost_weight``, equals the former ``split_group_sum``
   (kept here as the reference).
@@ -41,6 +44,8 @@ def test_iso_parse_gram_hash_and_enum_encoders_have_one_home():
     assert not _hits(r"yyyy-MM-dd'T'HH:mm:ss", outside)
     assert not _hits(r"xxhash64\(array_join\(slice\(", outside, flatten=True)
     assert not _hits(r"\bfor\b[^\n]*\bin\s+reversed\(", sorted((LIB / "models").rglob("*.py")))
+    assert not _hits(r"\bvalues_df\(", sorted((LIB / "marts").rglob("*.py")))
+    assert not _hits(r"\bcreate_map\(", outside)
 
 
 # --- enum_code vs the CASE chain ----------------------------------------
@@ -135,6 +140,73 @@ def test_enum_code_matches_the_case_chain(spark, ansi):
     assert len(rows) == len(keys) + 2
     for i, (site, _, _) in enumerate(sites):
         assert [r[f"e{i}"] for r in rows] == [r[f"c{i}"] for r in rows], site
+
+
+# --- lookup vs the VALUES join -------------------------------------------
+
+# Vocabularies whose seq a GREATEST status resolves back through.
+_GREATEST = {"masters.GOOGLE_STATUSES", "masters.META_EFFECTIVE_STATUSES"}
+
+
+def _mart_vocabularies() -> list[tuple[str, list[tuple]]]:
+    """Every upper-case list-of-tuples constant of the marts that look
+    a vocabulary up."""
+    out = []
+    for mod in ("masters", "product", "adreport", "profit"):
+        ns = vars(importlib.import_module(f"linkmerce_spark.marts.{mod}"))
+        for name, rows in ns.items():
+            if name.isupper() and isinstance(rows, list) and all(isinstance(r, tuple) for r in rows):
+                out.append((f"{mod}.{name}", rows))
+    return out
+
+
+_VOCABS = _mart_vocabularies()
+
+
+def test_every_mart_vocabulary_is_covered():
+    assert len(_VOCABS) == 28
+    assert _GREATEST <= {name for name, _ in _VOCABS}
+
+
+@pytest.mark.parametrize("name,rows", _VOCABS, ids=[n for n, _ in _VOCABS])
+def test_lookup_matches_the_values_join(spark, name, rows):
+    """(seq, code, label) vocabularies key on code, the others on their
+    first column; a GREATEST status also keys on seq."""
+    from pyspark.sql.functions import broadcast
+
+    from linkmerce_spark.frames import from_rows, values_df
+    from linkmerce_spark.functions.scalar import lookup
+
+    width = len(rows[0])
+    types = [
+        "int" if isinstance(next(r[i] for r in rows if r[i] is not None), int) else "string"
+        for i in range(width)
+    ]
+    schema = ", ".join(f"c{i} {t}" for i, t in enumerate(types))
+    keys = [1 if width == 3 else 0] + ([0] if name in _GREATEST else [])
+    for ansi in ("true", "false"):
+        s = spark.newSession()
+        s.conf.set("spark.sql.ansi.enabled", ansi)
+        mapping = broadcast(values_df(s, rows, schema))
+        for key in keys:
+            codes = [r[key] for r in rows]
+            assert len(set(codes)) == len(codes), f"{name}: duplicate c{key}"
+            miss = -1 if types[key] == "int" else "__miss__"
+            probe = from_rows(s, [(c,) for c in codes] + [(miss,), (None,)], f"k {types[key]}")
+            values = [i for i in range(width) if i != key]
+            out = probe.join(mapping, F.col("k") == F.col(f"c{key}"), "left").select(
+                "k",
+                *[F.col(f"c{i}").alias(f"want{i}") for i in values],
+                *[lookup("k", {r[key]: r[i] for r in rows}).alias(f"got{i}") for i in values],
+            )
+            for i in values:
+                assert out.schema[f"got{i}"].dataType == out.schema[f"want{i}"].dataType, name
+            rows_out = out.collect()
+            assert len(rows_out) == len(codes) + 2
+            for r in rows_out:
+                assert [r[f"got{i}"] for i in values] == [r[f"want{i}"] for i in values], (
+                    name, key, ansi, r["k"],
+                )
 
 
 # --- the amount split fold ----------------------------------------------
