@@ -320,8 +320,10 @@ def shared_frame(spark: SparkSession, key: tuple, build) -> DataFrame:
 
     ``key`` must carry every input the build depends on (at minimum
     the mart name and sf_dir). Only CONSUMERS of a mart go through
-    this: the catalog query that verifies mart X still builds X fresh
-    and publishes it, so its bench time measures real compute.
+    this, and it is the one place a mart is published for them: the
+    catalog query that verifies mart X builds X fresh and returns the
+    build, so its bench time measures real compute and its plan shows
+    the mart's body.
     """
     return memo.derived(spark, key, lambda: memo.publish(spark, key, build()))
 

@@ -158,13 +158,15 @@ def date_spine(
     )
 
 
-def md5_hash32(col):
+def md5_hash32(c: Column | str) -> Column:
     """Portable 32-bit hash: md5 hex prefix -> BIGINT — bit-identical in
     Spark and DuckDB (``CAST('0x'||substr(md5(x),1,8) AS BIGINT)``).
-    The single definition behind MinHash signatures and winnowing
-    fingerprints; salted variants (count-min rows, sampling buckets)
-    compose it with a prefix.
-    """
-    from pyspark.sql import functions as F
 
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+    The single definition behind MinHash signatures, winnowing
+    fingerprints and the HLL register bucket. The salted variants
+    compose it over ``concat(salt, cast(key as string))``: the sampling
+    buckets and priorities (``sampling.hash_bucket``,
+    ``sampling.priority_sample``) and the count-min and KMV hashes
+    (``sketches.cms_hash``, ``sketches.kmv_hash``).
+    """
+    return F.conv(F.substring(F.md5(_col(c)), 1, 8), 16, 10).cast("bigint")

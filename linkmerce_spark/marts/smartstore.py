@@ -45,6 +45,7 @@ __all__ = [
     "max_delivery_fee",
     "attach_max_delivery_fee",
     "sku_quantity",
+    "attach_org_price",
     "opt_to_sbn_relation",
     "smartstore_sales_daily",
 ]
@@ -224,6 +225,45 @@ def max_delivery_fee(po: DataFrame, tiers: DataFrame) -> DataFrame:
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def attach_org_price(
+    df: DataFrame,
+    ecount: DataFrame,
+    item: DataFrame,
+    ecount_key: str,
+    ecount_on: Column,
+    item_on: Column,
+) -> DataFrame:
+    """Left-join the broadcast ecount price dim (on its ``ecount_key``,
+    ``option_id`` or ``product_id``, equal to ``ecount_on``) and the
+    broadcast item dim (on ``product_id``, equal to ``item_on``), and
+    add ``org_price = coalesce(ecount price, item price, 0) +
+    coalesce(item extra cost, 0)``. The item's ``__it_group`` (and
+    ``__it_fee``, when the item dim carries a fee) stay on the frame for
+    each mart to resolve its own delivery group and fee."""
+    ec = {"option_id": "__ec_opt", "product_id": "__ec_pid"}[ecount_key]
+    prd = broadcast(
+        ecount.select(F.col(ecount_key).alias(ec), F.col("org_price").alias("__ec_price"))
+    )
+    fee = [F.col("delivery_fee").alias("__it_fee")] if "delivery_fee" in item.columns else []
+    itm = broadcast(
+        item.select(
+            F.col("product_id").alias("__it_pid"),
+            F.col("org_price").alias("__it_price"),
+            F.col("extra_cost").alias("__it_extra"),
+            F.col("delivery_group").alias("__it_group"),
+            *fee,
+        )
+    )
+    return (
+        df.join(prd, ecount_on == F.col(ec), "left")
+        .join(itm, item_on == F.col("__it_pid"), "left")
+        .withColumn(
+            "org_price",
+            F.coalesce("__ec_price", "__it_price", F.lit(0)) + F.coalesce("__it_extra", F.lit(0)),
+        )
     )
 
 
@@ -615,29 +655,19 @@ def smartstore_sales_daily(
             F.col("payment_dt").cast("date").alias("order_date"),
         )
     )
-    prd = broadcast(
-        ecount.select(
-            F.col("product_id").alias("__ec_pid"),
-            F.col("org_price").alias("__ec_price"),
-        )
-    )
-    itm = broadcast(
-        item.select(
-            F.col("product_id").alias("__it_pid"),
-            F.col("org_price").alias("__it_price"),
-            F.col("extra_cost").alias("__it_extra"),
-            F.col("delivery_group").alias("__it_group"),
-            F.col("delivery_fee").alias("__it_fee"),
-        )
-    )
     pid = _first_token(F.col("bundle_product"), ":")
     exploded = (
-        bundle.select(
-            "*",
-            F.explode(F.split("bundle_product_ids", ",")).alias("bundle_product"),
+        attach_org_price(
+            bundle.select(
+                "*",
+                F.explode(F.split("bundle_product_ids", ",")).alias("bundle_product"),
+            ),
+            ecount,
+            item,
+            "product_id",
+            pid,
+            pid,
         )
-        .join(prd, pid == F.col("__ec_pid"), "left")
-        .join(itm, pid == F.col("__it_pid"), "left")
         .select(
             "order_id",
             "product_order_id",
@@ -648,10 +678,7 @@ def smartstore_sales_daily(
             (sku_quantity("bundle_product", "order_quantity")),
             "payment_amount",
             "supply_amount",
-            (
-                F.coalesce("__ec_price", "__it_price", F.lit(0))
-                + F.coalesce("__it_extra", F.lit(0))
-            ).alias("org_price"),
+            "org_price",
             F.coalesce("__it_group", F.lit("-")).alias("delivery_group"),
             F.coalesce("__it_fee", F.lit(0)).alias("delivery_fee"),
             "order_date",

@@ -69,6 +69,7 @@ from linkmerce_spark.marts.smartstore import (
     _gift_status,
     _sku_mult,
     attach_max_delivery_fee,
+    attach_org_price,
     split_by_cost_weight,
 )
 from linkmerce_spark.operators.topk import top_k_per_group
@@ -179,29 +180,12 @@ def with_cost_data(
 ) -> DataFrame:
     """Attach org price / delivery group / fee and the allocation
     metrics (:199-238)."""
-    prd = broadcast(
-        ecount.select(
-            F.col("option_id").alias("__ec_opt"), F.col("org_price").alias("__ec_price")
-        )
-    )
-    itm = broadcast(
-        item.select(
-            F.col("product_id").alias("__it_pid"),
-            F.col("org_price").alias("__it_price"),
-            F.col("extra_cost").alias("__it_extra"),
-            F.col("delivery_group").alias("__it_group"),
-            F.col("delivery_fee").alias("__it_fee"),
-        )
-    )
-    j = ord_df.join(prd, ord_df["option_id"] == F.col("__ec_opt"), "left").join(
-        itm, ord_df["product_id"] == F.col("__it_pid"), "left"
-    )
-    org_price = F.coalesce("__ec_price", "__it_price", F.lit(0)) + F.coalesce(
-        "__it_extra", F.lit(0)
+    j = attach_org_price(
+        ord_df, ecount, item, "option_id", ord_df["option_id"], ord_df["product_id"]
     )
     out = j.select(
-        *[c for c in ord_df.columns],
-        org_price.alias("org_price"),
+        *ord_df.columns,
+        "org_price",
         F.coalesce("__it_group", F.lit("-")).alias("delivery_group"),
         F.coalesce("__it_fee", F.lit(0)).alias("delivery_fee"),
     )
@@ -380,26 +364,17 @@ def coupang_product_order(
             F.col("sales_date").alias("order_date"),
         )
     )
-    prd = broadcast(
-        ecount.select(
-            F.col("product_id").alias("__ec_pid"), F.col("org_price").alias("__ec_price")
-        )
-    )
-    itm = broadcast(
-        item.select(
-            F.col("product_id").alias("__it_pid"),
-            F.col("org_price").alias("__it_price"),
-            F.col("extra_cost").alias("__it_extra"),
-            F.col("delivery_group").alias("__it_group"),
-        )
-    )
     exploded = (
-        bundled.select(
-            "*", F.explode(F.split("bundle_product_ids", ",")).alias("bundle_product")
+        attach_org_price(
+            bundled.select(
+                "*", F.explode(F.split("bundle_product_ids", ",")).alias("bundle_product")
+            ).withColumn("product_id", _first_token("bundle_product", ":")),
+            ecount,
+            item,
+            "product_id",
+            F.col("product_id"),
+            F.col("product_id"),
         )
-        .withColumn("product_id", _first_token("bundle_product", ":"))
-        .join(prd, F.col("product_id") == F.col("__ec_pid"), "left")
-        .join(itm, F.col("product_id") == F.col("__it_pid"), "left")
         .select(
             "order_id",
             "option_id",
@@ -410,10 +385,7 @@ def coupang_product_order(
             ),
             "payment_amount",
             "supply_amount",
-            (
-                F.coalesce("__ec_price", "__it_price", F.lit(0))
-                + F.coalesce("__it_extra", F.lit(0))
-            ).alias("org_price"),
+            "org_price",
             "delivery_fee",
             F.col("__it_group").alias("delivery_group"),
             "order_date",

@@ -25,9 +25,8 @@ TRANSPARENT — the catalog query's oracle is the plain join, which is
 exactly the property that makes it safe to drop into any pipeline.
 
 ``bloom_bitset`` (the sparse word->mask map form) stays exported as
-the mergeable/portable representation: ``bit_or`` merges shard bitsets,
-and the optional salted-md5 hash lets an engine on the other side of a
-federation boundary prebuild the same bitset.
+the mergeable representation: ``bit_or`` merges shard bitsets, and its
+bits are the ones ``bloom_semi_filter`` builds and probes.
 """
 
 from __future__ import annotations
@@ -43,21 +42,41 @@ def _next_pow2(n: int) -> int:
     return 1 << max(1, (n - 1)).bit_length()
 
 
-def _bit_pos(key: Column | str, i: int, num_bits: int, hash_fn: str = "xxhash64") -> Column:
-    """Bloom bit position of ``key`` for probe ``i``.
-
-    ``xxhash64``: seed-salted 64-bit hash (fast JVM path, default).
-    ``md5``: first 15 hex chars (60 bits) of salted md5 — portable to
-    any engine that can md5 a string."""
+def _km_halves(key: Column | str) -> tuple[Column, Column]:
+    """The two 32-bit halves of ONE xxhash64 of ``key``: h1 = upper 32
+    bits, h2 = lower 32 bits forced odd."""
     c = F.col(key) if isinstance(key, str) else key
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(i), c.cast("string")), F.lit(num_bits))
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"bf{i}|"), c.cast("string"))), 1, 15),
-        16,
-        10,
+    h = _c(F.xxhash64(c.cast("string")))
+    return (
+        F.expr(f"shiftrightunsigned({h}, 32)"),
+        F.expr(f"CAST({h} & 4294967295 AS BIGINT) | 1"),
     )
-    return F.pmod(h.cast("bigint"), F.lit(num_bits))
+
+
+def _km_positions(h1: Column, h2: Column, num_bits: int, num_hashes: int) -> list[Column]:
+    """Kirsch-Mitzenmacher probe positions ``pmod(h1 + i*h2, m)``: k
+    positions from one hash. Build and probe both derive their bits
+    here."""
+    return [F.pmod(h1 + F.lit(i) * h2, F.lit(num_bits)) for i in range(num_hashes)]
+
+
+def _word_bit(pos: Column) -> tuple[Column, Column]:
+    """Bit ``pos`` as its 64-bit word index and the mask within it."""
+    return (
+        (pos / 64).cast("int"),
+        F.call_function("shiftleft", F.lit(1).cast("bigint"), (pos % 64).cast("int")),
+    )
+
+
+def _word_masks(keys: DataFrame, key: str, num_bits: int, num_hashes: int) -> DataFrame:
+    pos_cols = _km_positions(*_km_halves(key), num_bits, num_hashes)
+    positions = keys.select(F.explode(F.array(*pos_cols)).alias("__pos"))
+    word, mask = _word_bit(F.col("__pos"))
+    return (
+        positions.select(word.alias("__word"), mask.alias("__mask"))
+        .groupBy("__word")
+        .agg(F.bit_or("__mask").alias("__bits"))
+    )
 
 
 def bloom_bitset(
@@ -65,49 +84,19 @@ def bloom_bitset(
     key: str,
     num_bits: int = 1 << 20,
     num_hashes: int = 3,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """One-row DataFrame with ``__bloom``: a word-index -> 64-bit-mask
-    map over the key set. ``bit_or`` partial-aggregates map-side, so
-    the build is one small shuffle regardless of key volume, and two
-    shard bitsets merge with another ``bit_or`` — the associative form
-    the sketch family shares."""
-    words = _word_masks(keys, key, num_bits, num_hashes, hash_fn)
+    map over the key set, set at the positions ``bloom_semi_filter``
+    probes. ``bit_or`` partial-aggregates map-side, so the build is one
+    small shuffle regardless of key volume, and two shard bitsets merge
+    with another ``bit_or`` — the associative form the sketch family
+    shares."""
+    words = _word_masks(keys, key, num_bits, num_hashes)
     return words.agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("__word"), F.col("__bits")))
         ).alias("__bloom")
     )
-
-
-def _km_positions(key: Column | str, num_bits: int, num_hashes: int) -> list[Column]:
-    """Kirsch-Mitzenmacher probe positions: k positions from ONE
-    xxhash64 evaluation, ``pmod(h1 + i*h2, m)`` with h1 = upper 32
-    bits, h2 = lower 32 bits forced odd. Build and probe MUST share
-    this derivation exactly."""
-    c = F.col(key) if isinstance(key, str) else key
-    h = F.xxhash64(c.cast("string"))
-    h1 = F.expr(f"shiftrightunsigned({_c(h)}, 32)")
-    h2 = F.expr(f"CAST({_c(h)} & 4294967295 AS BIGINT) | 1")
-    return [
-        F.pmod(h1 + F.lit(i) * h2, F.lit(num_bits)) for i in range(num_hashes)
-    ]
-
-
-def _word_masks(
-    keys: DataFrame, key: str, num_bits: int, num_hashes: int, hash_fn: str
-) -> DataFrame:
-    if hash_fn == "km":
-        pos_cols = _km_positions(key, num_bits, num_hashes)
-    else:
-        pos_cols = [_bit_pos(key, i, num_bits, hash_fn) for i in range(num_hashes)]
-    positions = keys.select(F.explode(F.array(*pos_cols)).alias("__pos"))
-    return positions.select(
-        (F.col("__pos") / 64).cast("long").alias("__word"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__pos % 64 AS INT))").alias(
-            "__mask"
-        ),
-    ).groupBy("__word").agg(F.expr("bit_or(__mask)").alias("__bits"))
 
 
 def bloom_semi_filter(
@@ -141,7 +130,7 @@ def bloom_semi_filter(
 
     # Build + materialize the dense bitset (bounded <= num_bits/8 B).
     dense = [0] * nwords
-    for r in _word_masks(keys, kk, num_bits, num_hashes, "km").collect():
+    for r in _word_masks(keys, kk, num_bits, num_hashes).collect():
         dense[int(r["__word"])] = int(r["__bits"])
     # Evaluate the array literal ONCE in a 1-row frame and broadcast it.
     # Composed as ONE SQL parse: an inline F.lit(dense) would both pay
@@ -152,21 +141,13 @@ def bloom_semi_filter(
         "SELECT array(" + ",".join(f"{v}L" for v in dense) + ") AS __bloom_arr"
     )
 
-    out = big.crossJoin(broadcast(arr))
-    # Same KM derivation as the build: one xxhash64 per row, projected
-    # once so codegen shares it across the k probes.
-    h = F.xxhash64(F.col(big_key).cast("string"))
-    out = out.withColumn("__bfh1", F.expr(f"shiftrightunsigned({_c(h)}, 32)"))
-    out = out.withColumn(
-        "__bfh2", F.expr(f"CAST({_c(h)} & 4294967295 AS BIGINT) | 1")
-    )
+    # The build's positions over one xxhash64 per row, its halves
+    # projected once so codegen shares them across the k probes.
+    h1, h2 = _km_halves(big_key)
+    out = big.crossJoin(broadcast(arr)).withColumn("__bfh1", h1).withColumn("__bfh2", h2)
     cond = F.lit(True)
-    for i in range(num_hashes):
-        pos = F.pmod(F.col("__bfh1") + F.lit(i) * F.col("__bfh2"), F.lit(num_bits))
-        word = (pos / 64).cast("int")
-        mask = F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(__bfh1 + {i} * __bfh2, {num_bits}) % 64 AS INT))"
-        )
+    for pos in _km_positions(F.col("__bfh1"), F.col("__bfh2"), num_bits, num_hashes):
+        word, mask = _word_bit(pos)
         cond = cond & (
             F.element_at(F.col("__bloom_arr"), word + 1).bitwiseAND(mask) != 0
         )

@@ -18,9 +18,9 @@ the INDEX side before the join (the classic skew guard). The match
 count aggregates on the batch id — a second small shuffle bounded by
 the batch size.
 
-The band family is byte-identical to ``operators/minhash.py`` (same
-md5-prefix base hash, same affine permutations), so an index banded
-today matches a batch banded tomorrow.
+Both sides sign and band with ``operators/minhash.py``'s one rule
+(``band_keys`` is re-exported here), so an index banded today matches
+a batch banded tomorrow.
 
 Reference behavioral parity: the reference's dedup is whole-row
 drop_duplicates at load time (src/linkmerce/common/transform.py);
@@ -31,65 +31,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkmerce_spark.operators.minhash import minhash_sigs
+from linkmerce_spark.operators.minhash import _cap_buckets, band_keys, minhash_sigs
 
 __all__ = [
     "band_keys",
     "incremental_near_dups",
 ]
-
-
-def band_keys(
-    signed: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Project a signed frame (``minhash_signature`` output) to its LSH
-    band keys: one row per ``(id, band_id, band_key)``.
-
-    This is the storable index representation — at scale it is written
-    bucketed by ``band_key`` so tomorrow's batch join is co-located.
-    """
-    needed = bands * rows_per_band
-    sig_len = signed.schema["sig"].metadata.get("k") if "sig" in signed.columns else None
-    if sig_len is not None and needed > int(sig_len):
-        raise ValueError(
-            f"bands*rows_per_band = {needed} exceeds signature length {sig_len}"
-        )
-    # Signatures rehydrated from storage may have lost the 'k' column
-    # metadata; guard at runtime then (assert_true fails the job loudly
-    # instead of letting an oversized band config silently hash short/
-    # empty slices into degenerate band keys).
-    sig = (
-        F.col("sig")
-        if sig_len is not None
-        else F.when(
-            F.assert_true(
-                F.size("sig") >= needed,
-                f"bands*rows_per_band = {needed} exceeds signature length",
-            ).isNull(),
-            F.col("sig"),
-        )
-    )
-    entries = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.slice(sig, j * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    "|",
-                )
-            ).alias("band_key"),
-        )
-        for j in range(bands)
-    ]
-    return signed.select(F.col(id_col), F.explode(F.array(*entries)).alias("b")).select(
-        id_col, "b.band_id", "b.band_key"
-    )
 
 
 def incremental_near_dups(
@@ -118,18 +65,15 @@ def incremental_near_dups(
     near-dup detection does not sign it a second time here. The band
     family is identical either way.
     """
-    idx = band_keys(
-        minhash_sigs(index_df, text_col, id_col, k, shingle_words),
-        id_col,
-        bands,
-        rows_per_band,
+    idx = _cap_buckets(
+        band_keys(
+            minhash_sigs(index_df, text_col, id_col, k, shingle_words),
+            id_col,
+            bands,
+            rows_per_band,
+        ),
+        max_bucket,
     )
-    if max_bucket is not None:
-        counts = idx.groupBy("band_id", "band_key").count()
-        idx = idx.join(
-            counts.filter(F.col("count") <= max_bucket).drop("count"),
-            ["band_id", "band_key"],
-        )
     new = band_keys(
         batch_signed.select(F.col(id_col), "sig")
         if batch_signed is not None

@@ -33,10 +33,43 @@ from pyspark.sql import Window
 
 from linkmerce_spark.operators.dedup import dedupe_keep_first
 
-__all__ = ["merge_frames", "merge_deduped", "merge_deduped_tagged", "MATCHED_VERBS"]
+__all__ = [
+    "merge_frames",
+    "merge_deduped",
+    "merge_deduped_tagged",
+    "merge_verbs",
+    "MATCHED_VERBS",
+]
 
 MATCHED_VERBS = ("replace", "ignore", "greatest", "least", "source_first", "target_first")
 NOT_MATCHED_VERBS = ("insert_all", "do_nothing")
+
+
+def merge_verbs(
+    data_cols: Sequence[str], matched: Mapping[str, str] | str, not_matched: str
+) -> dict[str, str]:
+    """The matched verb of each data column, after validating both
+    strategies: ``matched`` is ``"replace_all"``, ``"do_nothing"``, one
+    verb for every column, or a per-column verb map (unlisted columns
+    ``ignore``); ``not_matched`` is one of ``NOT_MATCHED_VERBS``. An
+    unknown value raises ``ValueError`` before anything is built or
+    written. The in-engine merge and the warehouse MERGE composer
+    (``sources.jdbc.compose_merge_sql``) both resolve here."""
+    if not_matched not in NOT_MATCHED_VERBS:
+        raise ValueError(
+            f"unknown not_matched {not_matched!r}; expected one of {NOT_MATCHED_VERBS}"
+        )
+    if matched == "replace_all":
+        return {c: "replace" for c in data_cols}
+    if matched == "do_nothing":
+        return {c: "ignore" for c in data_cols}
+    verbs = [matched] if isinstance(matched, str) else list(matched.values())
+    bad = sorted(set(verbs) - set(MATCHED_VERBS))
+    if bad:
+        raise ValueError(f"unknown merge verbs {bad}; expected one of {MATCHED_VERBS}")
+    if isinstance(matched, str):
+        return {c: matched for c in data_cols}
+    return {c: matched.get(c, "ignore") for c in data_cols}
 
 
 def _resolve(verb: str, tgt: Column, src: Column) -> Column:
@@ -51,9 +84,7 @@ def _resolve(verb: str, tgt: Column, src: Column) -> Column:
         return F.least(tgt, src)
     if verb == "source_first":
         return F.coalesce(src, tgt)
-    if verb == "target_first":
-        return F.coalesce(tgt, src)
-    raise ValueError(f"unknown merge verb {verb!r}; expected one of {MATCHED_VERBS}")
+    return F.coalesce(tgt, src)  # target_first: merge_verbs admits no other
 
 
 def _merged_cols(
@@ -71,21 +102,11 @@ def _merged_cols(
     their target value. Substituting a source NULL would make
     'replace'/'replace_all' silently wipe existing data on every
     routine partial-column upsert."""
-    if not_matched not in NOT_MATCHED_VERBS:
-        raise ValueError(
-            f"unknown not_matched {not_matched!r}; expected one of {NOT_MATCHED_VERBS}"
-        )
+    verb_of = merge_verbs(data_cols, matched, not_matched)
     insert_new = not_matched == "insert_all"
     out: list[Column] = []
     for c in data_cols:
-        if matched == "replace_all":
-            verb = "replace"
-        elif matched == "do_nothing":
-            verb = "ignore"
-        elif isinstance(matched, str):
-            verb = matched
-        else:
-            verb = matched.get(c, "ignore")
+        verb = verb_of[c]
         tgt, src = sides(c)
         if src is None:
             verb, src = "ignore", F.lit(None)

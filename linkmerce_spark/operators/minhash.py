@@ -19,15 +19,18 @@ Scale design
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkmerce_spark import memo
 from linkmerce_spark.frames import widen_scan
+from linkmerce_spark.functions.scalar import md5_hash32
 from linkmerce_spark.functions.text import shingles_from_tokens, word_tokens
 
 __all__ = [
     "minhash_signature",
+    "minhash_sigs",
+    "band_keys",
     "lsh_candidate_pairs",
     "minhash_near_dups",
     "simhash32",
@@ -75,7 +78,31 @@ def minhash_perm_consts(k: int) -> list[tuple[int, int]]:
     ]
 
 
-from linkmerce_spark.functions.scalar import md5_hash32 as _hash32  # noqa: E402
+def _permute(h: Column, a: int, b: int) -> Column:
+    """The ``(a, b)`` affine permutation of a 32-bit base hash."""
+    return (h * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)
+
+
+def _signatures(sh: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id_col, sig)`` from a frame carrying ``shingles``.
+
+    Explode + hash-aggregate instead of array_min(transform(...)):
+    higher-order array functions evaluate interpreted, while the
+    exploded shape runs md5 + the k affine mins inside whole-stage
+    codegen with map-side partial aggregation — the same property that
+    keeps the shuffle tiny (one row per doc) at cluster scale.
+    """
+    ex = sh.select(id_col, F.explode("shingles").alias("__s")).withColumn(
+        "__h", md5_hash32(F.col("__s"))
+    )
+    mins = [
+        F.min(_permute(F.col("__h"), a, b)).alias(f"__m{i}")
+        for i, (a, b) in enumerate(minhash_perm_consts(k))
+    ]
+    return ex.groupBy(id_col).agg(*mins).select(
+        F.col(id_col),
+        F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("sig", metadata={"k": k}),
+    )
 
 
 def minhash_signature(
@@ -99,23 +126,7 @@ def minhash_signature(
     # the scan too, and the first of its three consumers materializes it.
     sh = _with_shingles(widen_scan(df), text_col, shingle_words, "shingles")
     sh = memo.checkpoint(sh, eager=False)
-    # Explode + hash-aggregate instead of array_min(transform(...)):
-    # higher-order array functions evaluate interpreted, while the
-    # exploded shape runs md5 + the k affine mins inside whole-stage
-    # codegen with map-side partial aggregation — the same property
-    # that keeps the shuffle tiny (one row per doc) at cluster scale.
-    ex = sh.select(id_col, F.explode("shingles").alias("__s")).withColumn(
-        "__h", _hash32(F.col("__s"))
-    )
-    mins = [
-        F.min((F.col("__h") * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"__m{i}")
-        for i, (a, b) in enumerate(minhash_perm_consts(k))
-    ]
-    sig = ex.groupBy(id_col).agg(*mins).select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("sig", metadata={"k": k}),
-    )
-    return sh.join(sig, id_col)
+    return sh.join(_signatures(sh, id_col, k), id_col)
 
 
 def minhash_sigs(
@@ -135,17 +146,77 @@ def minhash_sigs(
     aggregation); shingle-less docs are absent, as in
     ``minhash_signature``.
     """
-    toks = _with_shingles(widen_scan(df), text_col, shingle_words, "shingles")
-    ex = toks.select(id_col, F.explode("shingles").alias("__s")).withColumn(
-        "__h", _hash32(F.col("__s"))
+    sh = _with_shingles(widen_scan(df), text_col, shingle_words, "shingles")
+    return _signatures(sh, id_col, k)
+
+
+def band_keys(
+    signed: DataFrame,
+    id_col: str = "doc_id",
+    bands: int = 4,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """Project a signed frame (``id_col`` + ``sig``) to its LSH band
+    keys: one row per ``(id, band_id, band_key)``, the key being the
+    md5 of the band's ``|``-joined signature slice.
+
+    This is the storable index representation — at scale it is written
+    bucketed by ``band_key`` so tomorrow's batch join is co-located.
+
+    ``bands * rows_per_band`` must not exceed the signature length: an
+    out-of-range band would slice to an empty array, hash every
+    document to the same constant band key, and detonate the all-pairs
+    explosion banding exists to prevent. The ``k`` metadata the signers
+    attach to ``sig`` is checked up front; a signature rehydrated from
+    storage may have lost it, and then ``assert_true`` fails the job
+    loudly at run time instead.
+    """
+    needed = bands * rows_per_band
+    sig_len = signed.schema["sig"].metadata.get("k") if "sig" in signed.columns else None
+    if sig_len is not None and needed > int(sig_len):
+        raise ValueError(
+            f"bands*rows_per_band = {needed} exceeds signature length {sig_len}"
+        )
+    sig = (
+        F.col("sig")
+        if sig_len is not None
+        else F.when(
+            F.assert_true(
+                F.size("sig") >= needed,
+                f"bands*rows_per_band = {needed} exceeds signature length",
+            ).isNull(),
+            F.col("sig"),
+        )
     )
-    mins = [
-        F.min((F.col("__h") * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"__m{i}")
-        for i, (a, b) in enumerate(minhash_perm_consts(k))
+    entries = [
+        F.struct(
+            F.lit(j).alias("band_id"),
+            F.md5(
+                F.array_join(
+                    F.transform(
+                        F.slice(sig, j * rows_per_band + 1, rows_per_band),
+                        lambda x: x.cast("string"),
+                    ),
+                    "|",
+                )
+            ).alias("band_key"),
+        )
+        for j in range(bands)
     ]
-    return ex.groupBy(id_col).agg(*mins).select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{i}") for i in range(k)]).alias("sig", metadata={"k": k}),
+    return signed.select(F.col(id_col), F.explode(F.array(*entries)).alias("b")).select(
+        id_col, "b.band_id", "b.band_key"
+    )
+
+
+def _cap_buckets(banded: DataFrame, max_bucket: int | None) -> DataFrame:
+    """Drop the ``(band_id, band_key)`` buckets holding more than
+    ``max_bucket`` rows: the skew guard for boilerplate clusters."""
+    if max_bucket is None:
+        return banded
+    counts = banded.groupBy("band_id", "band_key").count()
+    return banded.join(
+        counts.filter(F.col("count") <= max_bucket).drop("count"),
+        ["band_id", "band_key"],
     )
 
 
@@ -160,50 +231,15 @@ def lsh_candidate_pairs(
 
     One shuffle on the band key. ``max_bucket`` drops buckets larger
     than the cap before the self-join — the skew guard for boilerplate
-    clusters (a 1M-doc bucket would otherwise emit 5*10^11 pairs).
-
-    ``bands * rows_per_band`` must not exceed the signature length:
-    an out-of-range band would slice to an empty array, hash every
-    document to the same constant band key, and detonate the exact
-    all-pairs explosion this function exists to prevent — so it is
-    validated against the signature column's array length up front.
+    clusters (a 1M-doc bucket would otherwise emit 5*10^11 pairs). The
+    band configuration is validated by ``band_keys``.
     """
-    sig_len = signed.schema["sig"].metadata.get("k") if "sig" in signed.columns else None
-    if sig_len is not None and bands * rows_per_band > int(sig_len):
-        raise ValueError(
-            f"bands*rows_per_band = {bands * rows_per_band} exceeds "
-            f"signature length {sig_len}"
-        )
-    band_entries = []
-    for j in range(bands):
-        band_entries.append(
-            F.struct(
-                F.lit(j).alias("band_id"),
-                F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.slice("sig", j * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                        "|",
-                    )
-                ).alias("band_key"),
-            )
-        )
-    banded = signed.select(
-        F.col(id_col), F.explode(F.array(*band_entries)).alias("b")
-    ).select(id_col, "b.band_id", "b.band_key")
     # The bucket self-join consumes `banded` twice; the lazy checkpoint
     # runs the signature lineage (k hash mins per shingle) once, not once
     # per branch. The banded projection is tiny (id + 2 keys) regardless
     # of corpus size, so this is safe at scale.
-    banded = memo.checkpoint(banded, eager=False)
-    if max_bucket is not None:
-        counts = banded.groupBy("band_id", "band_key").count()
-        banded = banded.join(
-            counts.filter(F.col("count") <= max_bucket).drop("count"),
-            ["band_id", "band_key"],
-        )
+    banded = memo.checkpoint(band_keys(signed, id_col, bands, rows_per_band), eager=False)
+    banded = _cap_buckets(banded, max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (
@@ -217,6 +253,23 @@ def lsh_candidate_pairs(
         .distinct()
     )
     return pairs
+
+
+def _jaccard_verified(pairs: DataFrame, keep: list[str], min_jaccard: float) -> DataFrame:
+    """``keep`` + ``jaccard`` of the shingle sets ``sh_a`` and ``sh_b``
+    (intersect / (|a|+|b|-intersect)), at least ``min_jaccard``."""
+    out = (
+        pairs.withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.col("inter").cast("double")
+            / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
+        )
+        .select(*keep, "jaccard")
+    )
+    if min_jaccard > 0:
+        out = out.filter(F.col("jaccard") >= min_jaccard)
+    return out
 
 
 def minhash_near_dups(
@@ -251,20 +304,10 @@ def minhash_near_dups(
     )
     pairs = lsh_candidate_pairs(signed, id_col, bands, rows_per_band, max_bucket)
     sh = signed.select(F.col(id_col), "shingles")
-    verified = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-    if min_jaccard > 0:
-        verified = verified.filter(F.col("jaccard") >= min_jaccard)
-    return verified
+    pairs = pairs.join(
+        sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a"), "id_a"
+    ).join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b"), "id_b")
+    return _jaccard_verified(pairs, ["id_a", "id_b"], min_jaccard)
 
 
 def simhash32(df: DataFrame, text_col: str = "text", out: str = "simhash") -> DataFrame:
@@ -326,17 +369,6 @@ def jaccard_pairs(
         if dedup_symmetric
         else (F.col("id_a") != F.col("id_b"))
     )
-    out = (
-        p.join(c, join_on)
-        .filter(pair_cond)
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-        )
-        .select(*join_on, "id_a", "id_b", "jaccard")
+    return _jaccard_verified(
+        p.join(c, join_on).filter(pair_cond), [*join_on, "id_a", "id_b"], min_jaccard
     )
-    if min_jaccard > 0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out

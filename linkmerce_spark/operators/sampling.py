@@ -22,6 +22,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from linkmerce_spark.functions.scalar import md5_hash32
+
 __all__ = [
     "hash_bucket",
     "stable_sample",
@@ -40,8 +42,8 @@ def hash_bucket(key: Column | str, buckets: int = _BUCKETS, salt: str = "") -> C
     key (e.g. a 10% debug sample independent of the train/test split).
     """
     c = F.col(key) if isinstance(key, str) else key
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(salt), c.cast("string"))), 1, 8), 16, 10)
-    return F.pmod(h.cast("bigint"), F.lit(buckets)).cast("int")
+    h = md5_hash32(F.concat(F.lit(salt), c.cast("string")))
+    return F.pmod(h, F.lit(buckets)).cast("int")
 
 
 def stable_sample(
@@ -122,9 +124,7 @@ def priority_sample(
     """
     w = (F.col(weight) if isinstance(weight, str) else weight).cast("double")
     k = F.col(key) if isinstance(key, str) else key
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), k.cast("string"))), 1, 8), 16, 10
-    ).cast("bigint")
+    h = md5_hash32(F.concat(F.lit(salt), k.cast("string")))
     q = (w * F.lit(4294967296.0)) / (h + F.lit(1)).cast("double")
     top = df.withColumn(out_priority, q).orderBy(
         F.col(out_priority).desc(), k.cast("string").asc()

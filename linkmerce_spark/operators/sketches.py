@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkmerce_spark.frames import from_rows
+from linkmerce_spark.functions.scalar import md5_hash32
 
 __all__ = [
     "cms_hash",
@@ -46,12 +47,8 @@ def cms_hash(key: Column | str, row: int, width: int) -> Column:
     row-salted key, first 8 hex chars mod width (same construction both
     engines evaluate identically; mirrors sampling.hash_bucket)."""
     c = F.col(key) if isinstance(key, str) else key
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"cms{row}|"), c.cast("string"))), 1, 8),
-        16,
-        10,
-    )
-    return F.pmod(h.cast("bigint"), F.lit(width)).cast("int")
+    h = md5_hash32(F.concat(F.lit(f"cms{row}|"), c.cast("string")))
+    return F.pmod(h, F.lit(width)).cast("int")
 
 
 def cms_counters(
@@ -256,9 +253,7 @@ def kmv_hash(key: Column | str, salt: str = "kmv") -> Column:
     """32-bit md5 hash of the (salted) key — same portable idiom as
     ``cms_hash``/``sampling.hash_bucket``."""
     c = F.col(key) if isinstance(key, str) else key
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), c.cast("string"))), 1, 8), 16, 10
-    ).cast("bigint")
+    return md5_hash32(F.concat(F.lit(salt), c.cast("string")))
 
 
 def kmv_sketch(

@@ -601,10 +601,12 @@ def _shingle_sql(n: int) -> str:
     )
 
 
-from linkmerce_spark.operators.minhash import _MINHASH_P, minhash_perm_consts
+from linkmerce_spark.operators.minhash import minhash_perm_consts
 
+# The permutation modulus, stated here rather than read from the
+# operator so the twin pins it.
 _SIG16 = ", ".join(
-    f"list_min(list_transform(hs, h -> (h * {a} + {b}) % {_MINHASH_P}))"
+    f"list_min(list_transform(hs, h -> (h * {a} + {b}) % 4294967311))"
     for a, b in minhash_perm_consts(16)
 )
 

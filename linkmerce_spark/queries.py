@@ -45,6 +45,7 @@ from linkmerce_spark.functions.scalar import (
     date_spine,
     enum_code,
     int_div,
+    md5_hash32,
     money,
     safe_float,
     safe_int,
@@ -5209,14 +5210,13 @@ def _core_product_master_built(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream mart in the reference dag selects from the built
     core__product_master table — it never re-runs the upstream SQL.
     Consumers use this; ``q_core_product_master`` (the verifier for
-    the mart itself) still builds fresh."""
+    the mart itself) builds fresh."""
     from linkmerce_spark.frames import shared_frame
-    from linkmerce_spark.marts.core_masters import product_master
 
     return shared_frame(
         spark,
         ("core_product_master", sf_dir.rstrip("/")),
-        lambda: product_master(_core_item_feed(spark, sf_dir)),
+        lambda: q_core_product_master(spark, sf_dir),
     )
 
 
@@ -5224,41 +5224,32 @@ def _core_brand_master_built(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATERIALIZED core brand master (dbt-``ref()`` semantics, see
     ``_core_product_master_built``)."""
     from linkmerce_spark.frames import shared_frame
-    from linkmerce_spark.marts.core_masters import brand_master
 
     return shared_frame(
         spark,
         ("core_brand_master", sf_dir.rstrip("/")),
-        lambda: brand_master(_core_item_feed(spark, sf_dir)),
+        lambda: q_core_brand_master(spark, sf_dir),
     )
 
 
 def q_core_product_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     """core__product_master (marts/core_masters): DISTINCT ON
     (product_id) by item_seq ASC NULLS LAST over the raw item catalog
-    (dbt core__product_master.sql:10-31). Re-runs the mart SQL and
-    PUBLISHES the build for downstream ``ref()`` consumers."""
+    (dbt core__product_master.sql:10-31). Re-runs the mart SQL;
+    downstream ``ref()`` consumers read ``_core_product_master_built``."""
     from linkmerce_spark.marts.core_masters import product_master
 
-    return memo.publish(
-        spark,
-        ("core_product_master", sf_dir.rstrip("/")),
-        product_master(_core_item_feed(spark, sf_dir)),
-    )
+    return product_master(_core_item_feed(spark, sf_dir))
 
 
 def q_core_brand_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     """core__brand_master (marts/core_masters): '2'-prefixed branded
     rows, global brand_seq (team DESC NULLS LAST), one row per product
     AND per brand (dbt core__brand_master.sql:10-34). Re-runs the mart
-    SQL and PUBLISHES the build for downstream ``ref()`` consumers."""
+    SQL; downstream ``ref()`` consumers read ``_core_brand_master_built``."""
     from linkmerce_spark.marts.core_masters import brand_master
 
-    return memo.publish(
-        spark,
-        ("core_brand_master", sf_dir.rstrip("/")),
-        brand_master(_core_item_feed(spark, sf_dir)),
-    )
+    return brand_master(_core_item_feed(spark, sf_dir))
 
 
 def _cj_feeds(spark: SparkSession, sf_dir: str):
@@ -5978,22 +5969,17 @@ def q_sabangnet_product_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT ON over the bundle explode, POWER(10)-scaled composed
     sort key, '대표' promotion, brand-master seq fallback — REUSES
     the core product/brand masters (dbt sabangnet__product_master.sql:
-    10-108). Re-runs the mart SQL and PUBLISHES the build: the
-    reference dag materializes this model once and
-    sabangnet__option_master selects FROM the built table."""
+    10-108). Re-runs the mart SQL; the reference dag materializes this
+    model once and sabangnet__option_master selects FROM the built
+    table (``_sbn_product_master_built``)."""
     from linkmerce_spark.marts.product import sabangnet_product_master
 
-    item = _core_item_feed(spark, sf_dir)
-    return memo.publish(
-        spark,
-        ("sabangnet_product_master", sf_dir.rstrip("/")),
-        sabangnet_product_master(
-            _sbn_product_feed(spark, sf_dir),
-            _sbn_option_feed(spark, sf_dir),
-            item,
-            _core_product_master_built(spark, sf_dir),
-            _core_brand_master_built(spark, sf_dir),
-        ),
+    return sabangnet_product_master(
+        _sbn_product_feed(spark, sf_dir),
+        _sbn_option_feed(spark, sf_dir),
+        _core_item_feed(spark, sf_dir),
+        _core_product_master_built(spark, sf_dir),
+        _core_brand_master_built(spark, sf_dir),
     )
 
 
@@ -6001,10 +5987,10 @@ def _sbn_product_master_built(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATERIALIZED sabangnet product master: in the reference dag
     sabangnet__option_master selects FROM the built
     sabangnet__product_master (a dbt ``ref()``), it never re-runs the
-    explode/window chain (dbt sabangnet__option_master.sql:10-100).
-    ``q_sabangnet_product_master`` publishes its own build, so this only
-    memoizes the call (``shared_frame`` would checkpoint it twice)."""
-    return memo.derived(
+    explode/window chain (dbt sabangnet__option_master.sql:10-100)."""
+    from linkmerce_spark.frames import shared_frame
+
+    return shared_frame(
         spark,
         ("sabangnet_product_master", sf_dir.rstrip("/")),
         lambda: q_sabangnet_product_master(spark, sf_dir),
@@ -7049,9 +7035,9 @@ def q_hll_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine, so the hashed output cannot drift across libm builds.
     """
     (orders,) = _t(spark, sf_dir, "orders")
-    h = F.md5(F.col("o_custkey").cast("string"))
-    bucket = F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"), F.lit(_HLL_M))
-    rho = _hll_rho(F.substring(h, 9, 8))
+    key = F.col("o_custkey").cast("string")
+    bucket = F.pmod(md5_hash32(key), F.lit(_HLL_M))
+    rho = _hll_rho(F.substring(F.md5(key), 9, 8))
     regs = (
         orders.select(bucket.alias("bucket"), rho.alias("rho"))
         .groupBy("bucket")

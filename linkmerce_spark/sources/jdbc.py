@@ -26,14 +26,14 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 
+from linkmerce_spark.operators.merge import merge_verbs
+
 __all__ = [
     "compose_merge_sql",
     "compose_overwrite_where_sql",
     "run_jdbc_script",
     "stage_and_script",
 ]
-
-_VERBS = {"replace", "ignore", "greatest", "least", "source_first", "target_first"}
 
 
 def _set_expr(col: str, verb: str) -> str | None:
@@ -48,9 +48,7 @@ def _set_expr(col: str, verb: str) -> str | None:
         return f"{col} = LEAST({t}, {s})"
     if verb == "source_first":
         return f"{col} = COALESCE({s}, {t})"
-    if verb == "target_first":
-        return f"{col} = COALESCE({t}, {s})"
-    raise ValueError(f"unknown merge verb: {verb}")
+    return f"{col} = COALESCE({t}, {s})"  # target_first: merge_verbs admits no other
 
 
 def compose_merge_sql(
@@ -67,22 +65,8 @@ def compose_merge_sql(
     Postgres 15+ / BigQuery / Delta SQL alike).
     """
     data_cols = [c for c in columns if c not in keys]
+    verb_of = merge_verbs(data_cols, matched, not_matched)
     on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-
-    if matched == "replace_all":
-        verb_of: Mapping[str, str] = {c: "replace" for c in data_cols}
-    elif matched == "do_nothing":
-        verb_of = {c: "ignore" for c in data_cols}
-    elif isinstance(matched, str):
-        if matched not in _VERBS:
-            raise ValueError(f"unknown matched strategy: {matched}")
-        verb_of = {c: matched for c in data_cols}
-    else:
-        bad = set(matched.values()) - _VERBS
-        if bad:
-            raise ValueError(f"unknown merge verbs: {sorted(bad)}")
-        verb_of = {c: matched.get(c, "ignore") for c in data_cols}
-
     sets = [e for c in data_cols if (e := _set_expr(c, verb_of[c]))]
     lines = [f"MERGE INTO {target} AS t", f"USING {staging} AS s", f"ON {on}"]
     if sets:
@@ -91,8 +75,6 @@ def compose_merge_sql(
         cols = ", ".join(columns)
         vals = ", ".join(f"s.{c}" for c in columns)
         lines.append(f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})")
-    elif not_matched != "do_nothing":
-        raise ValueError(f"unknown not_matched strategy: {not_matched}")
     return "\n".join(lines)
 
 

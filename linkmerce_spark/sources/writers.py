@@ -32,7 +32,7 @@ from pyspark.errors import AnalysisException
 
 from linkmerce_spark import memo
 from linkmerce_spark.operators.dedup import dedupe_keep_first
-from linkmerce_spark.operators.merge import merge_frames
+from linkmerce_spark.operators.merge import merge_frames, merge_verbs
 
 __all__ = ["write_append", "write_overwrite_where", "write_merge", "write_bucketed", "compact", "write_in_date_batches", "validate_partitions"]
 
@@ -133,8 +133,11 @@ def write_merge(
     Without a transactional format the rewrite is full-table; on a real
     lake deployment the target would be Delta/Iceberg and this becomes
     ``MERGE INTO`` with file-level pruning. The operator semantics
-    (column verb vocabulary) are identical either way.
+    (column verb vocabulary) are identical either way. An unknown
+    ``matched`` or ``not_matched`` raises before anything is written,
+    the first write included.
     """
+    merge_verbs((), matched, not_matched)  # validates; the verbs resolve in merge_frames
     spark = df.sparkSession
     try:
         target = spark.read.parquet(path)

@@ -13,8 +13,9 @@ Two design constraints shape the implementation:
    append-mode streams cannot plan that, so the streaming path
    computes the identical signature as a PER-ROW expression —
    ``array_min(transform(shingles, ...))`` over the same md5-prefix
-   base hash and affine permutation family. Same constants, same
-   values (pinned by the batch-equivalence test), different plan.
+   base hash and affine permutation — and bands it with the batch
+   ``band_keys``. Same rules, same values (pinned by the
+   batch-equivalence test), different plan.
 2. **State is keyed on the band, not the document.** Each
    ``(band_id, band_key)`` group holds ONE long — the doc_id that
    first claimed the band — so state size is bounded by the number of
@@ -40,8 +41,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from linkmerce_spark.functions.scalar import md5_hash32
 from linkmerce_spark.functions.text import shingles_from_tokens, word_tokens
-from linkmerce_spark.operators.minhash import _MINHASH_P, _hash32, minhash_perm_consts
+from linkmerce_spark.operators.minhash import _permute, band_keys, minhash_perm_consts
 
 __all__ = ["band_keys_rowwise", "streaming_incremental_dedup"]
 
@@ -57,56 +59,30 @@ def band_keys_rowwise(
 ) -> DataFrame:
     """LSH band keys as pure per-row expressions (streaming-safe).
 
-    Value-identical to ``operators/incdedup.band_keys`` over
-    ``minhash_sigs`` — same base hash, same permutations, same band
-    digest — but with the per-doc min computed by ``array_min`` inside
-    the row instead of a hash aggregation, so the plan contains no
-    shuffle and is legal in an append-mode stream. Docs too short to
-    shingle are dropped (as in the batch path).
+    Value-identical to ``band_keys`` over ``minhash_sigs`` — same base
+    hash, same permutations, and ``band_keys`` itself digests the bands
+    — but with the per-doc min computed by ``array_min`` inside the row
+    instead of a hash aggregation, so the plan contains no shuffle and
+    is legal in an append-mode stream. Docs too short to shingle are
+    dropped (as in the batch path).
     """
-    if bands * rows_per_band > k:
-        raise ValueError(
-            f"bands*rows_per_band = {bands * rows_per_band} exceeds signature length {k}"
-        )
-    toks = word_tokens(text_col)
-    sh = F.array_distinct(shingles_from_tokens(F.col("__toks"), shingle_words))
-    consts = minhash_perm_consts(k)
 
     def _perm_min(a: int, b: int):
         # PySpark derives the lambda's arity from its Python signature,
         # so the permutation constants must be captured by closure, not
         # default args (a 3-param lambda would be rejected by transform).
         return F.array_min(
-            F.transform(
-                F.col("__sh"),
-                lambda s: (_hash32(s) * F.lit(a) + F.lit(b)) % F.lit(_MINHASH_P),
-            )
+            F.transform(F.col("__sh"), lambda s: _permute(md5_hash32(s), a, b))
         )
 
-    sig = F.array(*[_perm_min(a, b) for a, b in consts])
-    entries = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.slice("__sig", j * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    "|",
-                )
-            ).alias("band_key"),
-        )
-        for j in range(bands)
-    ]
-    return (
-        df.withColumn("__toks", toks)
+    sig = F.array(*[_perm_min(a, b) for a, b in minhash_perm_consts(k)])
+    signed = (
+        df.withColumn("__toks", word_tokens(text_col))
         .filter(F.size("__toks") >= shingle_words)
-        .withColumn("__sh", sh)
-        .withColumn("__sig", sig)
-        .select(F.col(id_col), F.explode(F.array(*entries)).alias("b"))
-        .select(id_col, "b.band_id", "b.band_key")
+        .withColumn("__sh", F.array_distinct(shingles_from_tokens(F.col("__toks"), shingle_words)))
+        .select(F.col(id_col), sig.alias("sig", metadata={"k": k}))
     )
+    return band_keys(signed, id_col, bands, rows_per_band)
 
 
 def streaming_incremental_dedup(

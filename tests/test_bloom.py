@@ -41,6 +41,39 @@ class TestBloomSemiFilter:
         assert len(rows) == 1
         assert len(rows[0]["__bloom"]) <= (1 << 12) // 64
 
+    def test_bitset_is_the_probed_bitset(self, spark):
+        """``bloom_bitset`` sets the bits ``bloom_semi_filter`` builds and
+        probes: its word masks equal a Kirsch-Mitzenmacher build over
+        each key's xxhash64, and the filter keeps exactly the candidates
+        whose positions are all set in those masks."""
+        num_bits, k = 1 << 12, 3
+        keys = spark.range(0, 200).select((F.col("id") * 13).alias("k"))
+        cands = spark.range(0, 3000).select(F.col("id").alias("k"))
+
+        def hashes(df):
+            h = F.xxhash64(F.col("k").cast("string"))
+            return {r.k: r.h for r in df.select("k", h.alias("h")).collect()}
+
+        def positions(h):
+            u = h & (2**64 - 1)
+            h1, h2 = u >> 32, (u & (2**32 - 1)) | 1
+            return [(h1 + i * h2) % num_bits for i in range(k)]
+
+        dense: dict[int, int] = {}
+        for h in hashes(keys).values():
+            for p in positions(h):
+                dense[p // 64] = dense.get(p // 64, 0) | 1 << (p % 64)
+        bits = bloom_bitset(keys, "k", num_bits=num_bits, num_hashes=k).first()["__bloom"]
+        assert {w: m & (2**64 - 1) for w, m in bits.items()} == dense
+
+        kept = bloom_semi_filter(cands, keys, "k", num_bits=num_bits, num_hashes=k)
+        expect = {
+            c
+            for c, h in hashes(cands).items()
+            if all(dense.get(p // 64, 0) >> (p % 64) & 1 for p in positions(h))
+        }
+        assert {r.k for r in kept.collect()} == expect
+
     def test_fact_side_not_shuffled(self, spark):
         big = spark.range(0, 1000).select(F.col("id").alias("k"))
         keys = spark.range(0, 100).select(F.col("id").alias("k"))

@@ -74,6 +74,15 @@ def test_clear_releases_published_masters(spark, monkeypatch):
     memo.clear(s)
 
 
+def test_catalog_queries_return_their_builds():
+    """A catalog query returns its build, so its plan (and every plan
+    fingerprint) shows the mart's body; ``frames.shared_frame`` is the
+    one place a mart is published for its consumers."""
+    assert "memo.publish(" not in (REPO / "linkmerce_spark" / "queries.py").read_text(
+        encoding="utf-8"
+    )
+
+
 # Queries whose builds left RDDs persisted after ``memo.clear`` while
 # checkpoints were taken outside the registry, plus minhash's lazy
 # checkpoints.

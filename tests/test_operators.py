@@ -475,6 +475,36 @@ def test_lsh_rejects_bands_exceeding_signature(spark):
         lsh_candidate_pairs(signed, bands=8, rows_per_band=4)
 
 
+def test_lsh_guards_bands_without_signature_metadata(spark):
+    """A signature that lost its ``k`` metadata (rehydrated from storage)
+    must fail loudly on a band config longer than the signature, not
+    pair every document through the empty last slice's one band key."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from linkmerce_spark.operators.minhash import (
+        lsh_candidate_pairs,
+        minhash_signature,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon"),
+            (2, "red green blue cyan magenta"),
+            (3, "north south east west center"),
+        ],
+        "doc_id long, text string",
+    )
+    signed = minhash_signature(df, "text", "doc_id", k=16, shingle_words=2)
+    stripped = signed.select(
+        "doc_id", F.array([F.col("sig")[i] for i in range(16)]).alias("sig")
+    )
+    assert stripped.schema["sig"].metadata.get("k") is None
+    assert lsh_candidate_pairs(stripped).collect() == []
+    with _pytest.raises(Exception, match="exceeds signature length"):
+        lsh_candidate_pairs(stripped, bands=5, rows_per_band=4).collect()
+
+
 def test_cell_pair_cosines_matches_join_form(spark):
     from pyspark.sql import functions as F
 

@@ -3,6 +3,8 @@
 - The ISO-8601 parse, the word n-gram hash and the map literal live
   in ``functions/`` only, no model builds its own CASE-chain enum
   encoder, and no mart joins a ``values_df`` vocabulary.
+- The md5 32-bit prefix hash, the MinHash permutation, the LSH band
+  digest and the bloom probe positions each have one home.
 - Every vocabulary a model passes to ``functions.scalar.enum_code``
   encodes as the CASE chain it replaced (kept here as the reference).
 - Every mart vocabulary looks up through ``functions.scalar.lookup``
@@ -46,6 +48,20 @@ def test_iso_parse_gram_hash_and_enum_encoders_have_one_home():
     assert not _hits(r"\bfor\b[^\n]*\bin\s+reversed\(", sorted((LIB / "models").rglob("*.py")))
     assert not _hits(r"\bvalues_df\(", sorted((LIB / "marts").rglob("*.py")))
     assert not _hits(r"\bcreate_map\(", outside)
+
+
+def test_hash_rules_have_one_home():
+    """The md5 32-bit prefix hash lives in ``functions/``; the MinHash
+    permutation modulus and the LSH band digest in
+    ``operators/minhash.py``; the bloom filter has one position scheme."""
+    lib = sorted(LIB.rglob("*.py"))
+    outside = [p for p in lib if "functions" not in p.relative_to(LIB).parts]
+    # an 8-hex-char prefix read as an integer: md5_hash32's body
+    assert not _hits(r",1,8\),16,10\)", outside, flatten=True)
+    not_minhash = [p for p in lib if p != LIB / "operators" / "minhash.py"]
+    assert not _hits(r"\.alias\(\"band_key\"\)", not_minhash, flatten=True)
+    assert not _hits(r"_MINHASH_P", not_minhash)
+    assert not _hits(r"\bhash_fn\b", [LIB / "operators" / "bloom.py"])
 
 
 # --- enum_code vs the CASE chain ----------------------------------------

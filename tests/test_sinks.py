@@ -81,6 +81,19 @@ def test_write_merge_first_write_do_nothing_inserts_nothing(spark, tmp_path, par
     ]
 
 
+@pytest.mark.parametrize(
+    "strategy", [{"not_matched": "bogus"}, {"matched": "bogus"}, {"matched": {"v": "sum"}}]
+)
+def test_write_merge_rejects_unknown_strategy_before_first_write(spark, tmp_path, strategy):
+    """An unknown strategy raises before the first write, which would
+    otherwise append the batch to a target that does not exist yet."""
+    path = tmp_path / "t"
+    src = spark.createDataFrame([(1, "a")], "k int, v string")
+    with pytest.raises(ValueError, match="unknown"):
+        write_merge(src, str(path), keys=["k"], **strategy)
+    assert not path.exists()
+
+
 def test_write_merge_propagates_non_missing_read_errors(spark, tmp_path):
     """A corrupt/unreadable target must raise, not silently append.
 
